@@ -163,9 +163,9 @@ def bench_names(all_queries) -> list[str]:
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from tf_idf_using_mapreduce_spark.session import get_spark, spark_cpus
 
-    from tf_idf_using_mapreduce_spark.session import get_spark
+    cpus = spark_cpus()
     import __spark_entry__ as entrymod
 
     spark = get_spark("bench")

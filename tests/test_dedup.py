@@ -98,23 +98,42 @@ def test_dedup_clusters_canonical_is_min_member(spark):
         assert len(canon) == 1 and canon[0]["doc_id"] == cid
 
 
-def test_connected_components_twostar_matches_propagation(spark):
-    """Large-star/small-star and min-label propagation must produce the
-    identical labeling: a long path (diameter 9 — the regime two-star is
-    built for), a star, and singleton-adjacent pairs."""
-    from tf_idf_using_mapreduce_spark.operators.dedup import (
-        connected_components,
-        connected_components_twostar,
-    )
+def test_connected_components_local_finish_matches_twostar(spark):
+    """The local union-find finish (default bound) and star rounds alone
+    (``local_edges=0``) must produce the identical labeling: a long path
+    (diameter 9 — the regime star rounds are built for), a star, and
+    singleton-adjacent pairs."""
+    from tf_idf_using_mapreduce_spark.operators.dedup import connected_components
 
     path = [(i, i + 1) for i in range(1, 10)]          # 1-2-3-...-10
     star = [(50, x) for x in (51, 52, 53, 54)]          # hub 50
     extra = [(70, 71), (80, 81), (81, 82)]
     edges = spark.createDataFrame(path + star + extra, "doc_a long, doc_b long")
-    a = {r["doc_id"]: r["cluster_id"] for r in connected_components(edges).collect()}
-    b = {r["doc_id"]: r["cluster_id"] for r in connected_components_twostar(edges).collect()}
+    local, rounds = {}, {}
+    a = {r["doc_id"]: r["cluster_id"] for r in
+         connected_components(edges, stats=local).collect()}
+    b = {r["doc_id"]: r["cluster_id"] for r in
+         connected_components(edges, local_edges=0, stats=rounds).collect()}
     assert a == b
     assert b[10] == 1 and b[54] == 50 and b[82] == 80
+    # the default bound finishes before any round; bound 0 runs rounds only
+    assert local["rounds"] == 0 and rounds["rounds"] > 0
+
+
+def test_connected_components_rounds_then_local_finish(spark):
+    """A graph above the bound runs star rounds until the edge count fits,
+    then finishes locally: K5 plus one pair (11 edges) collapses to a 4-edge
+    star plus the pair after one probe, which a bound of 5 takes — the
+    fixpoint path would need a second probe to see the stars repeat."""
+    from tf_idf_using_mapreduce_spark.operators.dedup import connected_components
+
+    k5 = [(a, b) for a in range(1, 6) for b in range(a + 1, 6)]
+    edges = spark.createDataFrame(k5 + [(8, 9)], "doc_a long, doc_b long")
+    stats = {}
+    got = {r["doc_id"]: r["cluster_id"] for r in
+           connected_components(edges, local_edges=5, stats=stats).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 8: 8, 9: 8}
+    assert stats["rounds"] == 2
 
 
 def test_connected_components_twostar_round_bound(spark):
@@ -136,8 +155,8 @@ def test_dedup_clusters_twostar_oracle_parity(spark):
 
 def test_connected_components_warns_on_cap_exhaustion(spark):
     """Hitting the iteration cap must be LOUD (silent non-convergence would
-    over/under-delete in dedup), while still returning a valid coarser
-    labeling."""
+    over/under-delete in dedup), while still returning a labeling that only
+    ever points a node at a smaller member of its component."""
     import warnings as _w
     from tf_idf_using_mapreduce_spark.operators.dedup import (
         connected_components,
@@ -149,27 +168,14 @@ def test_connected_components_warns_on_cap_exhaustion(spark):
     )
     with _w.catch_warnings(record=True) as rec:
         _w.simplefilter("always")
-        got = {r["doc_id"]: r["cluster_id"]
-               for r in connected_components(edges, max_iters=2).collect()}
+        got = {r["doc_id"]: r["cluster_id"] for r in
+               connected_components(edges, max_iters=1, local_edges=0).collect()}
     assert any("round cap" in str(w.message) for w in rec)
-    # still a valid partial labeling: labels only move toward minima
     assert all(cid <= d for d, cid in got.items())
     with _w.catch_warnings(record=True) as rec2:
         _w.simplefilter("always")
         connected_components_twostar(edges, max_iters=1).collect()
     assert any("round cap" in str(w.message) for w in rec2)
-
-
-def test_clusters_unified_entry_point(spark):
-    """clusters() is the single CC entry point: both algorithms produce the
-    identical labeling on the fixture graph, the default is the log-bound
-    two-star form, and an unknown algorithm fails loudly."""
-    default = sorted(map(tuple, dedup.clusters(spark, SF_SMOKE).collect()))
-    two = sorted(map(tuple, dedup.clusters(spark, SF_SMOKE, algorithm="twostar").collect()))
-    lab = sorted(map(tuple, dedup.clusters(spark, SF_SMOKE, algorithm="labelprop").collect()))
-    assert default == two == lab and default
-    with pytest.raises(ValueError, match="unknown clustering algorithm"):
-        dedup.clusters(spark, SF_SMOKE, algorithm="galactic")
 
 
 def test_dedup_incremental_oracle_parity(spark):

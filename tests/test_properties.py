@@ -67,13 +67,19 @@ def test_topk_is_prefix_of_full_ranking(spark):
     )
 )
 def test_connected_components_matches_union_find(edge_list):
-    """Iterative min-label propagation == classic union-find on random graphs
-    (hypothesis drives the edge sets; session-scoped spark fetched directly
-    since @given can't take function-args from fixtures)."""
+    """connected_components == classic union-find on random graphs, at the
+    default local-finish bound (no rounds), at bound 0 (star rounds only)
+    and at a small bound (rounds first, then the local finish once few
+    enough edges remain). Hypothesis drives the edge sets; session-scoped
+    spark fetched directly since @given can't take function-args from
+    fixtures."""
     from tf_idf_using_mapreduce_spark.session import get_spark
 
     spark = get_spark("tests", shuffle_partitions=8)
-    from tf_idf_using_mapreduce_spark.operators.dedup import connected_components
+    from tf_idf_using_mapreduce_spark.operators.dedup import (
+        CC_LOCAL_EDGES,
+        connected_components,
+    )
 
     parent: dict[int, int] = {}
 
@@ -98,8 +104,10 @@ def test_connected_components_matches_union_find(edge_list):
     want = {n: min(comp[find(n)]) for n in nodes}
 
     edges = spark.createDataFrame(edge_list, "doc_a long, doc_b long")
-    got = {r["doc_id"]: r["cluster_id"] for r in connected_components(edges).collect()}
-    assert got == want
+    for bound in (CC_LOCAL_EDGES, 0, 3):
+        got = {r["doc_id"]: r["cluster_id"] for r in
+               connected_components(edges, local_edges=bound).collect()}
+        assert got == want, bound
 
 
 @settings(max_examples=80, deadline=None)

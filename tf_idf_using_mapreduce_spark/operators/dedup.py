@@ -1361,125 +1361,112 @@ WHERE {ham} <= {HAMMING_THRESHOLD}
 # --------------------------------------------------------------------------- #
 
 CC_MAX_ITERS = 20
+# Edge count at or below which connected_components stops running
+# distributed rounds and finishes in one task: 2^20 canonical pairs are two
+# 8 MB int64 columns, well inside one Python worker.
+CC_LOCAL_EDGES = 1 << 20
+
+
+def min_root_forest(parent, ia, ib):
+    """Union the index edges ``(ia[k], ib[k])`` into the forest ``parent``
+    and return it fully compressed: every index then points straight at the
+    SMALLEST index of its component. ``parent`` must already point each
+    index at a smaller-or-equal one (``np.arange(n)`` to start, or an
+    earlier result) and may be updated in place.
+
+    Vectorized min-hook/pointer-jump union-find, shared by the cell-local
+    IVF labeling (``similarity._ivf_cell_labels``) and the local finish of
+    :func:`connected_components`: hook every edge's two roots to their
+    minimum (min-index hooking ⇒ the root is the component's smallest
+    index), compress by pointer jumping (p <- p[p] until fixpoint; hooks
+    only ever point to smaller indices, so the map is acyclic), and repeat
+    until every edge is intra-component. All steps are numpy ufuncs over
+    O(edges + nodes) elements, repeated O(log component-size) times — no
+    per-edge interpreted work, which would be ~1.1M Python iterations in ONE
+    task for the skew bench's 1500-member hot cell."""
+    import numpy as np
+
+    while True:
+        while True:
+            nxt = parent[parent]
+            if np.array_equal(nxt, parent):
+                break
+            parent = nxt
+        ra, rb = parent[ia], parent[ib]
+        if (ra == rb).all():
+            return parent
+        m = np.minimum(ra, rb)
+        np.minimum.at(parent, ra, m)
+        np.minimum.at(parent, rb, m)
+
+
+def _local_labels(pdf):
+    """Grouped-map body of the local finish: (doc_id, cluster_id = component
+    min) for every node of the ``(u, v)`` edges in ``pdf``. Nodes are
+    numbered in ascending id order, so the smallest index of a component is
+    its smallest id."""
+    import numpy as np
+    import pandas as pd
+
+    ids, idx = np.unique(
+        np.concatenate([pdf["u"].to_numpy(), pdf["v"].to_numpy()]), return_inverse=True
+    )
+    n = len(pdf)
+    parent = min_root_forest(np.arange(len(ids)), idx[:n], idx[n:])
+    return pd.DataFrame({"doc_id": ids, "cluster_id": ids[parent]})
 
 
 def connected_components(edges: DataFrame, src: str = "doc_a", dst: str = "doc_b",
-                         max_iters: int = CC_MAX_ITERS) -> DataFrame:
+                         max_iters: int = CC_MAX_ITERS, stats: dict | None = None,
+                         local_edges: int = CC_LOCAL_EDGES) -> DataFrame:
     """(doc_id, cluster_id): connected components of the undirected pair
     graph, cluster_id = min member id — the step a production dedup pipeline
     runs AFTER candidate generation (pairs alone over-delete: A~B and B~C
     must collapse to ONE surviving doc even when A~C was never scored).
 
-    Iterative min-label propagation: each node repeatedly takes the min
-    label in its closed neighborhood; converges in O(graph diameter) steps
-    to the unique fixpoint (component minima) — near-dup clusters are small
-    and dense, so diameter is tiny, and the iteration cap is a safety net,
-    asserted in tests. The driver-side loop is COORDINATOR CONTROL (same
-    category as AQE's runtime re-planning), with a single count() per round
-    as the convergence test. At 100 TB this is the standard
-    large-star/small-star regime (Kiveris et al.), which this
-    implementation reduces to for bounded cluster sizes.
+    Distributed rounds only while the graph is large, then one in-memory
+    finish (the round-cost argument of *MapReduce Algorithms for Big Data
+    Analysis*, VLDB'12: pay for a round only while the data cannot be
+    finished in one task):
 
-    r16 job-count shape (guide §5 driver / VERDICT r15 "job-count reduction
-    is the lever"): (a) the label table is SEEDED with each node's
-    closed-neighborhood minimum — ONE aggregation over the edge table that
-    replaces both the former distinct-nodes init and the first round's
-    join+aggregate; (b) each loop round applies TWO propagation steps in
-    one job (the per-round driver round-trip, not the 2|E|-row join, is the
-    cost at every fixture scale). The fixpoint is unique, so labels are
-    identical; convergence is tested on the SECOND sub-step alone — labels
-    are monotone non-increasing, so "step 2 changed nothing" ⟺ the table is
-    at the fixpoint regardless of what step 1 did. ``max_iters`` therefore
-    caps double-step rounds (the cap-exhaustion warning semantics below are
-    unchanged: hitting it still means an incompletely-merged labeling)."""
-    # materialize the (small) edge set once: every round joins against it,
-    # and without the cut each iteration would recompute the edge-producing
-    # pipeline (for dedup_clusters: the entire minhash-LSH run) from scratch
-    both = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionByName(
-        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-    ).localCheckpoint(eager=False)
-    labels = (
-        both.groupBy(F.col("a").alias("doc_id"))
-        .agg(F.min("b").alias("mb"))
-        .select("doc_id", F.least(F.col("doc_id"), F.col("mb")).alias("cluster_id"))
-        .localCheckpoint(eager=False)
-    )
+    - ROUNDS: alternating large-star / small-star (Kiveris et al.,
+      "Connected Components in MapReduce and Beyond", SoCC'14 — public
+      algorithm). O(log n) rounds in the component SIZE, not the diameter,
+      so a 100 TB web-crawl graph with long path-shaped near-dup chains
+      converges in ~log rounds where plain label propagation needs diameter
+      rounds. Each round preserves every component and its minimum; the
+      edge count shrinks monotonically toward the star forest.
 
-    def _propagate(lbl: DataFrame) -> DataFrame:
-        nbr = (
-            both.join(lbl.withColumnRenamed("doc_id", "b"), "b")
-            .groupBy(F.col("a").alias("doc_id"))
-            .agg(F.min("cluster_id").alias("nbr_min"))
-        )
-        return lbl.join(nbr, "doc_id", "left").select(
-            "doc_id",
-            F.least(F.col("cluster_id"), F.coalesce("nbr_min", "cluster_id")).alias("cluster_id"),
-            (F.col("nbr_min") < F.col("cluster_id")).alias("changed"),
-        )
+      - large-star(u): m = min(Γ(u) ∪ {u}); connect every STRICTLY LARGER
+        neighbor to m — long tails fold upward without touching the minimum.
+      - small-star(u): over edges oriented child≥parent, m = min(Γ≤(u) ∪
+        {u}); reconnect u and its ≤-neighbors to m — flattens local stars.
+    - LOCAL FINISH: once the probed edge count is at or below
+      ``local_edges`` (default :data:`CC_LOCAL_EDGES`), the remaining edges
+      go to ONE grouped-map ``applyInPandas`` task that labels them with the
+      vectorized union-find :func:`min_root_forest`. At fixture scale this
+      happens at the first probe, before any round.
 
-    for _ in range(max_iters):
-        updated = _propagate(_propagate(labels).select("doc_id", "cluster_id"))
-        # materialize the round (cuts the iterative lineage) and test
-        # fixpoint. LAZY checkpoint (r15): the convergence count below is
-        # the round's FIRST action, so it materializes the checkpoint and
-        # computes the count in ONE job — the eager form ran a separate
-        # materialization job per round (2 jobs/round → 1; at sf0.1 each
-        # driver round-trip is ~0.2 s of fixed job overhead)
-        updated = updated.localCheckpoint(eager=False)
-        n_changed = updated.where(F.col("changed")).count()
-        labels = updated.select("doc_id", "cluster_id")
-        if n_changed == 0:
-            break
-    else:
-        # Non-convergence means some labels may not be component minima —
-        # a silently wrong dedup would over/under-delete. Loud, not fatal:
-        # the partial labeling is still a valid (coarser) clustering.
-        warnings.warn(
-            f"connected_components hit the {max_iters}-round cap with "
-            f"{n_changed} labels still changing; components with diameter "
-            f"> {max_iters} rounds' propagation reach are incompletely "
-            "merged — raise max_iters or switch to "
-            "connected_components_twostar",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return labels
-
-
-def connected_components_twostar(edges: DataFrame, src: str = "doc_a", dst: str = "doc_b",
-                                 max_iters: int = CC_MAX_ITERS,
-                                 stats: dict | None = None) -> DataFrame:
-    """(doc_id, cluster_id): connected components via alternating
-    large-star / small-star (Kiveris et al., "Connected Components in
-    MapReduce and Beyond", SoCC'14 — public algorithm). Same output contract
-    as :func:`connected_components` (cluster_id = min member id), different
-    convergence regime: O(log n) rounds in the component SIZE, not the
-    diameter, so a 100 TB web-crawl graph with long path-shaped near-dup
-    chains converges in ~log rounds where plain label propagation needs
-    diameter rounds. Each half-round is one groupBy over the current edge
-    set; edge count shrinks monotonically toward the star forest.
-
-    - large-star(u): m = min(Γ(u) ∪ {u}); connect every STRICTLY LARGER
-      neighbor to m — long tails fold upward without touching the minimum.
-    - small-star(u): over edges oriented child≥parent, m = min(Γ≤(u) ∪ {u});
-      reconnect u and its ≤-neighbors to m — flattens local stars.
+    ``local_edges=0`` runs rounds only: no up-front probe, rounds to the
+    fixpoint, then star extraction — the pure distributed form, which
+    :func:`connected_components_twostar` keeps under the oracle.
 
     Fixpoint when the edge set stops changing (count + order-insensitive
-    bit_xor of per-edge xxhash64 — one tiny aggregate per round, same
-    coordinator-control category as the sibling's per-round count; xor is
-    safe because the edge set is distinct). The check compares against ALL
-    signatures seen so far, not just the previous round's, so a periodic
-    oscillation of the edge set (period 2+) terminates instead of spinning
-    to the cap (round-4 advisor finding; Kiveris et al. prove monotone
-    convergence, so a revisited state can never progress further).
+    bit_xor of per-edge xxhash64 — one tiny aggregate per probe, coordinator
+    control like AQE's runtime re-planning; xor is safe because the edge set
+    is distinct). The check compares against ALL signatures seen so far, not
+    just the previous probe's, so a periodic oscillation of the edge set
+    terminates instead of spinning to the cap (Kiveris et al. prove
+    monotone convergence, so a revisited state can never progress further).
+    The same probe's count decides the local finish.
 
-    CAP-EXHAUSTION CONTRACT: if ``max_iters`` is hit before a fixpoint, the
-    star extraction (min neighbor per node) can assign labels that are NOT
-    component minima — i.e. an OVER-SPLIT labeling (one true component
-    reported as several), not merely a coarser merge. For dedup that
-    direction is safe (keeps extra docs, never deletes across a split), but
-    callers must treat the RuntimeWarning as a correctness signal and raise
-    the cap."""
+    CAP-EXHAUSTION CONTRACT: if ``max_iters`` is hit before a fixpoint or a
+    local finish, the star extraction (min neighbor per node) can assign
+    labels that are NOT component minima — i.e. an OVER-SPLIT labeling (one
+    true component reported as several), not merely a coarser merge. For
+    dedup that direction is safe (keeps extra docs, never deletes across a
+    split), but callers must treat the RuntimeWarning as a correctness
+    signal and raise the cap."""
     # canonical (child=max, parent=min) pairs, self-loops dropped; one
     # materialization up front so rounds don't recompute the upstream pair
     # pipeline. Storing CANONICAL pairs (r5) halves the per-round distinct
@@ -1493,8 +1480,8 @@ def connected_components_twostar(edges: DataFrame, src: str = "doc_a", dst: str 
                      F.least(F.col(src), F.col(dst)).alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
-        # lazy (r15): round 1's first job materializes these blocks en route
-        # — the eager form paid a dedicated materialization job up front
+        # lazy (r15): the first probe materializes these blocks en route —
+        # the eager form paid a dedicated materialization job up front
         .localCheckpoint(eager=False)
     )
     nodes = (
@@ -1566,91 +1553,79 @@ def connected_components_twostar(edges: DataFrame, src: str = "doc_a", dst: str 
     # (Kiveris et al.), so a revisited signature still means a fixpoint/
     # oscillation, at worst one extra (no-op) round of work after the
     # fixpoint. ``max_iters`` caps probe iterations (= 2·max_iters star
-    # rounds — MORE convergence headroom than before, never less).
+    # rounds).
     seen: set[tuple] = set()
     rounds = 0
-    for _ in range(max_iters):
+    finish_local = local_edges > 0 and _sig(pairs)[0] <= local_edges
+    while not finish_local:
+        if rounds == 2 * max_iters:
+            warnings.warn(
+                f"connected_components hit the {max_iters}-round cap "
+                "before the edge set reached a fixpoint or the local-finish "
+                "bound; the star extraction below may OVER-SPLIT components "
+                "(labels that are not component minima) — safe for dedup "
+                "(never merges across components) but raise max_iters (or "
+                "local_edges) before trusting the clustering",
+                RuntimeWarning,
+                stacklevel=2,
+            )
+            break
         pairs = one_round(one_round(pairs))
         rounds += 2
         sig = _sig(pairs)
         if sig in seen:
             break
         seen.add(sig)
-    else:
-        warnings.warn(
-            f"connected_components_twostar hit the {max_iters}-round cap "
-            "before the edge set reached a fixpoint; the star extraction "
-            "below may OVER-SPLIT components (labels that are not component "
-            "minima) — safe for dedup (never merges across components) but "
-            "raise max_iters before trusting the clustering",
-            RuntimeWarning,
-            stacklevel=2,
-        )
+        finish_local = local_edges > 0 and sig[0] <= local_edges
     if stats is not None:
         stats["rounds"] = rounds
-    # at fixpoint the canonical edges form stars: (child, root). Singleton
-    # components that collapsed away keep themselves.
-    stars = (
-        pairs.select(F.col("u").alias("doc_id"), F.col("v").alias("cluster_id"))
-        .groupBy("doc_id").agg(F.min("cluster_id").alias("cluster_id"))
-    )
+    if finish_local:
+        labels = (
+            pairs.withColumn("g", F.lit(0)).groupBy("g")
+            .applyInPandas(_local_labels, "doc_id long, cluster_id long")
+        )
+    else:
+        # at fixpoint the canonical edges form stars: (child, root)
+        labels = pairs.groupBy(F.col("u").alias("doc_id")).agg(F.min("v").alias("cluster_id"))
+    # nodes the labels miss (star roots) keep themselves
     return (
-        nodes.join(stars, "doc_id", "left")
+        nodes.join(labels, "doc_id", "left")
         .select("doc_id", F.coalesce("cluster_id", "doc_id").alias("cluster_id"))
     )
 
 
-def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, cluster_id, is_canonical): near-dup clusters over the
-    minhash-LSH verified pairs, with the min-id survivor elected per
-    cluster. Docs in no pair are absent (singletons keep themselves —
-    trivially canonical)."""
-    return clusters(spark, sf_dir, algorithm="labelprop")
+def connected_components_twostar(edges: DataFrame, src: str = "doc_a", dst: str = "doc_b",
+                                  max_iters: int = CC_MAX_ITERS,
+                                  stats: dict | None = None) -> DataFrame:
+    """:func:`connected_components` with star rounds only (``local_edges=0``):
+    rounds to the fixpoint, then star extraction, however small the graph —
+    the form a graph too large for one task takes, kept under the oracle by
+    ``dedup_clusters_twostar`` and measured by tools/skew_bench.py."""
+    return connected_components(edges, src, dst, max_iters, stats, local_edges=0)
 
 
-def dedup_clusters_twostar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same contract as :func:`dedup_clusters`, computed with the
-    large-star/small-star algorithm — the variant you'd run when near-dup
-    chains are long (diameter ≫ log n). Checked against the identical
-    recursive-CTE oracle."""
-    return clusters(spark, sf_dir, algorithm="twostar")
-
-
-CLUSTER_ALGORITHMS = {
-    "labelprop": connected_components,
-    "twostar": connected_components_twostar,
-}
-
-
-def clusters(spark: SparkSession, sf_dir: str,
-             algorithm: str = "twostar") -> DataFrame:
-    """(doc_id, cluster_id, is_canonical): THE near-dup clustering entry
-    point — minhash-LSH candidate pairs → connected components → min-id
-    survivor election, one output contract for every CC algorithm.
-
-    ``algorithm`` picks the component solver:
-    - ``"twostar"`` (DEFAULT — the 100 TB choice): Kiveris large-star/
-      small-star, O(log component-size) rounds regardless of diameter.
-      Web-crawl near-dup graphs contain long template chains whose diameter
-      grows with the crawl, so the log-bound form is the safe default.
-    - ``"labelprop"``: min-label propagation, O(diameter) rounds — fewer,
-      cheaper rounds when clusters are known small and dense (in-domain
-      corpora after exact dedup).
-    Both are oracled against the identical recursive-CTE oracle
-    (``DEDUP_CLUSTERS_ORACLE``)."""
-    try:
-        cc = CLUSTER_ALGORITHMS[algorithm]
-    except KeyError:
-        raise ValueError(
-            f"unknown clustering algorithm {algorithm!r}; "
-            f"expected one of {sorted(CLUSTER_ALGORITHMS)}"
-        ) from None
-    pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    labels = cc(pairs)
+def _elect_min_id(labels: DataFrame) -> DataFrame:
     return labels.select(
         "doc_id", "cluster_id",
         (F.col("doc_id") == F.col("cluster_id")).alias("is_canonical"),
     )
+
+
+def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, cluster_id, is_canonical): near-dup clusters — minhash-LSH
+    verified pairs → :func:`connected_components` (default local-finish
+    bound) → the min-id survivor elected per cluster. Docs in no pair are
+    absent (singletons keep themselves — trivially canonical)."""
+    return _elect_min_id(connected_components(dedup_minhash_lsh(spark, sf_dir)))
+
+
+def dedup_clusters_twostar(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Same contract as :func:`dedup_clusters`, with the components from
+    distributed star rounds alone (:func:`connected_components_twostar`, no
+    local finish). No fixture exceeds :data:`CC_LOCAL_EDGES`, so this query
+    is what keeps the rounds checked against the identical recursive-CTE
+    oracle."""
+    return _elect_min_id(connected_components_twostar(dedup_minhash_lsh(spark, sf_dir)))
 
 
 def dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -36,6 +36,7 @@ from tf_idf_using_mapreduce_spark.functions.vectors import (
     spark_dot,
     spark_norm,
 )
+from tf_idf_using_mapreduce_spark.operators.dedup import min_root_forest
 from tf_idf_using_mapreduce_spark.sources.corpus import load_table
 
 N_QUERIES = 10          # vec_id < 10 are the query vectors
@@ -681,13 +682,15 @@ def _ivf_cell_labels(corpus: DataFrame) -> DataFrame:
     (r15 optimization for :func:`semdedup_prune`): pairs only ever form
     between vectors of the SAME IVF cell, so components never span cells —
     the component labeling is a per-cell union-find run inside the very task
-    that enumerates the pairs, instead of shipping the pair list through
-    O(log n) global large-star/small-star rounds (each round = multiple
-    shuffles + a driver fixpoint probe; measured 73 Spark jobs for one
-    semdedup_prune at sf0.1, almost all CC rounds). Same contract as
-    ``connected_components_twostar`` over ``_ivf_cell_pairs``: only vectors
-    appearing in ≥1 pair get a row, ``cluster_id`` = min member vec_id
-    (union-find roots keep the smaller id; ids are processed sorted).
+    that enumerates the pairs (``dedup.min_root_forest``, the vectorized
+    kernel that also finishes ``dedup.connected_components`` once its graph
+    is small), instead of shipping the pair list through O(log n) global
+    large-star/small-star rounds (each round = multiple shuffles + a driver
+    fixpoint probe; measured 73 Spark jobs for one semdedup_prune at sf0.1,
+    almost all CC rounds). Same contract as ``connected_components`` over
+    ``_ivf_cell_pairs``: only vectors appearing in ≥1 pair get a row,
+    ``cluster_id`` = min member vec_id (union-find roots keep the smaller
+    index; ids are processed sorted).
     Per-element math (dot/(na·nb), round at COS_ROUND, ≥ threshold) is
     byte-identical to :func:`_ivf_cell_pairs`'s kernel — the chunked GEMM is
     the same — so the grouped pair set, and therefore the labeling, matches
@@ -707,28 +710,9 @@ def _ivf_cell_labels(corpus: DataFrame) -> DataFrame:
         nrm = pdf["nrm"].to_numpy(dtype=np.float64)
         parent = np.arange(len(ids))
         touched = np.zeros(len(ids), dtype=bool)
-
-        def resolve(p: "np.ndarray") -> "np.ndarray":
-            # full path compression by pointer jumping: p <- p[p] until
-            # fixpoint (O(log chain-depth) C-speed passes; hooks only ever
-            # point to SMALLER indices, so the map is acyclic)
-            while True:
-                nxt = p[p]
-                if np.array_equal(nxt, p):
-                    return p
-                p = nxt
-
-        # Vectorized union-find (r16, the r15 judge's skew exposure): the
-        # former per-pair Python loop was O(near-dup pairs) interpreted work
-        # in ONE task — ~1.1M iterations for the skew bench's planted
-        # 1500-member hot cell. Per chunk: hook every kept edge's two roots
-        # to their minimum (min-index hooking ⇒ the root index is the
-        # component's smallest, and ids are sorted, so root id stays the
-        # component-min vec_id — the exact old contract), compress, repeat
-        # until the chunk's edges are intra-component; all steps are numpy
-        # ufuncs. Per-chunk memory is unchanged (the kept-pair index arrays
-        # np.nonzero already produced); iterations per chunk are
-        # O(log component-size), each O(pairs + cell).
+        # per chunk, the kept pairs' index arrays np.nonzero already produced
+        # go straight into the shared vectorized union-find; ids are sorted,
+        # so each root (the component's smallest index) is its min vec_id
         chunk = 1024
         for i0 in range(0, len(ids), chunk):
             Sc = (V[i0:i0 + chunk] @ V.T) / np.outer(nrm[i0:i0 + chunk], nrm)
@@ -741,17 +725,9 @@ def _ivf_cell_labels(corpus: DataFrame) -> DataFrame:
             ia = ia + i0
             touched[ia] = True
             touched[ib] = True
-            while True:
-                parent = resolve(parent)
-                ra, rb = parent[ia], parent[ib]
-                if (ra == rb).all():
-                    break
-                m = np.minimum(ra, rb)
-                np.minimum.at(parent, ra, m)
-                np.minimum.at(parent, rb, m)
+            parent = min_root_forest(parent, ia, ib)
         if not touched.any():
             return empty
-        parent = resolve(parent)
         idx = np.nonzero(touched)[0]
         return pd.DataFrame({"vec_id": ids[idx], "cluster_id": ids[parent[idx]]})
 

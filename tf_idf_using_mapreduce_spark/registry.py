@@ -427,45 +427,14 @@ register("events_vacuum_roundtrip", _tt.events_vacuum_roundtrip,
 # round, so they refresh first in r15. Every r9-stale query the r13
 # verdict flagged is FORCE_FRESH-pinned inside this window.
 FORCE_FRESH: frozenset[str] = frozenset({
-    # round 16 (optimization round 2): every query whose Spark-side plan
-    # construction (or, for dedup_containment, its oracle in lockstep)
-    # changed this round — results are identical by construction (each
-    # change was hash-checked against its oracle at sf0.01 AND sf0.1
-    # locally), but the driver rows must re-earn green on the new shapes.
-    # Arrow scatter densify off the shared counts table
-    "tfidf_doc_similarity",
-    # 60-bit integer fingerprints (oracle changed in LOCKSTEP)
-    "dedup_containment",
-    # shared payload frame across the three detectors
-    "neardup_modality_agreement",
-    # winnow lineage cut
-    "train_eval_contamination",
-    # one-projection split+hash assignment (self-join removed) + cut
-    "split_leakage",
-    # combined shingle+signature checkpoint (underlies the whole family)
-    "dedup_minhash_lsh",
-    # seeded double-step label propagation / fused-min two-star rounds
+    # one connected-components solver (star rounds, then a local
+    # union-find finish) replaces label propagation and the algorithm switch
     "dedup_clusters",
     "dedup_clusters_twostar",
     "dedup_apply",
     "dedup_apply_quality",
-    "source_dup_matrix",
-    # vectorized cell-local union-find labeling
+    # the cell-local labeling now calls the shared union-find kernel
     "semdedup_prune",
-    # chunked-GEMM label blocking replaces the interpreted dot-fold join
-    "dedup_embedding_cosine",
-    # emit-free trailing no-data microbatch skipped
-    "events_stream_stream_join",
-    "events_stream_dedup",
-    # frame-table lineage cuts (decode kernel ran 2-3x)
-    "dedup_audio_fingerprint",
-    "dedup_audio_fingerprint_incremental",
-    # lazy fit checkpoints (one materialization job fewer per checkpoint)
-    "tfidf_mllib",
-    "tfidf_mllib_topk_overlap",
-    # scrubbed-survivor / released-survivor lineage cuts
-    "pretraining_manifest",
-    "release_manifest",
 })
 
 

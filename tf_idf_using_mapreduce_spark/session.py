@@ -14,8 +14,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+# the directory holding the package: Python workers import it from here, so
+# UDFs resolve whatever the process's cwd is
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def spark_cpus() -> int:
+    """Cores for ``local[N]``: ``SPARK_GRAFT_CPUS``, else the cores this
+    process may run on (what ``nproc`` reports)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+
+
 def get_spark(app_name: str = "tfidf-spark-engine", shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = spark_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_SQL_SHUFFLE_PARTITIONS", str(cpus)))
     builder = (
@@ -27,6 +38,9 @@ def get_spark(app_name: str = "tfidf-spark-engine", shuffle_partitions: int | No
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # sys.path edits in the driver never reach the workers
+        .config("spark.executorEnv.PYTHONPATH", os.pathsep.join(
+            filter(None, [PACKAGE_PARENT, os.environ.get("PYTHONPATH")])))
         # 16g: the bench session runs 35 queries × 2 passes with per-round
         # localCheckpoint blocks (CC iterations) and memory-sink tables
         # retained until the async ContextCleaner runs — 8g showed 2× GC
