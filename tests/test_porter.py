@@ -113,7 +113,7 @@ def test_spark_udf_matches_expression(spark):
 # A third, structural divergence: OpenNLP preserves case (its rules assume
 # lowercase input, so "The" passes through mangled/unchanged), while the
 # engine always lowercases first — documented at operators/tfidf.py
-# doc_freq_of and exercised by the case-sensitive pipeline tests.
+# doc_freq_of and exercised by tests/test_tfidf.py::test_case_sensitive_vocabulary.
 # --------------------------------------------------------------------------- #
 
 # word -> (engine stem [paper], OpenNLP stem [reference impl departures])

@@ -1,13 +1,10 @@
-"""Rate-limited replay source + RDD pairs-vs-stripes demo."""
+"""Rate-limited replay source."""
 
 from __future__ import annotations
 
 import time
 
-from pyspark.sql import functions as F
-
 from tests.conftest import SF_SMOKE
-from tf_idf_using_mapreduce_spark.sources.corpus import load_table
 from tf_idf_using_mapreduce_spark.streaming.replay import indexed_events, replay_events_stream
 
 
@@ -53,22 +50,3 @@ def test_replay_stream_releases_events_gradually(spark):
     assert n <= 1000             # never exceeds the table
     row = spark.table("replay_result").first()
     assert set(row.asDict()) == {"event_id", "ts", "user_id", "event_type", "value", "props"}
-
-
-def test_rdd_pairs_equals_stripes_equals_dataframe(spark):
-    from tf_idf_using_mapreduce_spark.functions.rdd_demo import (
-        pos_counts_rdd_pairs,
-        pos_counts_rdd_stripes,
-    )
-    from tf_idf_using_mapreduce_spark.operators.pos import pos_counts
-
-    docs = load_table(spark, SF_SMOKE, "documents").limit(100)
-    pairs = pos_counts_rdd_pairs(docs)
-    stripes = pos_counts_rdd_stripes(docs)
-    assert pairs == stripes and pairs
-    df_counts = {
-        r["tag"]: r["cnt"]
-        for r in pos_counts(spark, SF_SMOKE).collect()
-    }
-    # same tagset; full-corpus totals dominate the 100-doc sample
-    assert set(pairs) <= set(df_counts)

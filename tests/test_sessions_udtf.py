@@ -1,9 +1,8 @@
-"""Sessionization/as-of oracle parity + UDTF and MapType surface tests."""
+"""Sessionization/as-of oracle parity + UDTF surface tests."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE, assert_query_matches_oracle
 
@@ -45,18 +44,6 @@ def test_udtf_lateral_join(spark):
     ).collect()
     got = [(r["doc_id"], r["sentence_idx"], r["n_words"]) for r in rows]
     assert got == [(1, 0, 3), (1, 1, 4), (1, 2, 1)]
-
-
-def test_doc_term_map_roundtrip(spark):
-    from tf_idf_using_mapreduce_spark.functions.udtf_demo import doc_term_map, explode_term_map
-    from tf_idf_using_mapreduce_spark.operators.tfidf import stemmed_tokens
-
-    st = stemmed_tokens(spark, SF_SMOKE).limit(5000)
-    maps = doc_term_map(st)
-    assert dict(maps.dtypes)["term_map"] == "map<string,bigint>"
-    back = explode_term_map(maps)
-    direct = st.groupBy("doc_id", F.col("stem").alias("term")).agg(F.count(F.lit(1)).alias("tf"))
-    assert {tuple(r) for r in back.collect()} == {tuple(r) for r in direct.collect()}
 
 
 # --------------------------------------------------------------------------- #

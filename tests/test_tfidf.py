@@ -13,7 +13,7 @@ import pytest
 
 from tests.conftest import SF_SMOKE, assert_query_matches_oracle
 from tf_idf_using_mapreduce_spark.functions.porter import porter_stem_py
-from tf_idf_using_mapreduce_spark.operators.tfidf import doc_freq, tfidf
+from tf_idf_using_mapreduce_spark.operators.tfidf import doc_freq, stemmed_tokens, tfidf
 from tf_idf_using_mapreduce_spark.sources.corpus import stopwords
 
 
@@ -84,12 +84,31 @@ def test_doc_freq_plan_is_topk_not_global_sort(spark):
 
 
 def test_scan_prunes_columns(spark):
-    """Only (doc_id, text) may be read from the documents parquet (ReadSchema)."""
-    plan = doc_freq(spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
+    """Only (doc_id, text) may be read from the documents parquet (ReadSchema).
+    The scan sits under the stemmed-token stream that feeds the counts
+    table's lineage cut, so that is the plan inspected."""
+    plan = stemmed_tokens(spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
     m = re.search(r"ReadSchema: struct<([^\n>]*)", plan)
     assert m, plan[:2000]
     cols = {c.split(":")[0] for c in m.group(1).split(",") if ":" in c}
     assert cols <= {"doc_id", "text"}, cols
+
+
+def test_case_sensitive_vocabulary(spark):
+    """``case_sensitive=True`` (the reference's ``-casesensitive``) lets "The"
+    escape the lowercase stop list, and its stem is lowercase; the default
+    drops it. ``tfidf_of`` scores exactly the ``doc_freq_of`` vocabulary."""
+    from tf_idf_using_mapreduce_spark.operators.tfidf import doc_freq_of, tfidf_of
+
+    docs = spark.createDataFrame(
+        [(1, "The cat sat on the mat"), (2, "The dog chased the cat")],
+        "doc_id long, text string",
+    )
+    vocab = {r["term"]: r["df"] for r in doc_freq_of(docs, case_sensitive=True).collect()}
+    assert vocab.get("the") == 2, vocab
+    assert "the" not in {r["term"] for r in doc_freq_of(docs).collect()}
+    terms = {r["term"] for r in tfidf_of(docs, case_sensitive=True).collect()}
+    assert terms == set(vocab)
 
 
 def test_tfidf_doc_similarity_oracle_parity(spark):

@@ -41,23 +41,6 @@ def simhash_vote_exprs(hash_col: str, bits: int = SIMHASH_BITS) -> list[str]:
     return [f"(2 * {bit_of_hash(hash_col, j)} - 1)" for j in range(bits)]
 
 
-def simhash_concat_expr(vote_cols: list[str]) -> str:
-    """'1'/'0' string of sign bits from summed vote columns."""
-    bits = [f"(CASE WHEN {c} >= 0 THEN '1' ELSE '0' END)" for c in vote_cols]
-    return "concat(" + ", ".join(bits) + ")"
-
-
-def hamming_expr(a: str, b: str, bits: int = SIMHASH_BITS) -> str:
-    """Hamming distance between two '1'/'0' strings of length ``bits``
-    (string form — kept for the string-sketch surface; the dedup operator
-    uses the integer form below, ~64× fewer ops per pair)."""
-    terms = [
-        f"(CASE WHEN substr({a}, {i}, 1) <> substr({b}, {i}, 1) THEN 1 ELSE 0 END)"
-        for i in range(1, bits + 1)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
 def simhash_int_expr(vote_cols: list[str]) -> str:
     """Integer simhash (bit j = 2^j when vote_j >= 0) — bigint, so hamming is
     one bit_count(xor) instead of per-bit string compares."""

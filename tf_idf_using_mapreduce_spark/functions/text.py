@@ -11,13 +11,10 @@ index, the only form both dialects share).
 Documented divergence: the reference *first* deletes non-letters then splits,
 so ``"ab1cd"`` glues to one token ``abcd``; the canonical extractor yields
 ``ab, cd``. Identical on all-letter corpora (the fixtures).
-:func:`normalize_strip` provides the exact-fidelity two-step form for Spark
-pipelines that need it.
 
 Stop-word filtering (P4, ``DocumentFreq.java:66-68``) applies to the RAW token
 *before* stemming (quirk Q2) and is expressed as ``NOT IN (stop-list)`` —
-Catalyst folds the 355-literal list into an efficient predicate; for very large
-stop-lists :func:`anti_join_stopwords` gives the broadcast left-anti-join form.
+Catalyst folds the 355-literal list into an efficient predicate.
 """
 
 from __future__ import annotations
@@ -29,11 +26,6 @@ from tf_idf_using_mapreduce_spark.sources.corpus import stopwords, stopwords_sql
 
 # One portable tokenizer expression: maximal lowercase-letter runs.
 TOKENIZE_SQL = "regexp_extract_all(lower({col}), '([a-z]+)', 1)"
-
-
-def tokens_array(text_col: str = "text") -> F.Column:
-    """Array<string> of tokens, JVM-side."""
-    return F.expr(TOKENIZE_SQL.format(col=text_col))
 
 
 def explode_tokens(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
@@ -49,21 +41,6 @@ def explode_tokens(df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 def filter_stopwords(df: DataFrame, token_col: str = "token") -> DataFrame:
     """P4/J2: drop stop-list tokens (raw token, pre-stem — quirk Q2)."""
     return df.where(~F.col(token_col).isin(*stopwords()))
-
-
-def anti_join_stopwords(df: DataFrame, token_col: str = "token") -> DataFrame:
-    """Broadcast left-anti-join form of P4 — the shape you want when the
-    stop-list is itself a table too big for a literal predicate."""
-    spark = df.sparkSession
-    stop_df = spark.createDataFrame([(s,) for s in stopwords()], f"{token_col} string")
-    return df.join(F.broadcast(stop_df), token_col, "left_anti")
-
-
-def normalize_strip(df: DataFrame, text_col: str = "text", case_sensitive: bool = False) -> DataFrame:
-    """Exact-fidelity P1+P2: lowercase then delete ``[^a-zA-Z ]`` (keeps the
-    reference's fragment-gluing behavior)."""
-    col = F.col(text_col) if case_sensitive else F.lower(F.col(text_col))
-    return df.withColumn(text_col, F.regexp_replace(col, "[^a-zA-Z ]", ""))
 
 
 # ---------------------------------------------------------------------------

@@ -1,19 +1,14 @@
-"""Python UDTF + MapType surfaces (SURVEY.md §2.10 — the reference's free-form
-``map()`` is simultaneously a scalar UDF, flat-map UDTF, and stripe
-(MapWritable) producer; Spark splits those into first-class constructs).
+"""Python UDTF surface (SURVEY.md §2.10 — the reference's free-form ``map()``
+is simultaneously a scalar UDF, flat-map UDTF, and stripe (MapWritable)
+producer; Spark splits those into first-class constructs).
 
-- :func:`sentence_split_udtf` — a lateral table function (1 row → N rows with
-  extra columns), the UDTF face of the reference's in-map ``context.write``
-  loop.
-- :func:`doc_term_map` — the stripes data shape itself: per-document
-  ``map<term, tf>`` via ``map_from_entries``, and back out via ``explode`` —
-  what ``IDF.java:87-106`` builds in per-task heap, as a column type.
+:func:`sentence_split_udtf` is a lateral table function (1 row → N rows with
+extra columns), the UDTF face of the reference's in-map ``context.write``
+loop. The per-document stripe is the (doc_id, term, tf) counts table of
+``operators.tfidf.term_counts_of``.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def sentence_split_udtf():
@@ -34,20 +29,3 @@ def sentence_split_udtf():
                     yield i, s, len(s.split())
 
     return SentenceSplit
-
-
-def doc_term_map(stemmed_tokens: DataFrame) -> DataFrame:
-    """(doc_id, term_map map<string,bigint>): the reference's per-document
-    stripe as a first-class MapType column."""
-    tf = stemmed_tokens.groupBy("doc_id", "stem").agg(F.count(F.lit(1)).alias("tf"))
-    return tf.groupBy("doc_id").agg(
-        F.map_from_entries(
-            F.array_sort(F.collect_list(F.struct("stem", "tf")))
-        ).alias("term_map")
-    )
-
-
-def explode_term_map(doc_maps: DataFrame) -> DataFrame:
-    """Dissolve the stripe back to (doc_id, term, tf) rows — the normalized
-    form Catalyst aggregates natively (SURVEY.md §1.1 'stripes dissolved')."""
-    return doc_maps.select("doc_id", F.explode("term_map").alias("term", "tf"))

@@ -178,26 +178,6 @@ def _ordered_pairs_expr(arr: str) -> str:
     )
 
 
-def _jaccard_on(pairs: DataFrame, shingles: DataFrame) -> DataFrame:
-    """Exact Jaccard for given candidate (doc_a, doc_b) pairs."""
-    counts = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = shingles.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = shingles.select(F.col("doc_id").alias("doc_b"), "shingle")
-    common = (
-        pairs.join(a, "doc_a").join(b, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    return (
-        common.join(counts.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a")
-        .join(counts.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
-        .select(
-            "doc_a", "doc_b",
-            F.round(F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common")), 6).alias("jaccard"),
-        )
-    )
-
-
 # --------------------------------------------------------------------------- #
 # exact n-gram Jaccard (baseline)
 # --------------------------------------------------------------------------- #
@@ -255,25 +235,18 @@ WHERE common * 1.0 / (ca.n_sh + cb.n_sh - common) >= {JACCARD_THRESHOLD}
 # MinHash + LSH (scale path)
 # --------------------------------------------------------------------------- #
 
-def minhash_signatures(shingle_sets: DataFrame, seeds: int = MINHASH_SEEDS) -> DataFrame:
-    """(doc_id, s0..s{k-1}): min over the doc's shingle array of
-    md5(seed:shingle), one ``array_min(transform(...))`` column per seed —
-    SHUFFLE-FREE (a pure projection; the former groupBy-of-exploded-rows form
-    exchanged every (doc, shingle) row first). Hex-string min == numeric min
-    of the 128-bit hash (fixed-length lexicographic)."""
-    cols = [
-        F.expr(f"array_min(transform(sh, x -> {seeded_md5(str(s), 'x')}))").alias(f"s{s}")
-        for s in range(seeds)
-    ]
-    return shingle_sets.select("doc_id", *cols)
-
-
 def minhash_signatures_with_sets(shingle_sets: DataFrame,
                                  seeds: int = MINHASH_SEEDS) -> DataFrame:
-    """(doc_id, sh, s0..s{k-1}): :func:`minhash_signatures` with the shingle
-    array CARRIED ALONGSIDE — the combined sketch table
-    :func:`dedup_minhash_lsh` checkpoints once so the signature and verify
-    faces share one materialization (r16)."""
+    """(doc_id, sh, s0..s{k-1}): the shingle array CARRIED ALONGSIDE its
+    MinHash signature — min over the doc's shingle array of
+    md5(seed:shingle), one ``array_min(transform(...))`` column per seed,
+    SHUFFLE-FREE (a pure projection; the former groupBy-of-exploded-rows
+    form exchanged every (doc, shingle) row first). Hex-string min ==
+    numeric min of the 128-bit hash (fixed-length lexicographic). The one
+    sketch table of the MinHash family: :func:`dedup_minhash_lsh` and
+    :func:`dedup_incremental` checkpoint it once so the signature and
+    verify faces share one materialization (r16); consumers that need only
+    the signature project it away (:func:`_lsh_band_table`)."""
     cols = [
         F.expr(f"array_min(transform(sh, x -> {seeded_md5(str(s), 'x')}))").alias(f"s{s}")
         for s in range(seeds)
@@ -313,16 +286,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     sets = table.select("doc_id", "sh")
-    sig = table.drop("sh")
-    n_bands = MINHASH_SEEDS // LSH_BAND_ROWS
-    band_structs = ", ".join(
-        f"named_struct('band', {b}, 'band_sig', concat(s{LSH_BAND_ROWS * b}, s{LSH_BAND_ROWS * b + 1}))"
-        for b in range(n_bands)
-    )
-    bands = sig.select(
-        "doc_id", F.explode(F.expr(f"array({band_structs})")).alias("bb")
-    ).select("doc_id", "bb.band", "bb.band_sig")
-    bands = _drop_hot_buckets(bands, ["band", "band_sig"], LSH_BUCKET_CAP)
+    bands = _drop_hot_buckets(_lsh_band_table(table), ["band", "band_sig"], LSH_BUCKET_CAP)
     cand = (
         bands.groupBy("band", "band_sig")
         # array_distinct BEFORE pair expansion: duplicate doc_ids (legal in
@@ -958,9 +922,14 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hot index buckets are excluded exactly as in the batch operator
     (boilerplate band keys are non-discriminative), mirrored in the oracle.
     """
-    sets = _shingle_sets(spark, sf_dir).localCheckpoint(eager=False)
-    sig = minhash_signatures(sets).localCheckpoint(eager=False)
-    bands = _lsh_band_table(sig)
+    # one (doc_id, sh, s0..s15) checkpoint, as in dedup_minhash_lsh: the
+    # band table and the confirm sides project from the same blocks
+    table = (
+        minhash_signatures_with_sets(_shingle_sets(spark, sf_dir))
+        .localCheckpoint(eager=False)
+    )
+    sets = table.select("doc_id", "sh")
+    bands = _lsh_band_table(table)
     is_new = F.col("doc_id") % INCR_BATCH_MOD == 0
     idx_bands = _drop_hot_buckets(bands.where(~is_new), ["band", "band_sig"], LSH_BUCKET_CAP)
     new_bands = bands.where(is_new).withColumnRenamed("doc_id", "new_id")
@@ -974,9 +943,10 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lsh_band_table(sig: DataFrame) -> DataFrame:
     """(doc_id, band, band_sig): the MinHash LSH band table of a signature
-    frame — the write-once index state of the incremental family (shared by
-    :func:`dedup_incremental` and the persisted twin, which materializes it
-    on disk via operators/persisted.py)."""
+    frame — the bands :func:`dedup_minhash_lsh` buckets and the write-once
+    index state of the incremental family (:func:`dedup_incremental` and
+    the persisted twin, which materializes it on disk via
+    operators/persisted.py)."""
     n_bands = MINHASH_SEEDS // LSH_BAND_ROWS
     band_structs = ", ".join(
         f"named_struct('band', {b}, 'band_sig', concat(s{LSH_BAND_ROWS * b}, s{LSH_BAND_ROWS * b + 1}))"

@@ -66,7 +66,7 @@ from tf_idf_using_mapreduce_spark.operators.dedup import (
     _jaccard_confirm,
     _lsh_band_table,
     _shingle_sets,
-    minhash_signatures,
+    minhash_signatures_with_sets,
 )
 from tf_idf_using_mapreduce_spark.operators.similarity import _corpus_signature
 from tf_idf_using_mapreduce_spark.sources.corpus import write_bucketed_table
@@ -347,14 +347,14 @@ def dedup_incremental_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         idx_bands = _drop_hot_buckets(
-            _lsh_band_table(minhash_signatures(sets.where(~is_new))),
+            _lsh_band_table(minhash_signatures_with_sets(sets.where(~is_new))),
             ["band", "band_sig"], LSH_BUCKET_CAP,
         )
         return idx_bands.withColumn("bb", _bb("band", "band_sig"))
 
     name = _ensure_index(spark, sf_dir, "band", build)
     new_bands = (
-        _lsh_band_table(minhash_signatures(sets.where(is_new)))
+        _lsh_band_table(minhash_signatures_with_sets(sets.where(is_new)))
         .withColumnRenamed("doc_id", "new_id")
         .withColumn("bb", _bb("band", "band_sig"))
         .localCheckpoint(eager=False)

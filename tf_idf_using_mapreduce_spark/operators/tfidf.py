@@ -81,31 +81,25 @@ def stemmed_tokens(spark: SparkSession, sf_dir: str, case_sensitive: bool = Fals
     return stemmed_tokens_of(docs, case_sensitive=case_sensitive)
 
 
-def _doc_freq_of(stemmed: DataFrame, top_n: int) -> DataFrame:
-    """A3 (count-distinct docs per term) + T1 (top-k, deterministic tie-break
-    ``term ASC`` — deliberate fix of reference quirk Q6)."""
-    return (
-        stemmed.groupBy(F.col("stem").alias("term"))
-        .agg(F.countDistinct("doc_id").alias("df"))
-        .orderBy(F.desc("df"), F.asc("term"))
-        .limit(top_n)
-    )
-
-
 def doc_freq_of(docs: DataFrame, top_n: int = 100, case_sensitive: bool = False) -> DataFrame:
-    """Reference pipeline 2 (``DocumentFreq.java``) over any corpus.
+    """Reference pipeline 2 (``DocumentFreq.java``) over any corpus: the
+    top-``top_n`` (term, df) vocabulary of :func:`term_counts_of` — the ONE
+    DF definition (:func:`_vocab_of_counts`) that :func:`tfidf_of` also
+    joins back into TF, so the DF table and the TF-IDF vocabulary cannot
+    diverge.
 
     ``case_sensitive`` ≙ the reference's ``-casesensitive`` flag: case is
     preserved through tokenization and the raw-token stop filter (so "The"
     escapes the lowercase stop list, as in the reference). Divergence: stems
     are ALWAYS lowercase — the portable stemmer's contract — whereas OpenNLP
     would emit case-mangled stems for uppercase input."""
-    return _doc_freq_of(stemmed_tokens_of(docs, case_sensitive=case_sensitive), top_n)
+    return _vocab_of_counts(term_counts_of(docs, case_sensitive=case_sensitive), top_n)
 
 
 def doc_freq(spark: SparkSession, sf_dir: str, top_n: int = 100) -> DataFrame:
     """Top-``top_n`` terms by document frequency: (term, df)."""
-    return _doc_freq_of(stemmed_tokens(spark, sf_dir), top_n)
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return doc_freq_of(docs, top_n=top_n)
 
 
 def term_counts_of(docs: DataFrame, case_sensitive: bool = False) -> DataFrame:
@@ -132,11 +126,14 @@ def term_counts_of(docs: DataFrame, case_sensitive: bool = False) -> DataFrame:
 
 def _vocab_of_counts(counts: DataFrame, top_n: int) -> DataFrame:
     """(term, df): the ≤``top_n`` DF vocabulary over a (doc_id, term, tf)
-    counts frame. DF per term = count of counts-rows with a non-NULL doc_id
-    (each row is one distinct document by construction — ``F.count(col)``
-    skips the NULL doc_id group exactly as ``countDistinct`` excludes
-    NULLs). Shared by :func:`tfidf_from_counts` and the similarity path so
-    the vocabulary definition cannot diverge."""
+    counts frame — the engine's ONE exact document-frequency definition
+    (A3 + T1, deterministic tie-break ``term ASC``, a deliberate fix of
+    reference quirk Q6). DF per term = count of counts-rows with a non-NULL
+    doc_id (each row is one distinct document by construction —
+    ``F.count(col)`` skips the NULL doc_id group exactly as
+    ``countDistinct`` excludes NULLs). :func:`doc_freq_of` (and so the DF
+    TSV that ``pipelines.run_tfidf(df_tsv=)`` reads back),
+    :func:`tfidf_from_counts` and the similarity path all read it."""
     return (
         counts.groupBy("term")
         .agg(F.count("doc_id").alias("df"))
@@ -438,28 +435,15 @@ def _bm25_score_expr(tf: str, df: str, dl: str, n: str, sumdl: str) -> str:
     return f"{idf} * ({tf} * ({BM25_K1} + 1)) / {denom}"
 
 
-def bm25_topk(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
-    """(doc_id, n_hits, score): top-k documents by BM25 (k1=1.2, b=0.75,
-    Lucene non-negative idf) for the pinned query terms — ad-hoc retrieval
-    over the corpus, the modern form of the reference's TF-IDF ranking
-    (IDF.java:164 hand-rolls ``tf · ln(10000/(df+1))``; BM25 adds tf
-    saturation and length normalization, the public Robertson/Lucene
-    formulation).
-
-    Float parity: cross-term float summation is ORDER-SENSITIVE, so the
-    per-term scores are pivoted into one fixed-order expression
-    (s_dup + s_join + s_scan + s_spark, left-to-right on both engines)
-    instead of SUM() over rows — the same discipline that fixed
-    embedding_centroid_shift. Each pivot cell is max(CASE…) over exactly
-    one row.
-
-    Scale shape: the token stream is filtered to the |Q| query terms
-    BEFORE any shuffle (map-side prune — at 100 TB this is the inverted-
-    index probe, reading ~|Q|/|V| of the postings mass); tf is a
-    partial+final hash agg on (doc_id, term); per-doc length joins on the
+def _query_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, w, tf, df, dl, n_docs, sumdl): one row per (document, pinned
+    query term) it contains — the postings front that :func:`bm25_topk` and
+    :func:`rrf_fusion_topk` score. The token stream is filtered to the |Q|
+    query terms BEFORE any shuffle (map-side prune — at 100 TB this is the
+    inverted-index probe, reading ~|Q|/|V| of the postings mass); tf is a
+    partial+final hash agg on (doc_id, w); per-doc length joins on the
     doc_id equi-key; the ≤|Q|-row df table and the single-row (N, Σdl)
-    scalars broadcast; top-k is TakeOrderedAndProject (per-partition
-    heads, no global sort)."""
+    scalars broadcast."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = spread(docs).select(
         "doc_id", F.expr("regexp_extract_all(lower(text), '([a-z]+)', 1)").alias("t")
@@ -475,25 +459,59 @@ def bm25_topk(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     df_tab = postings.groupBy("w").agg(F.count(F.lit(1)).alias("df"))
-    scored = (
+    return (
         postings.join(dl, "doc_id")
         .join(F.broadcast(df_tab), "w")
         .crossJoin(F.broadcast(scalars))
-        .select(
-            "doc_id", "w",
-            F.expr(_bm25_score_expr("tf", "df", "dl", "n_docs", "sumdl")).alias("s"),
-        )
     )
-    cells = [
-        F.coalesce(F.max(F.when(F.col("w") == t, F.col("s"))), F.lit(0.0)).alias(f"s_{t}")
+
+
+def _pivot_cells(score: str) -> list:
+    """Per-document pivot of the per-term ``score`` column into one cell
+    ``{score}_{t}`` per query term: max(CASE…) over exactly one row, 0.0 for
+    a term the document lacks."""
+    return [
+        F.coalesce(F.max(F.when(F.col("w") == t, F.col(score))), F.lit(0.0)).alias(f"{score}_{t}")
         for t in BM25_QUERY
     ]
-    per_doc = scored.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_hits"), *cells)
+
+
+def _pivot_sum(score: str):
+    """The fixed-order sum ``{score}_dup + {score}_join + …`` of the pivot
+    cells, left to right in BM25_QUERY order on both engines (never SUM()
+    over rows — cross-term float summation is order-sensitive)."""
     total = None
     for t in BM25_QUERY:
-        total = F.col(f"s_{t}") if total is None else total + F.col(f"s_{t}")
+        c = F.col(f"{score}_{t}")
+        total = c if total is None else total + c
+    return total
+
+
+def bm25_topk(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
+    """(doc_id, n_hits, score): top-k documents by BM25 (k1=1.2, b=0.75,
+    Lucene non-negative idf) for the pinned query terms — ad-hoc retrieval
+    over the corpus, the modern form of the reference's TF-IDF ranking
+    (IDF.java:164 hand-rolls ``tf · ln(10000/(df+1))``; BM25 adds tf
+    saturation and length normalization, the public Robertson/Lucene
+    formulation).
+
+    Float parity: the per-term scores are pivoted into one fixed-order
+    expression (:func:`_pivot_sum`: sb_dup + sb_join + sb_scan + sb_spark,
+    left-to-right on both engines) instead of SUM() over rows — the same
+    discipline that fixed embedding_centroid_shift.
+
+    Scale shape: the map-side-pruned postings front of
+    :func:`_query_postings`; top-k is TakeOrderedAndProject
+    (per-partition heads, no global sort)."""
+    scored = _query_postings(spark, sf_dir).select(
+        "doc_id", "w",
+        F.expr(_bm25_score_expr("tf", "df", "dl", "n_docs", "sumdl")).alias("sb"),
+    )
+    per_doc = scored.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_hits"), *_pivot_cells("sb")
+    )
     return (
-        per_doc.select("doc_id", "n_hits", F.round(total, SCORE_ROUND).alias("score"))
+        per_doc.select("doc_id", "n_hits", F.round(_pivot_sum("sb"), SCORE_ROUND).alias("score"))
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
@@ -580,46 +598,21 @@ def rrf_fusion_topk(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
     independent of corpus size. At 100 TB the semantic leg's exact scan
     hands off to the ANN routes (``similarity.py``) with this as their
     oracle, like every exact twin in this engine."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = spread(docs).select(
-        "doc_id", F.expr("regexp_extract_all(lower(text), '([a-z]+)', 1)").alias("t")
+    scored = _query_postings(spark, sf_dir).select(
+        "doc_id", "w",
+        F.expr(_bm25_score_expr("tf", "df", "dl", "n_docs", "sumdl")).alias("sb"),
+        F.expr(_vsm_score_expr("tf", "df", "n_docs")).alias("sv"),
     )
-    dl = toks.select("doc_id", F.size("t").alias("dl"))
-    scalars = dl.groupBy().agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sumdl")
-    )
-    postings = (
-        toks.select("doc_id", F.explode("t").alias("w"))
-        .where(F.col("w").isin(*BM25_QUERY))
-        .groupBy("doc_id", "w")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df_tab = postings.groupBy("w").agg(F.count(F.lit(1)).alias("df"))
-    scored = (
-        postings.join(dl, "doc_id")
-        .join(F.broadcast(df_tab), "w")
-        .crossJoin(F.broadcast(scalars))
-        .select(
-            "doc_id", "w",
-            F.expr(_bm25_score_expr("tf", "df", "dl", "n_docs", "sumdl")).alias("sb"),
-            F.expr(_vsm_score_expr("tf", "df", "n_docs")).alias("sv"),
-        )
-    )
-    cells = [
-        F.coalesce(F.max(F.when(F.col("w") == t, F.col(c))), F.lit(0.0)).alias(f"{c}_{t}")
-        for c in ("sb", "sv") for t in BM25_QUERY
-    ]
     # one corpus pass computes BOTH legs' pivots; the cut lets the two
     # ranking reads below reuse it instead of re-tokenizing
-    per_doc = scored.groupBy("doc_id").agg(*cells).localCheckpoint(eager=False)
+    per_doc = (
+        scored.groupBy("doc_id").agg(*_pivot_cells("sb"), *_pivot_cells("sv"))
+        .localCheckpoint(eager=False)
+    )
 
-    def leg(col_prefix: str) -> DataFrame:
-        total = None
-        for t in BM25_QUERY:
-            c = F.col(f"{col_prefix}_{t}")
-            total = c if total is None else total + c
+    def leg(score: str) -> DataFrame:
         top = (
-            per_doc.select("doc_id", F.round(total, SCORE_ROUND).alias("score"))
+            per_doc.select("doc_id", F.round(_pivot_sum(score), SCORE_ROUND).alias("score"))
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(RRF_POOL)
         )

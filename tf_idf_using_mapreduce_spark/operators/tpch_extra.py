@@ -51,16 +51,11 @@ from pyspark.sql import functions as F
 
 from tf_idf_using_mapreduce_spark.sources.corpus import load_table
 
-def _rev():
-    # lazy: F.col at module import time needs an active SparkContext
-    return F.col("l_extendedprice") * (1 - F.col("l_discount"))
-
-
 # Exact-grid revenue aggregation (the q9 round-7 cent-divergence fix),
 # now shared engine-wide from functions/money.py — round 8 migrated every
 # `round(sum(<1e-4/1e-6 grid product>), 2)` site onto it, since each one
 # is the same .005-midpoint sum-order trap waiting for data to roll it.
-from tf_idf_using_mapreduce_spark.functions.money import (  # noqa: E402
+from tf_idf_using_mapreduce_spark.functions.money import (
     DISC_REV_SUM_2DP_SQL as _DISC_REV_SUM_2DP_SQL,
     DISC_REV_UNITS_SPARK as _DISC_REV_UNITS_EXPR,
     REV_SUM_2DP_SQL as _REV_SUM_2DP_SQL,

@@ -23,10 +23,9 @@ from pyspark.sql import functions as F
 from tf_idf_using_mapreduce_spark.functions.postag import explode_pos_tokens, with_pos_tag
 from tf_idf_using_mapreduce_spark.operators.tfidf import (
     DEFAULT_CORPUS_CONSTANT,
-    SCORE_ROUND,
-    _doc_freq_of,
+    _score_col,
     doc_freq_of,
-    stemmed_tokens_of,
+    term_counts_of,
     tfidf_of,
 )
 from tf_idf_using_mapreduce_spark.sources.corpus import read_text_corpus, read_tsv, write_tsv
@@ -52,23 +51,17 @@ def run_tfidf(spark: SparkSession, input_dir: str, output_dir: str,
               df_tsv: str | None = None, top_n: int = 100,
               corpus_constant: float = DEFAULT_CORPUS_CONSTANT) -> DataFrame:
     """TF-IDF over a text-dir corpus. ``df_tsv`` replays the reference's
-    filesystem handoff (S4/S8: the DF job's TSV as broadcast side input);
-    omitted, the vocabulary is computed in the same DAG (the Spark-native
-    shape — no materialization)."""
+    filesystem handoff (S4/S8: the DF job's TSV as broadcast side input,
+    joined onto the same counts table and scored by the same expression as
+    :func:`tfidf_of`); omitted, the vocabulary is computed in the same DAG
+    (the Spark-native shape — no materialization)."""
     docs = read_text_corpus(spark, input_dir)
     if df_tsv is None:
         out = tfidf_of(docs, top_n=top_n, corpus_constant=corpus_constant)
     else:
         vocab = read_tsv(spark, df_tsv, "term string, df int")
-        stemmed = stemmed_tokens_of(docs).select("doc_id", F.col("stem").alias("term"))
-        tf = (
-            stemmed.join(F.broadcast(vocab), "term")
-            .groupBy("doc_id", "term", "df")
-            .agg(F.count(F.lit(1)).alias("tf"))
+        out = term_counts_of(docs).join(F.broadcast(vocab), "term").select(
+            "doc_id", "term", "tf", _score_col(corpus_constant).alias("score")
         )
-        score = F.round(
-            F.col("tf") * F.log(F.lit(corpus_constant) / (F.col("df") + 1)), SCORE_ROUND
-        )
-        out = tf.select("doc_id", "term", "tf", score.alias("score"))
     write_tsv(out, output_dir)
     return out

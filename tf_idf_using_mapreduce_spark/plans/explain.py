@@ -43,8 +43,3 @@ def analyze(df: DataFrame) -> PlanFacts:
             [c.split(":")[0] for c in m.group(1).split(",") if ":" in c]
         )
     return facts
-
-
-def assert_no_python_in_plan(df: DataFrame) -> None:
-    facts = analyze(df)
-    assert facts.python_evals == 0, f"Python eval in hot path:\n{plan_string(df)[:2000]}"

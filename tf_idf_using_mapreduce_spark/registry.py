@@ -427,14 +427,22 @@ register("events_vacuum_roundtrip", _tt.events_vacuum_roundtrip,
 # round, so they refresh first in r15. Every r9-stale query the r13
 # verdict flagged is FORCE_FRESH-pinned inside this window.
 FORCE_FRESH: frozenset[str] = frozenset({
-    # one connected-components solver (star rounds, then a local
-    # union-find finish) replaces label propagation and the algorithm switch
+    # one document-frequency definition (the counts-table vocabulary) and
+    # one shared BM25/RRF postings front
+    "doc_freq_top100",
+    "bm25_topk",
+    "rrf_fusion_topk",
+    # one MinHash sketch path: the combined (doc_id, sh, s0..s15) table and
+    # the shared band table, plus every query built on dedup_minhash_lsh
+    "dedup_minhash_lsh",
+    "dedup_incremental",
+    "dedup_incremental_persisted",
     "dedup_clusters",
     "dedup_clusters_twostar",
     "dedup_apply",
     "dedup_apply_quality",
-    # the cell-local labeling now calls the shared union-find kernel
-    "semdedup_prune",
+    "split_leakage",
+    "source_dup_matrix",
 })
 
 

@@ -57,12 +57,6 @@ def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE
     return {n: load_table(spark, sf_dir, n) for n in names}
 
 
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
-    """Register the fixture tables as temp views for the ``spark.sql`` surface."""
-    for n in names:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)
-
-
 def read_text_corpus(spark: SparkSession, input_dir: str) -> DataFrame:
     """Reference-layout corpus: a directory of text files, one record per line,
     the enclosing file name as document id (S1+S2). Schema: (doc_id, text)."""
