@@ -8,6 +8,7 @@ import pytest
 
 from tests.conftest import SF_SMOKE, assert_query_matches_oracle
 from tf_idf_using_mapreduce_spark.functions import bpe as B
+from tf_idf_using_mapreduce_spark.functions import text
 from tf_idf_using_mapreduce_spark.operators import bpe as ops
 
 
@@ -23,7 +24,7 @@ def test_committed_merge_table_reproduces_from_fixture_corpus():
     names the divergence instead of 40 downstream hash mismatches."""
     con = duckdb.connect()
     rows = con.sql(
-        f"SELECT word, count(*) FROM (SELECT unnest({B.WORD_TOKENS}) AS word "
+        f"SELECT word, count(*) FROM (SELECT unnest({text.TOKENS}) AS word "
         f"FROM read_parquet('{SF_SMOKE}/documents.parquet')) t GROUP BY word"
     ).fetchall()
     con.close()
@@ -40,7 +41,7 @@ def test_segment_matches_recursive_cte_on_vocab_and_adversarial_words():
     ranks = B.merge_ranks()
     con = duckdb.connect()
     words = [r[0] for r in con.sql(
-        f"SELECT DISTINCT unnest({B.WORD_TOKENS}) AS word "
+        f"SELECT DISTINCT unnest({text.TOKENS}) AS word "
         f"FROM read_parquet('{SF_SMOKE}/documents.parquet')"
     ).fetchall()]
     words += ["aaaa", "erer", "ererer", "x", "scanscan", "partpart",
@@ -79,14 +80,14 @@ def test_token_census_counts_repeated_symbol_per_occurrence(spark):
     rows = {r["token"]: r for r in ops.bpe_token_counts(spark, SF_SMOKE).collect()}
     con = duckdb.connect()
     n_small = con.sql(
-        f"SELECT count(*) FROM (SELECT unnest({B.WORD_TOKENS}) AS w FROM "
+        f"SELECT count(*) FROM (SELECT unnest({text.TOKENS}) AS w FROM "
         f"read_parquet('{SF_SMOKE}/documents.parquet')) t WHERE w = 'small'"
     ).fetchone()[0]
     con.close()
     # 'l' appears ONLY in 'small' and 'table'/'value'/'filter'? — derive the
     # exact expectation from the dictionary instead of guessing
     words = [r[0] for r in duckdb.sql(
-        f"SELECT w FROM (SELECT unnest({B.WORD_TOKENS}) AS w FROM "
+        f"SELECT w FROM (SELECT unnest({text.TOKENS}) AS w FROM "
         f"read_parquet('{SF_SMOKE}/documents.parquet')) t GROUP BY w"
     ).fetchall()]
     per_word = {w: B.bpe_segment(w, ranks).count("l") for w in words}
@@ -109,7 +110,7 @@ def test_bpe_packing_expands_sequence_count(spark):
     # conservation: every subword token lands in exactly one sequence
     con = duckdb.connect()
     total = con.sql(
-        f"WITH RECURSIVE w AS (SELECT unnest({B.WORD_TOKENS}) AS word FROM "
+        f"WITH RECURSIVE w AS (SELECT unnest({text.TOKENS}) AS word FROM "
         f"read_parquet('{SF_SMOKE}/documents.parquet')), "
         f"wc AS (SELECT DISTINCT word FROM w), {B.bpe_seg_ctes()} "
         f"SELECT sum(len(f.syms)) FROM w JOIN bpe_final f USING (word)"

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE, assert_query_matches_oracle
+from tf_idf_using_mapreduce_spark.functions import text
 from tf_idf_using_mapreduce_spark.operators import packing as pk
 from tf_idf_using_mapreduce_spark.sources.corpus import load_table
 
@@ -21,7 +22,7 @@ def test_chunks_conserve_tokens(spark):
     last is exactly CHUNK_LEN tokens."""
     total = (
         load_table(spark, SF_SMOKE, "documents")
-        .select(F.expr(f"size({pk._TOKENS})").alias("n"))
+        .select(F.expr(f"size({text.TOKENS})").alias("n"))
         .agg(F.sum("n")).collect()[0][0]
     )
     chunks = pk.doc_chunks(spark, SF_SMOKE)
@@ -37,7 +38,7 @@ def test_pack_conserves_and_fills(spark):
     contract)."""
     total = (
         load_table(spark, SF_SMOKE, "documents")
-        .select(F.expr(f"size({pk._TOKENS})").alias("n"))
+        .select(F.expr(f"size({text.TOKENS})").alias("n"))
         .agg(F.sum("n")).collect()[0][0]
     )
     rows = pk.pack_sequences(spark, SF_SMOKE).orderBy("seq_id").collect()

@@ -78,19 +78,6 @@ def test_spark_expression_matches_python(spark):
     assert not bad, bad
 
 
-def test_spark_udf_matches_expression(spark):
-    from tf_idf_using_mapreduce_spark.functions.porter import porter_stem_udf
-
-    words = sorted(KNOWN)
-    df = spark.createDataFrame([(w,) for w in words], "token string")
-    expr_rows = {r["token"]: r["stem"] for r in with_stem(df, "token").collect()}
-    udf_rows = {
-        r["token"]: r["stem"]
-        for r in df.select("token", porter_stem_udf()("token").alias("stem")).collect()
-    }
-    assert expr_rows == udf_rows
-
-
 # --------------------------------------------------------------------------- #
 # OpenNLP parity table (VERDICT r1 item 5; SURVEY §7.3 commitment).
 #

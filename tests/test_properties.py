@@ -12,7 +12,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from tf_idf_using_mapreduce_spark.functions.porter import porter_stem_py
-from tf_idf_using_mapreduce_spark.functions.text import TOKENIZE_SQL
+from tf_idf_using_mapreduce_spark.functions.text import TOKENIZE_SQL, TOKENS
 
 text_strategy = st.text(
     alphabet=st.characters(codec="ascii", exclude_characters="'\\"),
@@ -29,6 +29,21 @@ def test_tokenizer_yields_only_nonempty_alpha(text):
     assert all(t and re.fullmatch(r"[a-z]+", t) for t in toks)
     # tokens reconstruct exactly the lowercase letter runs of the input
     assert toks == re.findall(r"[a-z]+", text.lower())
+
+
+def test_spark_tokens_match_python(spark):
+    """TOKENS on Spark splits exactly like Python's [a-z]+ over lowercased
+    text, on the dialect fuzz's edge texts; NULL text stays NULL."""
+    from pyspark.sql import functions as F
+
+    from tests.test_fuzz_dialect import _EDGE_TEXTS
+
+    texts = _EDGE_TEXTS + [None]
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    got = {r["i"]: r["t"] for r in df.select("i", F.expr(TOKENS).alias("t")).collect()}
+    for i, text in enumerate(texts):
+        want = None if text is None else re.findall(r"[a-z]+", text.lower())
+        assert got[i] == want, text
 
 
 @settings(max_examples=60, deadline=None)

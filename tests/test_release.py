@@ -217,7 +217,7 @@ def test_mixture_plan_bpe_budgets_in_subword_tokens(spark):
     IDENTICAL to the word plan's (weights depend on MIXTURE_TARGETS and
     the source set, not the token basis) while the sample rates re-rank
     wherever per-source fertility differs."""
-    from tf_idf_using_mapreduce_spark.functions.bpe import WORD_TOKENS
+    from tf_idf_using_mapreduce_spark.functions import text
     from tf_idf_using_mapreduce_spark.operators import release as rel
     from tf_idf_using_mapreduce_spark.operators.bpe import bpe_doc_counts_of
     from tf_idf_using_mapreduce_spark.sources.corpus import load_table
@@ -227,7 +227,7 @@ def test_mixture_plan_bpe_budgets_in_subword_tokens(spark):
     word = {r["source"]: r for r in rel.mixture_plan(spark, SF_SMOKE).collect()}
     assert set(bpe) == set(word) and bpe
     docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text", "source")
-    words = docs.select("doc_id", "source", F.explode(F.expr(WORD_TOKENS)).alias("word"))
+    words = docs.select("doc_id", "source", F.explode(F.expr(text.TOKENS)).alias("word"))
     per_doc = bpe_doc_counts_of(words.select("doc_id", "word"))
     expect = {
         r["source"]: r["t"]

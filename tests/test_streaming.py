@@ -105,6 +105,48 @@ def test_stream_parquet_sink_exactly_once(spark, tmp_path):
     assert spark.read.parquet(out).count() == 1000
 
 
+def test_stream_runners_restore_shuffle_partitions(spark, tmp_path):
+    """Each runner pins spark.sql.shuffle.partitions to STATE_PARTITIONS
+    while its stream runs and restores the caller's value afterwards — on
+    the normal path and when a foreachBatch function raises."""
+    from pyspark.errors import StreamingQueryException
+
+    key = "spark.sql.shuffle.partitions"
+    nodata_key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    src = str(tmp_path / "src")
+    spark.range(6).selectExpr("id", "id % 2 AS k").write.parquet(src)
+
+    def stream():
+        return spark.readStream.schema("id long, k long").parquet(src)
+
+    seen = []
+
+    def record(batch_df, batch_id):
+        seen.append(batch_df.sparkSession.conf.get(key))
+
+    def fail(batch_df, batch_id):
+        raise RuntimeError("batch failed")
+
+    before, before_nodata = spark.conf.get(key), spark.conf.get(nodata_key)
+    pinned = str(se.STATE_PARTITIONS + 1)
+    spark.conf.set(key, pinned)
+    try:
+        se.run_stream_to_memory(stream(), "restore_probe", output_mode="append")
+        assert spark.conf.get(key) == pinned
+        assert spark.conf.get(nodata_key) == before_nodata
+        assert spark.table("restore_probe").count() == 6
+        se.run_stream_to_partitioned_sink(stream(), str(tmp_path / "sink"), ["k"])
+        assert spark.conf.get(key) == pinned
+        se.run_stream_foreach_batch(stream(), record, str(tmp_path / "ck_ok"))
+        assert spark.conf.get(key) == pinned
+        assert seen and set(seen) == {str(se.STATE_PARTITIONS)}
+        with pytest.raises(StreamingQueryException, match="batch failed"):
+            se.run_stream_foreach_batch(stream(), fail, str(tmp_path / "ck_fail"))
+        assert spark.conf.get(key) == pinned
+    finally:
+        spark.conf.set(key, before)
+
+
 def test_stream_stream_interval_join_matches_batch(spark):
     assert_query_matches_oracle(spark, "events_stream_stream_join")
 

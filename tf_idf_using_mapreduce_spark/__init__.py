@@ -6,8 +6,10 @@ and training-data-pipeline extensions described in SURVEY.md.
 Design stance (SURVEY.md §7.0): every public operator is a composable
 ``DataFrame -> DataFrame`` function; expressions stay JVM-side (built-in
 ``pyspark.sql.functions`` / ``F.expr``) wherever possible so Catalyst/Tungsten
-optimize and codegen them; Python UDFs exist only as documented pluggable slow
-paths (e.g. an external stemmer/POS model), never in the default hot path.
+optimize and codegen them; Arrow-batched Python (``pandas_udf``,
+``mapInPandas``, ``applyInPandas``) runs only where SQL has no expression for
+the work (e.g. Unicode NFC, media decoding, the union-find finish), never in
+the tokenize/stem/TF-IDF path.
 """
 
 from tf_idf_using_mapreduce_spark.session import get_spark

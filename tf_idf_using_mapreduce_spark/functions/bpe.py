@@ -52,10 +52,6 @@ _RESOURCE_DIR = os.path.join(
 )
 BPE_MERGES_PATH = os.path.join(_RESOURCE_DIR, "bpe_merges.txt")
 
-# both dialects verbatim — the engine-wide word-token convention
-WORD_TOKENS = "regexp_extract_all(lower(text), '([a-z]+)', 1)"
-
-
 def train_bpe(word_counts: dict[str, int], n_merges: int = N_MERGES,
               min_count: int = MIN_PAIR_COUNT) -> list[tuple[str, str]]:
     """Learn an ordered merge table from a weighted word vocabulary — the

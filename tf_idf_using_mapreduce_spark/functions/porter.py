@@ -9,7 +9,7 @@ Program 14(3) 1980), three ways from ONE rule table:
    only ``translate/replace/substr/length/right/instr/concat(||)/greatest/CASE``
    — no regexp backreferences (``$1`` vs ``\\1`` differ), no regexp 'g' flags
    (Spark is global-by-default, DuckDB is not).
-3. ``stem_column(col)`` / ``stem_sql_ctes(...)`` — Spark Column / oracle-SQL
+3. ``with_stem(df)`` / ``stem_sql_select(...)`` — Spark DataFrame / oracle-SQL
    assemblies of (2).
 
 Reference parity: the reference stems with OpenNLP ``PorterStemmer``
@@ -21,15 +21,10 @@ The vowel/consonant classifier treats 'y' per the paper (consonant at word
 start or after a vowel, vowel after a consonant); the SQL version encodes this
 with a sentinel-vowel prepend + pair replace, exact except for 'yy' runs
 (nonexistent in English).
-
-A ``pandas_udf`` wrapper (``porter_stem_udf``) is provided as the pluggable
-slow path for swapping in an external stemmer; the engine default is the
-expression form.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -379,19 +374,3 @@ def stem_sql_select(inner_select: str, token_col: str = "token", extra_cols: str
         acc.append(name)
     return f"SELECT {carried}, stem FROM {sql} pfinal"
 
-
-# --------------------------------------------------------------------------- #
-# Pluggable slow path (Arrow-batched; NOT used by default)
-# --------------------------------------------------------------------------- #
-
-def porter_stem_udf():
-    """Arrow-batched Porter stem ``pandas_udf`` — the extension point for
-    swapping in an external stemmer library. The engine default is the
-    expression form (:func:`with_stem`), which stays in whole-stage codegen.
-    Built lazily because ``pandas_udf`` needs an active SparkSession.
-    """
-
-    def _stem(tokens: pd.Series) -> pd.Series:
-        return tokens.map(porter_stem_py)
-
-    return F.pandas_udf(_stem, "string")

@@ -6,7 +6,11 @@ and splits on ``[^\\w']+`` (P3, ``DocumentFreq.java:63``). Post-P2 that is
 equivalent to extracting maximal ``[a-z]+`` runs, which is what the engine's
 canonical tokenizer does — in ONE portable expression usable verbatim by both
 Spark SQL and the DuckDB oracle (``regexp_extract_all`` with an explicit group
-index, the only form both dialects share).
+index, the only form both dialects share). ``TOKENIZE_SQL`` takes the text
+column; ``TOKENS`` is it applied to ``text``, the string every operator and
+oracle in the engine pastes into its expressions. ``word_bigrams`` is the
+Spark-side adjacent-pair expression over such a token array (the oracles
+spell bigrams with DuckDB's ``list_transform``).
 
 Documented divergence: the reference *first* deletes non-letters then splits,
 so ``"ab1cd"`` glues to one token ``abcd``; the canonical extractor yields
@@ -19,22 +23,38 @@ Catalyst folds the 355-literal list into an efficient predicate.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from tf_idf_using_mapreduce_spark.sources.corpus import stopwords, stopwords_sql_list
 
 # One portable tokenizer expression: maximal lowercase-letter runs.
 TOKENIZE_SQL = "regexp_extract_all(lower({col}), '([a-z]+)', 1)"
+TOKENS = TOKENIZE_SQL.format(col="text")
+
+
+def word_bigrams(col: str) -> Column:
+    """array<struct<w1, w2>> of adjacent pairs of the token array ``col``.
+
+    CASE-guarded (total) like the shingle expressions: Catalyst CSE can
+    evaluate this inside a reordered Filter predicate, where a <2-token doc
+    would hit sequence()'s descending branch and ``col[i]`` would raise
+    under ANSI (pinned by tests/test_fuzz_dialect.py's short documents)."""
+    return F.expr(
+        f"CASE WHEN size({col}) >= 2 THEN "
+        f"transform(sequence(0, size({col}) - 2), i -> named_struct('w1', {col}[i], 'w2', {col}[i+1])) "
+        "ELSE array() END"
+    )
 
 
 def explode_tokens(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                    case_sensitive: bool = False) -> DataFrame:
     """(id, token) rows. ``case_sensitive`` mirrors the reference's
     ``-casesensitive`` flag (P1; lowercasing is the default)."""
-    pat = "([a-zA-Z]+)" if case_sensitive else "([a-z]+)"
-    src = text_col if case_sensitive else f"lower({text_col})"
-    arr = F.expr(f"regexp_extract_all({src}, '{pat}', 1)")
+    arr = F.expr(
+        f"regexp_extract_all({text_col}, '([a-zA-Z]+)', 1)" if case_sensitive
+        else TOKENIZE_SQL.format(col=text_col)
+    )
     return df.select(F.col(id_col), F.explode(arr).alias("token"))
 
 

@@ -32,11 +32,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tf_idf_using_mapreduce_spark.functions.bpe import (
-    WORD_TOKENS,
     bpe_seg_ctes,
     bpe_segment,
     merge_ranks,
 )
+from tf_idf_using_mapreduce_spark.functions.text import TOKENS
 from tf_idf_using_mapreduce_spark.operators.packing import (
     MAX_SEQ,
     _prefix_partitions,
@@ -49,7 +49,7 @@ from tf_idf_using_mapreduce_spark.sources.corpus import load_table, spread
 def _word_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, word) — the engine-wide word-token basis, exploded. Map-only."""
     docs = spread(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
-    return docs.select("doc_id", F.explode(F.expr(WORD_TOKENS)).alias("word"))
+    return docs.select("doc_id", F.explode(F.expr(TOKENS)).alias("word"))
 
 
 def _word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -109,7 +109,7 @@ def bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bpe_token_counts_oracle() -> str:
     return f"""
 WITH RECURSIVE allw AS (
-  SELECT unnest({WORD_TOKENS}) AS word FROM documents
+  SELECT unnest({TOKENS}) AS word FROM documents
 ),
 awc AS (SELECT word, count(*) AS n FROM allw GROUP BY word),
 wc AS (SELECT word FROM awc),
@@ -145,7 +145,7 @@ def pack_sequences_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     (here ~2.7 subwords/word). Same two-phase distributed prefix sum, same
     bin expansion — only the count basis differs."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    words = docs.select("doc_id", F.explode(F.expr(WORD_TOKENS)).alias("word"))
+    words = docs.select("doc_id", F.explode(F.expr(TOKENS)).alias("word"))
     counts = bpe_doc_counts_of(words)
     return pack_bins_of(offsets_from_counts(counts, _prefix_partitions(docs)))
 
@@ -153,7 +153,7 @@ def pack_sequences_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pack_sequences_bpe_oracle() -> str:
     return f"""
 WITH RECURSIVE w AS (
-  SELECT doc_id, unnest({WORD_TOKENS}) AS word FROM documents
+  SELECT doc_id, unnest({TOKENS}) AS word FROM documents
 ),
 wc AS (SELECT DISTINCT word FROM w),
 {bpe_seg_ctes()},
@@ -219,7 +219,7 @@ def bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bpe_fertility_oracle() -> str:
     return f"""
 WITH RECURSIVE allw AS (
-  SELECT unnest({WORD_TOKENS}) AS word FROM documents
+  SELECT unnest({TOKENS}) AS word FROM documents
 ),
 awc AS (SELECT word, count(*) AS n FROM allw GROUP BY word),
 wc AS (SELECT word FROM awc),
@@ -254,7 +254,7 @@ def bpe_source_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines — the r11-advice contract)."""
     docs = spread(load_table(spark, sf_dir, "documents").select("source", "text"))
     swc = (
-        docs.select("source", F.explode(F.expr(WORD_TOKENS)).alias("word"))
+        docs.select("source", F.explode(F.expr(TOKENS)).alias("word"))
         .groupBy("source", "word")
         .agg(F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=False)
@@ -279,7 +279,7 @@ def bpe_source_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bpe_source_fertility_oracle() -> str:
     return f"""
 WITH RECURSIVE sw AS (
-  SELECT source, unnest({WORD_TOKENS}) AS word FROM documents
+  SELECT source, unnest({TOKENS}) AS word FROM documents
 ),
 swc AS (SELECT source, word, count(*) AS n FROM sw GROUP BY source, word),
 wc AS (SELECT DISTINCT word FROM swc),

@@ -31,6 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from tf_idf_using_mapreduce_spark.functions.text import TOKENS
 from tf_idf_using_mapreduce_spark.operators.textstats import (
     GRAM_K,
     SPLIT_PCTS,
@@ -48,7 +49,6 @@ CONTAM_FP_CAP = 16
 VOCAB_V = 10          # small so the closed-vocabulary fixture has real OOV
 REPETITION_MAX = 0.3  # Gopher-style duplicate-trigram cutoff
 
-_TOKENS = "regexp_extract_all(lower(text), '([a-z]+)', 1)"  # both dialects
 
 
 # --------------------------------------------------------------------------- #
@@ -238,7 +238,7 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-map key probe (``map_contains_key``), not a linear ``array_contains``
     scan, so per-token cost stays O(1) at a production V≈50k vocabulary."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tokens = docs.select("doc_id", F.expr(_TOKENS).alias("toks"))
+    tokens = docs.select("doc_id", F.expr(TOKENS).alias("toks"))
     vocab = (
         tokens.select(F.explode("toks").alias("token"))
         .groupBy("token")
@@ -269,7 +269,7 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 VOCAB_COVERAGE_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '([a-z]+)', 1) AS toks
+  SELECT doc_id, {TOKENS} AS toks
   FROM documents
 ),
 freq AS (
@@ -312,7 +312,7 @@ def doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         "element_at(toks, i + 2))) ELSE array() END"
     )
     return (
-        docs.select("doc_id", F.expr(_TOKENS).alias("toks"))
+        docs.select("doc_id", F.expr(TOKENS).alias("toks"))
         .where(F.expr("size(toks) >= 3"))
         .select("doc_id", F.expr(tris).alias("tris"))
         .select(
@@ -334,7 +334,7 @@ def doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DOC_REPETITION_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '([a-z]+)', 1) AS toks
+  SELECT doc_id, {TOKENS} AS toks
   FROM documents
 ),
 tris AS (
@@ -395,7 +395,7 @@ def curation_decide(docs: DataFrame) -> DataFrame:
     stop = f"cast(size(filter(toks, t -> array_contains(array({stops_arr}), t))) as double) / greatest({n_tok}, 1)"
     case = _curation_case(n_tok, f"({dup})", f"({stop})")
     return (
-        docs.select("doc_id", F.expr(_TOKENS).alias("toks"))
+        docs.select("doc_id", F.expr(TOKENS).alias("toks"))
         .select("doc_id", "toks", F.expr(tris).alias("tris"))
         .select(
             "doc_id",
@@ -428,7 +428,7 @@ def curation_filter_oracle() -> str:
     case = _curation_case(n_tok, f"({dup})", f"({stop})")
     return f"""
 WITH toks AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '([a-z]+)', 1) AS toks
+  SELECT doc_id, {TOKENS} AS toks
   FROM documents
 ),
 tri AS (
@@ -460,7 +460,7 @@ def source_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle."""
     docs = load_table(spark, sf_dir, "documents").select("source", "text")
     agg = (
-        docs.select("source", F.expr(f"size({_TOKENS})").alias("nt"))
+        docs.select("source", F.expr(f"size({TOKENS})").alias("nt"))
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("nt").alias("n_tokens"))
     )
@@ -476,7 +476,7 @@ def source_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 SOURCE_MIXTURE_ORACLE = f"""
 WITH per AS (
   SELECT source, count(*) AS n_docs,
-         sum(len(regexp_extract_all(lower(text), '([a-z]+)', 1))) AS n_tokens
+         sum(len({TOKENS})) AS n_tokens
   FROM documents GROUP BY source
 )
 SELECT source, n_docs, CAST(n_tokens AS BIGINT) AS n_tokens,

@@ -47,6 +47,7 @@ from tf_idf_using_mapreduce_spark.functions.hashing import (
     simhash_int_expr,
     simhash_vote_exprs,
 )
+from tf_idf_using_mapreduce_spark.functions.text import TOKENS
 from tf_idf_using_mapreduce_spark.sources.corpus import load_table, spread
 
 SHINGLE_K = 3           # word trigrams
@@ -122,7 +123,7 @@ def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents").select("doc_id", "text"),
         bytes_per_partition=128 * 1024,
     )
-    toks = docs.withColumn("t", F.expr("regexp_extract_all(lower(text), '([a-z]+)', 1)"))
+    toks = docs.withColumn("t", F.expr(TOKENS))
     # The expression is TOTAL (CASE-guarded), not merely filter-protected:
     # Catalyst's subexpression elimination can hoist it into a Filter
     # predicate where conjunct order is not guaranteed, so a short document
@@ -160,7 +161,7 @@ SELECT DISTINCT doc_id, shingle FROM (
   SELECT doc_id,
          unnest(list_transform(range(1, len(t) - {SHINGLE_K - 2}),
                                i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-  FROM (SELECT doc_id, regexp_extract_all(lower(text), '([a-z]+)', 1) AS t FROM documents) dtoks
+  FROM (SELECT doc_id, {TOKENS} AS t FROM documents) dtoks
   WHERE len(t) >= {SHINGLE_K}
 ) shx
 """
@@ -523,7 +524,7 @@ def _positional_shingles(spark: SparkSession, sf_dir: str, w: int = SUBSTR_W) ->
         load_table(spark, sf_dir, "documents").select("doc_id", "text"),
         bytes_per_partition=128 * 1024,
     )
-    toks = docs.withColumn("t", F.expr("regexp_extract_all(lower(text), '([a-z]+)', 1)"))
+    toks = docs.withColumn("t", F.expr(TOKENS))
     ps = (
         f"CASE WHEN size(t) >= {w} THEN "
         f"transform(sequence(0, size(t) - {w}), "
@@ -613,7 +614,7 @@ def dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the match set is DISTINCT pairs exactly like the array_distinct expansion
 DEDUP_SUBSTRING_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '([a-z]+)', 1) AS t
+  SELECT doc_id, {TOKENS} AS t
   FROM documents
 ),
 ex0 AS (
@@ -677,7 +678,7 @@ def dedup_substring_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.expr("array_distinct(collect_list(s))").alias("sp"))
     )
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = docs.withColumn("t", F.expr("regexp_extract_all(lower(text), '([a-z]+)', 1)"))
+    toks = docs.withColumn("t", F.expr(TOKENS))
     # 0-based lambda index i matches the span positions; unaffected docs
     # (sp IS NULL after the left join) keep their token stream whole
     kept = (
@@ -719,7 +720,7 @@ rem AS (
   GROUP BY doc_id
 ),
 toks AS (
-  SELECT doc_id, text, regexp_extract_all(lower(text), '([a-z]+)', 1) AS t
+  SELECT doc_id, text, {TOKENS} AS t
   FROM documents
 )
 SELECT t.doc_id,
@@ -763,7 +764,7 @@ def substring_boilerplate_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents").select("doc_id", "text"),
         bytes_per_partition=128 * 1024,
     )
-    toks = docs.withColumn("t", F.expr("regexp_extract_all(lower(text), '([a-z]+)', 1)"))
+    toks = docs.withColumn("t", F.expr(TOKENS))
     ws = (
         f"CASE WHEN size(t) >= {SUBSTR_W} THEN "
         f"transform(sequence(0, size(t) - {SUBSTR_W}), "
@@ -790,7 +791,7 @@ def substring_boilerplate_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SUBSTRING_BOILERPLATE_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '([a-z]+)', 1) AS t
+  SELECT doc_id, {TOKENS} AS t
   FROM documents
 ),
 ex AS (
@@ -870,7 +871,7 @@ def dedup_substring_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DEDUP_SUBSTRING_INCR_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '([a-z]+)', 1) AS t
+  SELECT doc_id, {TOKENS} AS t
   FROM documents
 ),
 ex0 AS (
@@ -1202,7 +1203,7 @@ def simhash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
     toks = docs.select(
         "doc_id",
-        F.explode(F.expr("regexp_extract_all(lower(text), '([a-z]+)', 1)")).alias("token"),
+        F.explode(F.expr(TOKENS)).alias("token"),
     )
     vote_dict = (
         toks.select("token").distinct()
@@ -1291,7 +1292,7 @@ def _simhash_oracle_table() -> str:
     return f"""
 toks AS (
   SELECT doc_id, md5(token) AS h FROM (
-    SELECT doc_id, unnest(regexp_extract_all(lower(text), '([a-z]+)', 1)) AS token
+    SELECT doc_id, unnest({TOKENS}) AS token
     FROM documents
   ) simtoks
 ),

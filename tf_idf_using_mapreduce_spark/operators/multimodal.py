@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tf_idf_using_mapreduce_spark.functions.text import TOKENS
 from tf_idf_using_mapreduce_spark.sources.corpus import load_table, spread
 
 N_FAKE_FEATURES = 4
@@ -483,7 +484,7 @@ def _payload_frame(docs: DataFrame, min_bytes: int) -> DataFrame:
     modality behind; the SQL twin is :func:`_letters_cps_cte`."""
     return docs.select(
         "doc_id",
-        F.expr("cast(concat_ws('', regexp_extract_all(lower(text), '([a-z]+)', 1)) as binary)")
+        F.expr(f"cast(concat_ws('', {TOKENS}) as binary)")
         .alias("payload"),
     ).where(F.expr(f"octet_length(payload) >= {min_bytes}"))
 
@@ -494,7 +495,7 @@ def _letters_cps_cte(min_bytes: int) -> str:
     bytes (pure [a-z]). Shared prefix of every modality oracle."""
     return f"""letters AS (
   SELECT doc_id,
-         array_to_string(regexp_extract_all(lower(text), '([a-z]+)', 1), '') AS ls
+         array_to_string({TOKENS}, '') AS ls
   FROM documents
 ),
 cps AS (

@@ -23,9 +23,9 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from tf_idf_using_mapreduce_spark.functions.text import TOKENS
 from tf_idf_using_mapreduce_spark.sources.corpus import _file_split_stats, load_table
 
-_TOKENS = "regexp_extract_all(lower(text), '([a-z]+)', 1)"  # both dialects
 
 CHUNK_LEN = 50    # tokens per document chunk (stand-in for context length)
 MAX_SEQ = 256     # tokens per packed training sequence
@@ -120,7 +120,7 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     k = CHUNK_LEN
     return (
-        docs.select("doc_id", F.expr(_TOKENS).alias("toks"))
+        docs.select("doc_id", F.expr(TOKENS).alias("toks"))
         .select(
             "doc_id",
             "toks",
@@ -143,7 +143,7 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DOC_CHUNKS_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, {_TOKENS} AS toks FROM documents
+  SELECT doc_id, {TOKENS} AS toks FROM documents
 ),
 ix AS (
   SELECT doc_id, toks,
@@ -199,7 +199,7 @@ def token_offsets_of(docs: DataFrame,
     if n_partitions is None:
         n_partitions = _prefix_partitions(docs)
     return offsets_from_counts(
-        docs.select("doc_id", F.expr(f"size({_TOKENS})").alias("n")), n_partitions
+        docs.select("doc_id", F.expr(f"size({TOKENS})").alias("n")), n_partitions
     )
 
 
@@ -242,7 +242,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PACK_SEQUENCES_ORACLE = f"""
 WITH counts AS (
-  SELECT doc_id, len({_TOKENS}) AS n FROM documents
+  SELECT doc_id, len({TOKENS}) AS n FROM documents
 ),
 spans AS (
   SELECT doc_id, n,
@@ -365,7 +365,7 @@ def length_bucket_batches_df(docs: DataFrame,
     can wobble under aggregation order."""
     if n_shards is None:
         n_shards = _derive_shard_count(_input_bytes(docs), BATCH_SHARDS)
-    n = f"size({_TOKENS})"
+    n = f"size({TOKENS})"
     shard = (
         f"cast(conv(substr(md5(cast(doc_id as string)), 1, 8), 16, 10) as bigint)"
         f" % {n_shards}"
@@ -412,12 +412,12 @@ def length_bucket_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 LENGTH_BUCKET_BATCHES_ORACLE = f"""
 WITH base AS (
-  SELECT doc_id, len({_TOKENS}) AS n_tokens,
+  SELECT doc_id, len({TOKENS}) AS n_tokens,
          CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
            % {BATCH_SHARDS} AS shard,
-         CAST(floor(len({_TOKENS}) / {BUCKET_WIDTH}) AS BIGINT) AS bucket_id
+         CAST(floor(len({TOKENS}) / {BUCKET_WIDTH}) AS BIGINT) AS bucket_id
   FROM documents
-  WHERE len({_TOKENS}) > 0
+  WHERE len({TOKENS}) > 0
 ),
 ranked AS (
   SELECT *, row_number() OVER (PARTITION BY bucket_id, shard
@@ -452,7 +452,7 @@ def doc_chunk_dedup_df(docs: DataFrame) -> DataFrame:
         "ELSE array() END"
     )
     return (
-        docs.select("doc_id", F.expr(_TOKENS).alias("toks"))
+        docs.select("doc_id", F.expr(TOKENS).alias("toks"))
         .select("doc_id", F.expr(chunks).alias("chunks"))
         .select(
             "doc_id",
@@ -487,7 +487,7 @@ def doc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DOC_CHUNK_DEDUP_ORACLE = f"""
-WITH toks AS (SELECT doc_id, text, {_TOKENS} AS toks FROM documents),
+WITH toks AS (SELECT doc_id, text, {TOKENS} AS toks FROM documents),
 -- DISTINCT before unnest: two IDENTICAL (doc_id, text) rows must not
 -- double every chunk inside their shared agg group (the fan-back join
 -- below restores the row multiplicity)

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tf_idf_using_mapreduce_spark.functions.text import TOKENS
 from tf_idf_using_mapreduce_spark.operators.curation import (
     curation_decide,
     curation_filter_oracle,
@@ -26,7 +27,6 @@ from tf_idf_using_mapreduce_spark.operators.curation import (
     mixture_sample_df,
 )
 from tf_idf_using_mapreduce_spark.operators.packing import (
-    _TOKENS,
     MAX_SEQ,
     pack_sequences_of,
 )
@@ -78,7 +78,7 @@ kd AS (SELECT d.doc_id, d.text FROM documents d JOIN kept USING (doc_id)),
 surv AS (SELECT min(doc_id) AS doc_id FROM kd GROUP BY md5(text)),
 mixed AS (SELECT mx.doc_id FROM ({MIXTURE_SAMPLE_ORACLE}) mx JOIN surv USING (doc_id)),
 corpus AS (SELECT d.doc_id, d.text FROM documents d JOIN mixed USING (doc_id)),
-counts AS (SELECT doc_id, len({_TOKENS}) AS n FROM corpus),
+counts AS (SELECT doc_id, len({TOKENS}) AS n FROM corpus),
 spans AS (
   SELECT doc_id, n,
          CAST(coalesce(sum(n) OVER (ORDER BY doc_id
@@ -173,7 +173,7 @@ def pretraining_manifest(spark: SparkSession, sf_dir: str,
         scrubbed.select("doc_id"), n_shards=n_shards
     ).select("doc_id", "shard")
     return (
-        scrubbed.select("doc_id", F.expr(f"size({_TOKENS})").alias("n"))
+        scrubbed.select("doc_id", F.expr(f"size({TOKENS})").alias("n"))
         .join(sharded, "doc_id")
         .groupBy("shard")
         .agg(
@@ -208,7 +208,7 @@ sharded AS (
 )
 SELECT shard,
        CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(len({_TOKENS})) AS BIGINT) AS n_tokens,
+       CAST(sum(len({TOKENS})) AS BIGINT) AS n_tokens,
        CAST({SHUFFLE_SHARDS} AS BIGINT) AS n_shards
 FROM scrubbed JOIN sharded USING (doc_id)
 GROUP BY shard

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tf_idf_using_mapreduce_spark.functions.text import TOKENS
 from tf_idf_using_mapreduce_spark.operators.curation import (
     PII_DIGITRUN,
     PII_EMAIL,
@@ -35,7 +36,6 @@ from tf_idf_using_mapreduce_spark.operators.curation import (
 )
 from tf_idf_using_mapreduce_spark.sources.corpus import load_table
 
-_TOKENS = "regexp_extract_all(lower(text), '([a-z]+)', 1)"
 
 # content-hash split: bucket = md5('split:' || text) % 100. Salted so the
 # split hash is independent of every other content hash in the engine
@@ -338,7 +338,7 @@ def mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     per = (
         docs.groupBy("source").agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.expr(f"size({_TOKENS})")).alias("n_tokens"),
+            F.sum(F.expr(f"size({TOKENS})")).alias("n_tokens"),
         )
         # a token-less source cannot supply tokens at ANY rate: excluded
         # from the plan rather than dividing by zero (NULL-token sums —
@@ -432,9 +432,9 @@ def mixture_plan_oracle() -> str:
     return f"""
 WITH per AS (
   SELECT source, count(*) AS n_docs,
-         CAST(sum(len({_TOKENS})) AS BIGINT) AS n_tokens
+         CAST(sum(len({TOKENS})) AS BIGINT) AS n_tokens
   FROM documents GROUP BY source
-  HAVING sum(len({_TOKENS})) > 0
+  HAVING sum(len({TOKENS})) > 0
 ),
 {_mixture_tail_sql()}
 """
@@ -457,12 +457,11 @@ def mixture_plan_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized). Documents with no words contribute no tokens but still
     count in n_docs, via a second aggregate over a source-column-only scan
     (column pruning makes it footer-cheap)."""
-    from tf_idf_using_mapreduce_spark.functions.bpe import WORD_TOKENS
     from tf_idf_using_mapreduce_spark.operators.bpe import bpe_dictionary_of
 
     docs = load_table(spark, sf_dir, "documents")
     swc = (
-        docs.select("source", F.explode(F.expr(WORD_TOKENS)).alias("word"))
+        docs.select("source", F.explode(F.expr(TOKENS)).alias("word"))
         .groupBy("source", "word")
         .agg(F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=False)
@@ -492,11 +491,11 @@ def mixture_plan_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def mixture_plan_bpe_oracle() -> str:
-    from tf_idf_using_mapreduce_spark.functions.bpe import WORD_TOKENS, bpe_seg_ctes
+    from tf_idf_using_mapreduce_spark.functions.bpe import bpe_seg_ctes
 
     return f"""
 WITH RECURSIVE w AS (
-  SELECT doc_id, source, unnest({WORD_TOKENS}) AS word FROM documents
+  SELECT doc_id, source, unnest({TOKENS}) AS word FROM documents
 ),
 wc AS (SELECT DISTINCT word FROM w),
 {bpe_seg_ctes()},
@@ -539,7 +538,7 @@ def mixture_plan_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     per = (
         kept.groupBy("source").agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.expr(f"size({_TOKENS})")).alias("n_tokens"),
+            F.sum(F.expr(f"size({TOKENS})")).alias("n_tokens"),
         )
         .where(F.col("n_tokens") > 0)
     )
@@ -552,9 +551,9 @@ WITH surv AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
 kept AS (SELECT d.doc_id, d.text, d.source FROM documents d JOIN surv USING (doc_id)),
 per AS (
   SELECT source, count(*) AS n_docs,
-         CAST(sum(len({_TOKENS})) AS BIGINT) AS n_tokens
+         CAST(sum(len({TOKENS})) AS BIGINT) AS n_tokens
   FROM kept GROUP BY source
-  HAVING sum(len({_TOKENS})) > 0
+  HAVING sum(len({TOKENS})) > 0
 ),
 {_mixture_tail_sql()}
 """
@@ -593,7 +592,7 @@ def release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     final = docs.join(survivors, "doc_id").localCheckpoint(eager=False)
     assigned = split_assignment_df(final.select("doc_id", "text")).select("doc_id", "split")
     return (
-        final.select("doc_id", "source", F.expr(f"size({_TOKENS})").alias("n_tok"))
+        final.select("doc_id", "source", F.expr(f"size({TOKENS})").alias("n_tok"))
         .join(assigned, "doc_id")
         .groupBy("split", "source")
         .agg(
@@ -621,7 +620,7 @@ assigned AS (
 )
 SELECT a.split, f.source,
        CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(len({_TOKENS})) AS BIGINT) AS n_tokens
+       CAST(sum(len({TOKENS})) AS BIGINT) AS n_tokens
 FROM final f JOIN assigned a USING (doc_id)
 GROUP BY a.split, f.source
 """
@@ -657,7 +656,7 @@ def dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(h_counts, "h", "left")
         .select(
             "doc_id", "source", "lang",
-            F.expr(f"size({_TOKENS})").alias("n_tok"),
+            F.expr(f"size({TOKENS})").alias("n_tok"),
             (F.col("text").isNotNull() & (F.col("h_n") > 1)).cast("long").alias("is_dup"),
         )
     )
@@ -697,7 +696,7 @@ WITH hc AS (SELECT md5(text) AS h, count(*) AS h_n FROM documents
 qc AS ({quality_classifier_oracle()}),
 pii AS ({PII_REDACTION_ORACLE}),
 base AS (
-  SELECT d.doc_id, d.source, d.lang, len({_TOKENS}) AS n_tok,
+  SELECT d.doc_id, d.source, d.lang, len({TOKENS}) AS n_tok,
          CASE WHEN d.text IS NOT NULL AND hc.h_n > 1 THEN 1 ELSE 0 END AS is_dup
   FROM documents d LEFT JOIN hc ON md5(d.text) = hc.h
 )

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from tf_idf_using_mapreduce_spark.functions.text import TOKENS, word_bigrams
 from tf_idf_using_mapreduce_spark.sources.corpus import load_table, spread
 
 QUALITY_ROUND = 6
@@ -61,8 +62,7 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels, so the heuristic predicts 'en' throughout — the confusion matrix
     makes that explicit rather than faking accuracy."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-    toks = "regexp_extract_all(lower(text), '([a-z]+)', 1)"
-    counts = {lang: _count_in_list(toks, words) for lang, words in LANG_PROFILES.items()}
+    counts = {lang: _count_in_list(TOKENS, words) for lang, words in LANG_PROFILES.items()}
     pred = _lang_pred_case(counts)
     return (
         docs.withColumn("lang_pred", F.expr(pred))
@@ -72,8 +72,7 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def lang_id_oracle() -> str:
-    toks = "regexp_extract_all(lower(text), '([a-z]+)', 1)"
-    counts = {lang: _count_in_list_duck(toks, words) for lang, words in LANG_PROFILES.items()}
+    counts = {lang: _count_in_list_duck(TOKENS, words) for lang, words in LANG_PROFILES.items()}
     pred = _lang_pred_case(counts)
     return f"""
 SELECT lang, lang_pred, count(*) AS n FROM (
@@ -165,16 +164,16 @@ FROM documents
 _QUALITY_STOPS = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 
 
-def _quality_exprs(count_fn, size_fn: str, toks: str) -> dict[str, str]:
-    n_tok = f"{size_fn}({toks})"
-    n_stop = count_fn(toks, _QUALITY_STOPS)
+def _quality_exprs(count_fn, size_fn: str) -> dict[str, str]:
+    n_tok = f"{size_fn}({TOKENS})"
+    n_stop = count_fn(TOKENS, _QUALITY_STOPS)
     # cast, not "* 1.0" — Spark types the 1.0 literal as DECIMAL and the whole
     # ratio would come back Decimal('0.080000') instead of a double
     return {
         "n_tokens": n_tok,
         "stop_ratio": f"round(cast({n_stop} as double) / greatest({n_tok}, 1), {QUALITY_ROUND})",
         "mean_token_len": (
-            f"round(aggregate({toks}, cast(0 as double), (acc, t) -> acc + length(t))"
+            f"round(aggregate({TOKENS}, cast(0 as double), (acc, t) -> acc + length(t))"
             f" / greatest({n_tok}, 1), {QUALITY_ROUND})"
         ),
         # in-range length band + moderate stopword share = 'quality'
@@ -189,25 +188,23 @@ def _quality_exprs(count_fn, size_fn: str, toks: str) -> dict[str, str]:
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_tokens, stop_ratio, mean_token_len, quality)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = "regexp_extract_all(lower(text), '([a-z]+)', 1)"
-    exprs = _quality_exprs(_count_in_list, "size", toks)
+    exprs = _quality_exprs(_count_in_list, "size")
     return docs.select(
         "doc_id", *[F.expr(e).alias(name) for name, e in exprs.items()]
     )
 
 
 def text_quality_oracle() -> str:
-    toks = "regexp_extract_all(lower(text), '([a-z]+)', 1)"
-    exprs = _quality_exprs(_count_in_list_duck, "len", toks)
+    exprs = _quality_exprs(_count_in_list_duck, "len")
     # DuckDB spells fold 'list_reduce'; rebuild mean_token_len portably
-    n_tok = f"len({toks})"
+    n_tok = f"len({TOKENS})"
     # DuckDB's list_sum is NULL for BOTH an empty and a NULL list; Spark's
     # 0-seeded fold is 0 for empty but NULL for NULL (unknown stays unknown).
     # The CASE keeps NULL text NULL while coalescing empty text to 0 —
     # both cases surfaced by the adversarial-docs fuzz.
     exprs["mean_token_len"] = (
-        f"round(CASE WHEN {toks} IS NULL THEN NULL"
-        f" ELSE coalesce(list_sum(list_transform({toks}, t -> length(t))), 0) END * 1.0"
+        f"round(CASE WHEN {TOKENS} IS NULL THEN NULL"
+        f" ELSE coalesce(list_sum(list_transform({TOKENS}, t -> length(t))), 0) END * 1.0"
         f" / greatest({n_tok}, 1), {QUALITY_ROUND})"
     )
     cols = ", ".join(f"{e} AS {name}" for name, e in exprs.items())
@@ -225,16 +222,16 @@ def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select(
         "doc_id",
         F.expr("size(split(text, ' '))").alias("ws_tokens"),
-        F.expr("size(regexp_extract_all(lower(text), '([a-z]+)', 1))").alias("word_tokens"),
+        F.expr(f"size({TOKENS})").alias("word_tokens"),
         F.length("text").alias("n_chars"),
         F.expr("cast(ceil(length(text) / 4.0) as int)").alias("bpe_est"),
     )
 
 
-TOKEN_COUNTS_ORACLE = """
+TOKEN_COUNTS_ORACLE = f"""
 SELECT doc_id,
        len(string_split(text, ' ')) AS ws_tokens,
-       len(regexp_extract_all(lower(text), '([a-z]+)', 1)) AS word_tokens,
+       len({TOKENS}) AS word_tokens,
        length(text) AS n_chars,
        CAST(ceil(length(text) / 4.0) AS INT) AS bpe_est
 FROM documents
@@ -337,7 +334,7 @@ def token_freq_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("text")
     toks = docs.select(
-        F.explode(F.expr("regexp_extract_all(lower(text), '([a-z]+)', 1)")).alias("token")
+        F.explode(F.expr(TOKENS)).alias("token")
     )
     bucket_structs = ", ".join(
         f"named_struct('seed', {s}, 'bucket', "
@@ -369,7 +366,7 @@ def token_freq_cms_oracle() -> str:
     )
     return f"""
 WITH toks AS (
-  SELECT unnest(regexp_extract_all(lower(text), '([a-z]+)', 1)) AS token FROM documents
+  SELECT unnest({TOKENS}) AS token FROM documents
 ),
 pairs AS ({per_seed}),
 sketch AS (SELECT seed, bucket, count(*) AS cnt FROM pairs GROUP BY 1, 2),
@@ -456,17 +453,11 @@ def doc_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     frozen n-gram LM (counts persisted as the "model" table)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = spread(docs).select(
-        "doc_id", F.expr("regexp_extract_all(lower(text), '([a-z]+)', 1)").alias("t")
+        "doc_id", F.expr(TOKENS).alias("t")
     )
     doc_bigrams = toks.where(F.size("t") >= 2).select(
         "doc_id",
-        F.explode(
-            F.expr(
-                "CASE WHEN size(t) >= 2 THEN "
-                "transform(sequence(0, size(t) - 2), i -> named_struct('w1', t[i], 'w2', t[i+1])) "
-                "ELSE array() END"
-            )
-        ).alias("bg"),
+        F.explode(word_bigrams("t")).alias("bg"),
     ).select("doc_id", "bg.w1", "bg.w2")
     c12 = doc_bigrams.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     c1 = doc_bigrams.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
@@ -491,7 +482,7 @@ def doc_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DOC_LM_SCORE_ORACLE = f"""
 WITH toksarr AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '([a-z]+)', 1) AS t FROM documents
+  SELECT doc_id, {TOKENS} AS t FROM documents
 ),
 doc_bigrams AS (
   SELECT doc_id, bg['w1'] AS w1, bg['w2'] AS w2 FROM (
@@ -542,17 +533,11 @@ def dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "source")
     toks = spread(docs).select(
         "doc_id", "source",
-        F.expr("regexp_extract_all(lower(text), '([a-z]+)', 1)").alias("t"),
+        F.expr(TOKENS).alias("t"),
     )
     doc_bigrams = toks.where(F.size("t") >= 2).select(
         "doc_id", "source",
-        F.explode(
-            F.expr(
-                "CASE WHEN size(t) >= 2 THEN "
-                "transform(sequence(0, size(t) - 2), i -> named_struct('w1', t[i], 'w2', t[i+1])) "
-                "ELSE array() END"
-            )
-        ).alias("bg"),
+        F.explode(word_bigrams("t")).alias("bg"),
     ).select("doc_id", "source", "bg.w1", "bg.w2")
     is_tgt = F.col("source") == DSIR_TARGET_SOURCE
     # one pass builds BOTH LMs: background counts plus conditional target
@@ -587,7 +572,7 @@ def dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
 DSIR_IMPORTANCE_ORACLE = f"""
 WITH toksarr AS (
   SELECT doc_id, source,
-         regexp_extract_all(lower(text), '([a-z]+)', 1) AS t FROM documents
+         {TOKENS} AS t FROM documents
 ),
 doc_bigrams AS (
   SELECT doc_id, source, bg['w1'] AS w1, bg['w2'] AS w2 FROM (
@@ -622,7 +607,7 @@ def lang_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB swap ``percentile`` for ``approx_percentile`` exactly as
     ``lineitem_price_stats_approx`` demonstrates, same plan otherwise."""
     docs = load_table(spark, sf_dir, "documents").select("lang", "text")
-    n = F.expr("size(regexp_extract_all(lower(text), '([a-z]+)', 1))")
+    n = F.expr(f"size({TOKENS})")
     return (
         docs.select("lang", n.alias("n"))
         .groupBy("lang")
@@ -635,11 +620,11 @@ def lang_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-LANG_LENGTH_QUANTILES_ORACLE = """
+LANG_LENGTH_QUANTILES_ORACLE = f"""
 SELECT lang, count(*) AS n_docs,
-       round(quantile_cont(len(regexp_extract_all(lower(text), '([a-z]+)', 1)), 0.1), 4) AS p10,
-       round(quantile_cont(len(regexp_extract_all(lower(text), '([a-z]+)', 1)), 0.5), 4) AS p50,
-       round(quantile_cont(len(regexp_extract_all(lower(text), '([a-z]+)', 1)), 0.9), 4) AS p90
+       round(quantile_cont(len({TOKENS}), 0.1), 4) AS p10,
+       round(quantile_cont(len({TOKENS}), 0.5), 4) AS p50,
+       round(quantile_cont(len({TOKENS}), 0.9), 4) AS p90
 FROM documents GROUP BY lang
 """
 
@@ -660,7 +645,7 @@ def token_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-task window touches 100 rows at any corpus size)."""
     docs = load_table(spark, sf_dir, "documents").select("text")
     counts = (
-        docs.select(F.explode(F.expr("regexp_extract_all(lower(text), '([a-z]+)', 1)")).alias("term"))
+        docs.select(F.explode(F.expr(TOKENS)).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("freq"))
         .orderBy(F.desc("freq"), F.asc("term"))
@@ -674,7 +659,7 @@ def token_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 TOKEN_ZIPF_ORACLE = f"""
 WITH counts AS (
-  SELECT unnest(regexp_extract_all(lower(text), '([a-z]+)', 1)) AS term
+  SELECT unnest({TOKENS}) AS term
   FROM documents
 ),
 ranked AS (
@@ -765,7 +750,7 @@ def token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = spread(docs).select(
         (F.col("doc_id") % 2 == 0).alias("in_a"),
-        F.explode(F.expr("regexp_extract_all(lower(text), '([a-z]+)', 1)")).alias("term"),
+        F.explode(F.expr(TOKENS)).alias("term"),
     )
     # count(when(...)) not sum(cast(...)): a term whose every occurrence
     # has unknown parity (NULL doc_id) must count 0, not NULL — sum over
@@ -800,7 +785,7 @@ def token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 TOKEN_DRIFT_ORACLE = f"""
 WITH toks AS (
   SELECT (doc_id % 2 = 0) AS in_a,
-         unnest(regexp_extract_all(lower(text), '([a-z]+)', 1)) AS term
+         unnest({TOKENS}) AS term
   FROM documents
 ),
 counts AS (
@@ -847,7 +832,7 @@ def zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ZIPF_SLOPE_ORACLE = f"""
 WITH counts AS (
-  SELECT unnest(regexp_extract_all(lower(text), '([a-z]+)', 1)) AS term
+  SELECT unnest({TOKENS}) AS term
   FROM documents
 ),
 ranked AS (
@@ -891,16 +876,15 @@ def _qc_prob_expr(duck: bool, weights: dict | None = None) -> str:
     :func:`quality_classifier_df` / :func:`quality_classifier_oracle` AND
     the per-source rollup, so a weight or feature change can never
     silently diverge between the classifier and its consumers."""
-    toks = "regexp_extract_all(lower(text), '([a-z]+)', 1)"
     if duck:
-        n_tok = f"len({toks})"
-        n_stop = _count_in_list_duck(toks, _QUALITY_STOPS)
+        n_tok = f"len({TOKENS})"
+        n_stop = _count_in_list_duck(TOKENS, _QUALITY_STOPS)
         stop_ratio = f"(CAST({n_stop} AS DOUBLE) / greatest({n_tok}, 1))"
         # list_sum quirk: NULL for BOTH empty and NULL lists — the CASE
         # keeps NULL text NULL while empty text folds to 0 (Spark's 0-seed)
         mtl = (
-            f"(CASE WHEN {toks} IS NULL THEN NULL"
-            f" ELSE coalesce(list_sum(list_transform({toks}, t -> length(t))), 0) END * 1.0"
+            f"(CASE WHEN {TOKENS} IS NULL THEN NULL"
+            f" ELSE coalesce(list_sum(list_transform({TOKENS}, t -> length(t))), 0) END * 1.0"
             f" / greatest({n_tok}, 1))"
         )
         alpha = (
@@ -908,11 +892,11 @@ def _qc_prob_expr(duck: bool, weights: dict | None = None) -> str:
             " / greatest(length(text), 1))"
         )
     else:
-        n_tok = f"size({toks})"
-        n_stop = _count_in_list(toks, _QUALITY_STOPS)
+        n_tok = f"size({TOKENS})"
+        n_stop = _count_in_list(TOKENS, _QUALITY_STOPS)
         stop_ratio = f"(cast({n_stop} as double) / greatest({n_tok}, 1))"
         mtl = (
-            f"(aggregate({toks}, cast(0 as double), (acc, t) -> acc + length(t))"
+            f"(aggregate({TOKENS}, cast(0 as double), (acc, t) -> acc + length(t))"
             f" / greatest({n_tok}, 1))"
         )
         alpha = (
@@ -978,17 +962,16 @@ def corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     a uniform key (term / content hash) — nothing quadratic, nothing
     collected. mean rounds at 4dp over an integer ratio (no float-sum
     ordering: total_tokens is an exact bigint)."""
-    toks = "regexp_extract_all(lower(text), '([a-z]+)', 1)"
     docs = load_table(spark, sf_dir, "documents")
     base = docs.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.expr("CASE WHEN text IS NULL THEN 1 ELSE 0 END")).alias("n_null_text"),
-        F.sum(F.expr(f"coalesce(size({toks}), 0)")).alias("total_tokens"),
+        F.sum(F.expr(f"coalesce(size({TOKENS}), 0)")).alias("total_tokens"),
         F.count_distinct("source").alias("n_sources"),
         F.count_distinct("lang").alias("n_langs"),
     )
     vocab = (
-        docs.select(F.explode(F.expr(toks)).alias("t"))
+        docs.select(F.explode(F.expr(TOKENS)).alias("t"))
         .agg(F.count_distinct("t").alias("vocab_size"))
     )
     dups = (
@@ -1010,10 +993,10 @@ def corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CORPUS_STATS_ORACLE = """
+CORPUS_STATS_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id, text, lang, source,
-         regexp_extract_all(lower(text), '([a-z]+)', 1) AS tk
+         {TOKENS} AS tk
   FROM documents
 ),
 base AS (

@@ -39,7 +39,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tf_idf_using_mapreduce_spark.functions.porter import stem_sql_select, with_stem
-from tf_idf_using_mapreduce_spark.functions.text import explode_tokens, filter_stopwords, tokens_cte_duckdb
+from tf_idf_using_mapreduce_spark.functions.text import (
+    TOKENS,
+    explode_tokens,
+    filter_stopwords,
+    tokens_cte_duckdb,
+    word_bigrams,
+)
 from tf_idf_using_mapreduce_spark.sources.corpus import load_table, spread
 
 DEFAULT_CORPUS_CONSTANT = 10000.0  # hardcoded corpus size in the reference score (IDF.java:164)
@@ -340,19 +346,10 @@ def bigram_pmi(spark: SparkSession, sf_dir: str, top_n: int = 20,
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = docs.select(
         "doc_id",
-        F.expr("regexp_extract_all(lower(text), '([a-z]+)', 1)").alias("t"),
+        F.expr(TOKENS).alias("t"),
     )
-    # CASE-guarded (total) like the shingle exprs: Catalyst CSE can evaluate
-    # this inside a reordered Filter predicate, where a <2-token doc would
-    # hit sequence()'s descending branch and t[i] would raise under ANSI
     bigrams = toks.where(F.size("t") >= 2).select(
-        F.explode(
-            F.expr(
-                "CASE WHEN size(t) >= 2 THEN "
-                "transform(sequence(0, size(t) - 2), i -> named_struct('w1', t[i], 'w2', t[i+1])) "
-                "ELSE array() END"
-            )
-        ).alias("bg")
+        F.explode(word_bigrams("t")).alias("bg")
     ).select("bg.w1", "bg.w2")
     unigrams = toks.select(F.explode("t").alias("w"))
     n_total = unigrams.groupBy().agg(F.count(F.lit(1)).alias("n_uni"))
@@ -381,7 +378,7 @@ def bigram_pmi(spark: SparkSession, sf_dir: str, top_n: int = 20,
 def bigram_pmi_oracle(top_n: int = 20, min_count: int = 10) -> str:
     return f"""
 WITH toksarr AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '([a-z]+)', 1) AS t FROM documents
+  SELECT doc_id, {TOKENS} AS t FROM documents
 ),
 bigrams AS (
   SELECT bg['w1'] AS w1, bg['w2'] AS w2 FROM (
@@ -446,7 +443,7 @@ def _query_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalars broadcast."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = spread(docs).select(
-        "doc_id", F.expr("regexp_extract_all(lower(text), '([a-z]+)', 1)").alias("t")
+        "doc_id", F.expr(TOKENS).alias("t")
     )
     dl = toks.select("doc_id", F.size("t").alias("dl"))
     scalars = dl.groupBy().agg(
@@ -526,7 +523,7 @@ def bm25_topk_oracle(k: int = 20) -> str:
     total = " + ".join(f"s_{t}" for t in BM25_QUERY)
     return f"""
 WITH toksarr AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '([a-z]+)', 1) AS t FROM documents
+  SELECT doc_id, {TOKENS} AS t FROM documents
 ),
 dl AS (SELECT doc_id, len(t) AS dl FROM toksarr),
 scalars AS (SELECT count(*) AS n_docs, sum(dl) AS sumdl FROM dl),
@@ -701,7 +698,7 @@ def rrf_fusion_topk_oracle(k: int = 20) -> str:
     contrib = f"coalesce(CAST(1 AS DOUBLE) / ({RRF_K} + {{r}}), CAST(0 AS DOUBLE))"
     return f"""
 WITH toksarr AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '([a-z]+)', 1) AS t FROM documents
+  SELECT doc_id, {TOKENS} AS t FROM documents
 ),
 dl AS (SELECT doc_id, len(t) AS dl FROM toksarr),
 scalars AS (SELECT count(*) AS n_docs, sum(dl) AS sumdl FROM dl),

@@ -443,6 +443,25 @@ FORCE_FRESH: frozenset[str] = frozenset({
     "dedup_apply_quality",
     "split_leakage",
     "source_dup_matrix",
+    # one word-bigram expression (functions/text.word_bigrams)
+    "bigram_pmi",
+    "doc_lm_score",
+    "dsir_importance",
+    # one availableNow drain loop behind the three streaming runners
+    "documents_stream_chunk_dedup",
+    "documents_stream_curation",
+    "documents_stream_dedup",
+    "documents_stream_phash",
+    "documents_stream_pii",
+    "documents_stream_quality",
+    "documents_stream_split",
+    "events_hourly_streaming",
+    "events_session_stream",
+    "events_stream_cdc_upsert",
+    "events_stream_daily_partitioned",
+    "events_stream_dedup",
+    "events_stream_stream_join",
+    "events_user_running_totals",
 })
 
 

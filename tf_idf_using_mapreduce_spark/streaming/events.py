@@ -22,6 +22,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from tf_idf_using_mapreduce_spark.sources.corpus import load_table
 
@@ -97,6 +98,42 @@ def read_events_stream(spark: SparkSession, sf_dir: str,
 STATE_PARTITIONS = 8
 
 
+def _drain(writer: DataStreamWriter, spark: SparkSession, timeout_s: int,
+           state_partitions: int | None, what: str, output: str) -> None:
+    """Start ``writer`` with an availableNow trigger and block until it has
+    drained every available input — the loop all three runners share.
+
+    ``state_partitions`` pins ``spark.sql.shuffle.partitions`` for the
+    stream's lifetime (state partitioning is fixed at first start) and the
+    previous value is restored on every path out, errors included. The pin
+    is SESSION-WIDE: it assumes the session runs one query at a time (single
+    tenancy; ROADMAP 4(d)). A batch query started concurrently on the same
+    session would plan with the stream's partition count, and two
+    concurrent drains would restore each other's values out of order.
+
+    The deadline clock starts BEFORE ``awaitTermination``, so a hung query
+    gets ``timeout_s`` in total, not twice that. A query still active at the deadline is stopped and raised as ``TimeoutError``:
+    ``what``/``output`` name the query and its partial output in the
+    message, never returned as if complete."""
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    if state_partitions is not None:
+        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    try:
+        deadline = time.time() + timeout_s
+        q = writer.trigger(availableNow=True).start()
+        q.awaitTermination(timeout_s)
+        while q.isActive and time.time() < deadline:
+            time.sleep(0.5)
+        if q.isActive:
+            q.stop()
+            raise TimeoutError(
+                f"{what} still active after {timeout_s}s; "
+                f"{output} is partial — refusing to return it"
+            )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+
+
 def run_stream_to_memory(stream_df: DataFrame, name: str, timeout_s: int = 120,
                          output_mode: str = "complete",
                          state_partitions: int | None = STATE_PARTITIONS,
@@ -132,35 +169,17 @@ def run_stream_to_memory(stream_df: DataFrame, name: str, timeout_s: int = 120,
     r16, 4.1 vs 3.7 s on the join — JNI+SST overhead loses at fixture-scale
     state; the default HDFS-backed store stands.)"""
     spark = stream_df.sparkSession
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     nodata_key = "spark.sql.streaming.noDataMicroBatches.enabled"
     prev_nodata = spark.conf.get(nodata_key)
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     if output_mode == "complete" or not final_nodata_batch:
         spark.conf.set(nodata_key, "false")
     try:
-        # the deadline clock starts BEFORE awaitTermination (r13 ADVICE: the
-        # old post-await loop gave a hung query ~2x the advertised timeout)
-        deadline = time.time() + timeout_s
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
+        _drain(
+            stream_df.writeStream.format("memory").queryName(name).outputMode(output_mode),
+            spark, timeout_s, state_partitions,
+            f"streaming query {name!r}", "memory table",
         )
-        q.awaitTermination(timeout_s)
-        while q.isActive and time.time() < deadline:
-            time.sleep(0.5)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError(
-                f"streaming query {name!r} still active after {timeout_s}s; "
-                "memory table is partial — refusing to return it"
-            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         spark.conf.set(nodata_key, prev_nodata)
 
 
@@ -425,9 +444,7 @@ def run_stream_to_partitioned_sink(stream_df: DataFrame, path: str,
     file sink (``writeStream.partitionBy`` — append mode, the only mode a
     file sink supports). Same hung-stream deadline discipline as
     :func:`run_stream_to_memory`: a query still active at the deadline is
-    stopped and RAISED, never returned as a partial directory. The deadline
-    clock starts before ``awaitTermination`` (r13 ADVICE: the old post-await
-    loop gave a hung query ~2x the advertised timeout).
+    stopped and RAISED, never returned as a partial directory.
 
     ``checkpoint``: pass an explicit checkpoint dir to make the sink
     RESUMABLE (the kill/restart exactly-once test drives this); by default a
@@ -437,33 +454,18 @@ def run_stream_to_partitioned_sink(stream_df: DataFrame, path: str,
     import shutil
     import tempfile
 
-    spark = stream_df.sparkSession
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     ckpt = checkpoint or tempfile.mkdtemp(prefix="graft_stream_ckpt_")
     try:
-        deadline = time.time() + timeout_s
-        q = (
+        _drain(
             stream_df.writeStream.format("parquet")
             .option("path", path)
             .option("checkpointLocation", ckpt)
             .partitionBy(*partition_cols)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            stream_df.sparkSession, timeout_s, state_partitions,
+            f"streaming file-sink query to {path!r}", "directory",
         )
-        q.awaitTermination(timeout_s)
-        while q.isActive and time.time() < deadline:
-            time.sleep(0.5)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError(
-                f"streaming file-sink query to {path!r} still active after "
-                f"{timeout_s}s; directory is partial — refusing to return it"
-            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         if checkpoint is None:
             # one-shot drain: the throwaway checkpoint has served its purpose.
             # In the FINALLY block (r14 ADVICE: the success-only cleanup still
@@ -551,29 +553,11 @@ def run_stream_foreach_batch(stream_df: DataFrame, batch_fn, checkpoint: str,
     batch (a keyed MERGE is; a blind append is not) — the standard
     foreachBatch discipline. Same start-before-await hang deadline as the
     other runners."""
-    spark = stream_df.sparkSession
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        deadline = time.time() + timeout_s
-        q = (
-            stream_df.writeStream.foreachBatch(batch_fn)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout_s)
-        while q.isActive and time.time() < deadline:
-            time.sleep(0.5)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError(
-                f"foreachBatch stream still active after {timeout_s}s; "
-                "sink state is partial — refusing to return it"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _drain(
+        stream_df.writeStream.foreachBatch(batch_fn).option("checkpointLocation", checkpoint),
+        stream_df.sparkSession, timeout_s, state_partitions,
+        "foreachBatch stream", "sink state",
+    )
 
 
 def events_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:

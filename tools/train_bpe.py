@@ -24,9 +24,9 @@ import duckdb
 from tf_idf_using_mapreduce_spark.functions.bpe import (
     BPE_MERGES_PATH,
     N_MERGES,
-    WORD_TOKENS,
     train_bpe,
 )
+from tf_idf_using_mapreduce_spark.functions.text import TOKENS
 
 
 def main() -> int:
@@ -35,7 +35,7 @@ def main() -> int:
     con = duckdb.connect()
     rows = con.sql(
         f"SELECT word, count(*) AS n FROM ("
-        f"SELECT unnest({WORD_TOKENS}) AS word "
+        f"SELECT unnest({TOKENS}) AS word "
         f"FROM read_parquet('{sf_dir}/documents.parquet')) t GROUP BY word"
     ).fetchall()
     con.close()
