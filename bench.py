@@ -160,6 +160,22 @@ def bench_names(all_queries) -> list[str]:
     return list(BENCH_QUERIES) + rest
 
 
+def legacy_overwrite_ok(legacy: str, cpus: int) -> bool:
+    """Whether a ``cpus``-core run may (over)write the legacy
+    ``BENCH_FULL.json``: yes when the file is missing or records at most
+    ``cpus`` cores; no when it records more (this is the scaling run after
+    the main run), or when its core count is unknown (unreadable, or no
+    integer ``cpus``), since it may be the main run's."""
+    if not os.path.exists(legacy):
+        return True
+    try:
+        with open(legacy) as fh:
+            legacy_cpus = json.load(fh).get("cpus")
+    except Exception:
+        return False
+    return isinstance(legacy_cpus, int) and cpus >= legacy_cpus
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
@@ -273,15 +289,7 @@ def main() -> int:
         json.dump(result, fh, indent=1)
         fh.write("\n")
     legacy = os.path.join(here, "BENCH_FULL.json")
-    legacy_cpus = None
-    try:
-        with open(legacy) as fh:
-            legacy_cpus = json.load(fh).get("cpus")
-    except Exception:
-        legacy_cpus = None
-    # overwrite the legacy artifact unless it records a HIGHER core count
-    # (i.e. this is the scaling run following the main run)
-    if legacy_cpus is None or not isinstance(legacy_cpus, int) or cpus >= legacy_cpus:
+    if legacy_overwrite_ok(legacy, cpus):
         with open(legacy, "w") as fh:
             json.dump(result, fh, indent=1)
             fh.write("\n")

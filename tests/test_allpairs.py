@@ -10,6 +10,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from tf_idf_using_mapreduce_spark.functions.vectors import COS_ROUND
 from tf_idf_using_mapreduce_spark.operators.allpairs import cosine_topk_pairs
 
 
@@ -30,7 +31,7 @@ def _make_vecs(spark, n=60, d=7, seed=5):
     return df, mat
 
 
-def _brute_topk(mat, top_pairs, round_dp=4):
+def _brute_topk(mat, top_pairs):
     n = mat.shape[0]
     nrm = np.sqrt((mat * mat).sum(axis=1))
     out = []
@@ -38,7 +39,7 @@ def _brute_topk(mat, top_pairs, round_dp=4):
         dot = float(mat[a] @ mat[b])
         if dot == 0.0:
             continue
-        out.append((a, b, round(dot / (nrm[a] * nrm[b]), round_dp)))
+        out.append((a, b, round(dot / (nrm[a] * nrm[b]), COS_ROUND)))
     out.sort(key=lambda t: (-t[2], t[0], t[1]))
     return out[:top_pairs]
 

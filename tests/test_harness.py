@@ -91,3 +91,22 @@ def test_bench_names_guard_rejects_unknown_names():
             bench.bench_names(names)
     finally:
         bench.BENCH_EXCLUDE.discard("not_a_registered_query")
+
+
+def test_bench_legacy_overwrite_rule(tmp_path):
+    """``BENCH_FULL.json`` is written when it is missing or records no more
+    cores than this run, and kept when it records more or its core count
+    is unknown."""
+    import json
+
+    import bench
+
+    legacy = tmp_path / "BENCH_FULL.json"
+    assert bench.legacy_overwrite_ok(str(legacy), 8)  # missing
+    for unknown in (json.dumps({"metric": "x"}), json.dumps({"cpus": "32"}), "{"):
+        legacy.write_text(unknown)
+        assert not bench.legacy_overwrite_ok(str(legacy), 8)
+    legacy.write_text(json.dumps({"cpus": 4}))
+    assert bench.legacy_overwrite_ok(str(legacy), 8)  # lower
+    assert bench.legacy_overwrite_ok(str(legacy), 4)  # equal
+    assert not bench.legacy_overwrite_ok(str(legacy), 2)  # higher

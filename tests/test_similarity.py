@@ -458,6 +458,86 @@ def test_arrow_cell_assignment_matches_sql(spark):
     assert arrow_cids == sql_cids
 
 
+def test_cos_rounding_pin(spark):
+    """The numpy kernels' one rounding step (``vectors.cos_round``) rounds
+    half-to-even on the binary value; Spark SQL and DuckDB ``round`` are
+    HALF_UP on the decimal. Pinned at exact decimal ties: they differ at
+    0.12345 and 0.30005, and agree at 0.29995, which rounds onto
+    NEARDUP_COS_THRESHOLD in all three."""
+    import duckdb
+    import numpy as np
+
+    from tf_idf_using_mapreduce_spark.functions.vectors import COS_ROUND, cos_round
+
+    xs = [0.12345, 0.30005, 0.29995]
+    select = "SELECT " + ", ".join(
+        f"round(CAST({x!r} AS DOUBLE), {COS_ROUND})" for x in xs)
+    got_np = cos_round(np.array(xs)).tolist()
+    got_spark = list(spark.sql(select).first())
+    got_duck = list(duckdb.sql(select).fetchone())
+    assert got_np == [0.1234, 0.3, 0.3]
+    assert got_spark == got_duck == [0.1235, 0.3001, 0.3]
+    assert got_np[2] == got_spark[2] == sim.NEARDUP_COS_THRESHOLD
+
+
+def test_cos_kernels_rank_ties_to_lowest_id_and_drop_empty_rows():
+    """``nearest_anchor`` and ``best_per_row`` against a plain-Python
+    reference on small-integer vectors (many exactly equal cosines) and
+    masked cells: the max ROUNDED cosine wins, ties go to the lowest id,
+    and rows with no valid candidate are dropped. No Spark session."""
+    import numpy as np
+
+    from tf_idf_using_mapreduce_spark.functions.vectors import (
+        best_per_row,
+        cos_quotient,
+        cos_round,
+        cos_tile,
+        nearest_anchor,
+    )
+
+    rng = np.random.RandomState(7)
+    A = rng.randint(-2, 3, size=(12, 3)).astype(np.float64)
+    V = rng.randint(-2, 3, size=(40, 3)).astype(np.float64)
+    A[~A.any(axis=1)] = 1.0
+    V[~V.any(axis=1)] = 1.0
+    an = np.sqrt((A * A).sum(axis=1))
+    nrm = np.sqrt((V * V).sum(axis=1))
+
+    C = cos_round(cos_quotient(V @ A.T, nrm, an))
+    cid, aff = nearest_anchor(V @ A.T, nrm, an)
+    n_tied = 0
+    for i in range(len(V)):
+        row = C[i].tolist()
+        want = min(range(len(row)), key=lambda j: (-row[j], j))
+        assert (int(cid[i]), float(aff[i])) == (want, row[want])
+        n_tied += row.count(row[want]) > 1
+    assert n_tied > 0
+    # rounding comes before ranking: the raw argmax is cid 1, but both
+    # cosines round to 1.0, so the lower cid wins
+    A2 = np.array([[1.0, 1e-5], [1.0, 0.0]])
+    an2 = np.sqrt((A2 * A2).sum(axis=1))
+    dots = np.array([[1.0, 0.0]]) @ A2.T
+    assert cos_quotient(dots, [1.0], an2).argmax() == 1
+    assert nearest_anchor(dots, np.array([1.0]), an2)[0].tolist() == [0]
+
+    ids = rng.permutation(100)[:len(A)].astype(np.int64)  # unsorted ids
+    _raw, M = cos_tile(V, A, nrm, an)
+    M[rng.rand(*M.shape) < 0.4] = -np.inf
+    M[[3, 17]] = -np.inf  # rows with no valid candidate
+    ok, nn, cos = best_per_row(M, ids)
+    want, n_id_ties = [], 0
+    for i in range(len(V)):
+        cands = [(M[i, j], int(ids[j])) for j in range(len(ids)) if M[i, j] != -np.inf]
+        if cands:
+            c, n = min(cands, key=lambda t: (-t[0], t[1]))
+            want.append((i, n, c))
+            n_id_ties += int(ids[M[i].argmax()]) != n
+    got = [(int(i), int(n), float(c)) for i, n, c in zip(np.flatnonzero(ok), nn, cos)]
+    assert got == want
+    assert not ok[3] and not ok[17]
+    assert n_id_ties > 0  # some tie is settled by id, not column order
+
+
 def test_cell_labels_match_global_cc(spark):
     """The r15 cell-local union-find labeling (``_ivf_cell_labels``) must
     reproduce EXACTLY the global two-star CC labels over the registered

@@ -20,8 +20,10 @@ Physical shape (the 100-TB design, not just the local one):
    of tiles (b, j≥b) and the right operand of tiles (i<b, b) — ONE shuffle of
    n × (P+1)/2 rows total, no n² intermediate;
 3. ``groupBy(tile).applyInPandas`` multiplies the ≤(n/P)² tile with numpy
-   (`A @ B.T` — vectorized, cache-blocked BLAS) and emits only the tile-local
-   top-k pairs;
+   (`A @ B.T` — vectorized, cache-blocked BLAS) in ``TILE_ROWS``-row slabs
+   through the shared kernels of ``functions/vectors.py`` (``cos_tiles``
+   rounds at ``COS_ROUND``, ``best_per_row`` ranks with ties to the lowest
+   id) and emits only the tile-local top-k pairs, or each row's best;
 4. the global top-k over ≤ tiles×k candidate rows is a
    ``TakeOrderedAndProject``.
 
@@ -42,27 +44,20 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tf_idf_using_mapreduce_spark.functions.vectors import (
+    TILE_ROWS,
+    best_per_row,
+    cos_tiles,
+)
+
 DEFAULT_BLOCKS = 8
 
 
-def cosine_topk_pairs(
-    vecs: DataFrame,
-    top_pairs: int,
-    id_col: str = "doc_id",
-    vec_col: str = "vec",
-    nrm_col: str = "nrm",
-    n_blocks: int = DEFAULT_BLOCKS,
-    round_dp: int = 4,
-) -> DataFrame:
-    """(id_a, id_b, cos_sim): the global ``top_pairs`` most-similar distinct
-    pairs (id_a < id_b) by cosine, exact, over rows of (id, vector, norm).
-
-    Pairs with an exactly-zero dot product (no shared nonzero dimension) are
-    excluded, matching the sparse term-join semantics. ``cos_sim`` is rounded
-    to ``round_dp`` BEFORE ranking; ties break on (id_a, id_b) ascending, so
-    the result is deterministic and engine-portable.
-    """
-    P = n_blocks
+def _replicated(vecs: DataFrame, id_col: str, vec_col: str, nrm_col: str,
+                P: int) -> DataFrame:
+    """(bi, bj, id, v, nrm, is_left): every row copied to each tile it joins
+    — as the left operand of tiles (b, j≥b) and the right operand of tiles
+    (i<b, b), where ``b = crc32(id) % P``."""
     tagged = vecs.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v"), F.col(nrm_col).alias("nrm")
     ).withColumn("b", F.pmod(F.crc32(F.col("id").cast("string")), F.lit(P)).cast("int"))
@@ -78,54 +73,72 @@ def cosine_topk_pairs(
         ).alias("k"),
         "id", "v", "nrm", F.lit(False).alias("is_left"),
     )
-    repl = left.unionByName(right).select(
+    return left.unionByName(right).select(
         F.col("k.bi").alias("bi"), F.col("k.bj").alias("bj"), "id", "v", "nrm", "is_left"
     )
 
+
+def _tile_operands(key: tuple, pdf: pd.DataFrame):
+    """(same, a_ids, b_ids, A, B, an, bn) for one tile's rows, or ``None``
+    when a side is empty. ``same``: a diagonal tile, whose right side is its
+    left side."""
+    same = int(key[0]) == int(key[1])
+    lf = pdf[pdf["is_left"]]
+    rf = lf if same else pdf[~pdf["is_left"]]
+    if lf.empty or rf.empty:
+        return None
+    A = np.stack(lf["v"].to_numpy())
+    an = lf["nrm"].to_numpy()
+    if same:
+        B, bn = A, an
+    else:
+        B, bn = np.stack(rf["v"].to_numpy()), rf["nrm"].to_numpy()
+    return same, lf["id"].to_numpy(), rf["id"].to_numpy(), A, B, an, bn
+
+
+def cosine_topk_pairs(
+    vecs: DataFrame,
+    top_pairs: int,
+    id_col: str = "doc_id",
+    vec_col: str = "vec",
+    nrm_col: str = "nrm",
+    n_blocks: int = DEFAULT_BLOCKS,
+) -> DataFrame:
+    """(id_a, id_b, cos_sim): the global ``top_pairs`` most-similar distinct
+    pairs (id_a < id_b) by cosine, exact, over rows of (id, vector, norm).
+
+    Pairs with an exactly-zero dot product (no shared nonzero dimension) are
+    excluded, matching the sparse term-join semantics. ``cos_sim`` is rounded
+    at ``COS_ROUND`` BEFORE ranking; ties break on (id_a, id_b) ascending, so
+    the result is deterministic and engine-portable.
+    """
+    repl = _replicated(vecs, id_col, vec_col, nrm_col, n_blocks)
+
     def tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        bi, bj = int(key[0]), int(key[1])
         empty = pd.DataFrame({"id_a": pd.Series(dtype="int64"),
                               "id_b": pd.Series(dtype="int64"),
                               "cos_sim": pd.Series(dtype="float64")})
-        lf = pdf[pdf["is_left"]]
-        if bi == bj:
-            rf = lf
-        else:
-            rf = pdf[~pdf["is_left"]]
-        if lf.empty or rf.empty:
+        ops = _tile_operands(key, pdf)
+        if ops is None:
             return empty
-        a_ids = lf["id"].to_numpy()
-        b_ids = rf["id"].to_numpy()
-        A = np.stack(lf["v"].to_numpy())
-        B = A if bi == bj else np.stack(rf["v"].to_numpy())
-        an = lf["nrm"].to_numpy()
-        bn = an if bi == bj else rf["nrm"].to_numpy()
-        # Tile-local top-k in ROW CHUNKS, never materializing the full
-        # (n/P)² similarity matrix: the sf1.0 sweep measured the
-        # full-matrix form at 7.4 s/tile (a 6250² tile is 312 MB — the
-        # np.outer division, round, mask and partition each re-stream it
-        # from DRAM, and 32 concurrent tasks saturate memory bandwidth)
-        # vs 0.8 s chunked, where each 1024×(n/P) slab stays cache-warm.
-        # Per-element math is UNCHANGED — dot/(na·nb), round at round_dp,
-        # raw-S zero test — chunking only splits the GEMM's row dimension
-        # (the summed k-dimension is intact), so parity is untouched.
-        # Each chunk keeps its own >=threshold candidates (ties at the
-        # cut included); any pair in the tile top-k is in its chunk's
-        # top-k, so merging chunk candidates preserves exactness.
+        same, a_ids, b_ids, A, B, an, bn = ops
+        # Tile-local top-k per TILE_ROWS slab (cos_tiles), never the full
+        # (n/P)² matrix: the sf1.0 sweep measured 7.4 s/tile for the full
+        # form against 0.8 s chunked. Each slab keeps its own >=threshold
+        # candidates (ties at the cut included); any pair in the tile top-k
+        # is in its slab's top-k, so merging slab candidates stays exact.
         parts = []
-        chunk = 1024
-        for i0 in range(0, len(a_ids), chunk):
-            Sc = (A[i0:i0 + chunk] @ B.T) / np.outer(an[i0:i0 + chunk], bn)
-            if bi == bj:
+        for i0, Sc, C in cos_tiles(A, B, an, bn):
+            rows = a_ids[i0:i0 + TILE_ROWS]
+            if same:
                 # same row set on both sides: keep each unordered pair once
-                mask = (a_ids[i0:i0 + chunk, None] < b_ids[None, :]) & (Sc != 0.0)
+                mask = (rows[:, None] < b_ids[None, :]) & (Sc != 0.0)
             else:
                 # disjoint blocks: every unordered pair appears in exactly
                 # this tile; order is normalized below
                 mask = Sc != 0.0
             if not mask.any():
                 continue
-            C = np.round(Sc, round_dp)
             C[~mask] = -np.inf
             flat = C.ravel()
             k = min(top_pairs, flat.size)
@@ -137,7 +150,7 @@ def cosine_topk_pairs(
             ia, ib = np.nonzero(cand)
             if ia.size == 0:
                 continue
-            parts.append((a_ids[i0:i0 + chunk][ia], b_ids[ib], C[ia, ib]))
+            parts.append((rows[ia], b_ids[ib], C[ia, ib]))
         if not parts:
             return empty
         ga = np.concatenate([p[0] for p in parts])
@@ -165,7 +178,6 @@ def cosine_nn1(
     vec_col: str = "v",
     nrm_col: str = "nrm",
     n_blocks: int = DEFAULT_BLOCKS,
-    round_dp: int = 4,
 ) -> DataFrame:
     """(id, nn_id, cos_sim): each row's EXACT nearest neighbor by cosine
     (excluding self; zero-dot pairs excluded per the file's sparse-join
@@ -177,87 +189,39 @@ def cosine_nn1(
     before ranking, ties break on nn_id ascending."""
     from pyspark.sql import Window
 
-    P = n_blocks
-    tagged = vecs.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v"), F.col(nrm_col).alias("nrm")
-    ).withColumn("b", F.pmod(F.crc32(F.col("id").cast("string")), F.lit(P)).cast("int"))
-    left = tagged.select(
-        F.explode(
-            F.expr(f"transform(sequence(b, {P - 1}), j -> named_struct('bi', b, 'bj', j))")
-        ).alias("k"),
-        "id", "v", "nrm", F.lit(True).alias("is_left"),
-    )
-    right = tagged.where(F.col("b") > 0).select(
-        F.explode(
-            F.expr("transform(sequence(0, b - 1), i -> named_struct('bi', i, 'bj', b))")
-        ).alias("k"),
-        "id", "v", "nrm", F.lit(False).alias("is_left"),
-    )
-    repl = left.unionByName(right).select(
-        F.col("k.bi").alias("bi"), F.col("k.bj").alias("bj"), "id", "v", "nrm", "is_left"
-    )
+    repl = _replicated(vecs, id_col, vec_col, nrm_col, n_blocks)
 
     def tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        bi, bj = int(key[0]), int(key[1])
-        empty = pd.DataFrame({"id": pd.Series(dtype="int64"),
-                              "nn_id": pd.Series(dtype="int64"),
-                              "cos_sim": pd.Series(dtype="float64")})
-        lf = pdf[pdf["is_left"]]
-        rf = lf if bi == bj else pdf[~pdf["is_left"]]
-        if lf.empty or rf.empty:
-            return empty
-        a_ids = lf["id"].to_numpy()
-        b_ids = rf["id"].to_numpy()
-        A = np.stack(lf["v"].to_numpy())
-        B = A if bi == bj else np.stack(rf["v"].to_numpy())
-        an = lf["nrm"].to_numpy()
-        bn = an if bi == bj else rf["nrm"].to_numpy()
-
-        def best_per_row(row_ids, M, col_ids):
-            # vectorized argmax with (cos desc, id asc) tie-break: among
-            # max-cos columns pick the smallest neighbor id
-            mx = M.max(axis=1)
-            ok = mx != -np.inf
-            if not ok.any():
-                return [], [], []
-            tie = M[ok] == mx[ok][:, None]
-            nb = np.where(tie, col_ids[None, :], np.iinfo(np.int64).max).min(axis=1)
-            return row_ids[ok].tolist(), nb.tolist(), mx[ok].tolist()
-
-        # Row-chunked like cosine_topk_pairs' tile (see the comment there:
-        # cache-resident slabs instead of a full 312 MB tile matrix; the
-        # per-element math is unchanged). A row's tile-local best is the
-        # (cos desc, id asc)-max over its chunk results, folded below; for
-        # off-diagonal tiles the right side's per-row best needs the
-        # column view, so each chunk also scans M.T.
+        ops = _tile_operands(key, pdf)
+        if ops is None:
+            return pd.DataFrame({"id": pd.Series(dtype="int64"),
+                                 "nn_id": pd.Series(dtype="int64"),
+                                 "cos_sim": pd.Series(dtype="float64")})
+        same, a_ids, b_ids, A, B, an, bn = ops
+        # Per slab, each left row's best is final (it lives in one slab);
+        # on an off-diagonal tile the right side's rows also need the
+        # column view (C.T), and their per-slab bests are folded below.
         ids, nns, coss = [], [], []
-        chunk = 1024
-        for i0 in range(0, len(a_ids), chunk):
-            Sc = (A[i0:i0 + chunk] @ B.T) / np.outer(an[i0:i0 + chunk], bn)
-            valid = (Sc != 0.0) & (a_ids[i0:i0 + chunk, None] != b_ids[None, :])
-            C = np.round(Sc, round_dp)
+        for i0, Sc, C in cos_tiles(A, B, an, bn):
+            rows = a_ids[i0:i0 + TILE_ROWS]
+            valid = (Sc != 0.0) & (rows[:, None] != b_ids[None, :])
             C[~valid] = -np.inf
-            i1, n1, c1 = best_per_row(a_ids[i0:i0 + chunk], C, b_ids)
-            ids += i1; nns += n1; coss += c1
-            if bi != bj:
-                i2, n2, c2 = best_per_row(b_ids, C.T, a_ids[i0:i0 + chunk])
-                ids += i2; nns += n2; coss += c2
-        if not ids:
-            return empty
-        if bi != bj and len(a_ids) > chunk:
-            # fold the per-chunk bests of the right side's rows (left-side
-            # rows appear in exactly one chunk, right-side rows in all)
-            df = pd.DataFrame({"id": np.array(ids, dtype="int64"),
-                               "nn_id": np.array(nns, dtype="int64"),
-                               "cos_sim": np.array(coss, dtype="float64")})
+            sides = [(rows, C, b_ids)]
+            if not same:
+                sides.append((b_ids, C.T, rows))
+            for row_ids, M, col_ids in sides:
+                ok, nn, cos = best_per_row(M, col_ids)
+                ids.append(row_ids[ok]); nns.append(nn); coss.append(cos)
+        df = pd.DataFrame({"id": np.concatenate(ids).astype("int64"),
+                           "nn_id": np.concatenate(nns).astype("int64"),
+                           "cos_sim": np.concatenate(coss).astype("float64")})
+        if not same and len(a_ids) > TILE_ROWS:
+            # fold the per-slab bests of the right side's rows (left-side
+            # rows appear in exactly one slab, right-side rows in all)
             df = (df.sort_values(["id", "cos_sim", "nn_id"],
                                  ascending=[True, False, True])
                   .drop_duplicates("id", keep="first"))
-            ids = df["id"].tolist(); nns = df["nn_id"].tolist()
-            coss = df["cos_sim"].tolist()
-        return pd.DataFrame({"id": np.array(ids, dtype="int64"),
-                             "nn_id": np.array(nns, dtype="int64"),
-                             "cos_sim": np.array(coss, dtype="float64")})
+        return df
 
     candidates = repl.groupBy("bi", "bj").applyInPandas(
         tile, "id long, nn_id long, cos_sim double"

@@ -193,7 +193,7 @@ def split_leakage_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         _sign_bucket_spark,
         _vectors,
     )
-    from tf_idf_using_mapreduce_spark.functions.vectors import COS_ROUND, spark_dot
+    from tf_idf_using_mapreduce_spark.functions.vectors import spark_cos
 
     vecs = (
         _vectors(spark, sf_dir)
@@ -219,8 +219,7 @@ def split_leakage_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand.join(sa, "vec_a").join(sb, "vec_b")
         .select(
             "vec_a", "vec_b",
-            F.round(F.expr(spark_dot("va", "vb")) / (F.col("na") * F.col("nb")),
-                    COS_ROUND).alias("cos_sim"),
+            spark_cos("va", "vb", "na", "nb").alias("cos_sim"),
         )
         .where(F.col("cos_sim") >= NEARDUP_COS_THRESHOLD)
     )
@@ -252,9 +251,8 @@ def split_leakage_semantic_oracle() -> str:
         _sign_bucket_duck,
     )
     from tf_idf_using_mapreduce_spark.functions.vectors import (
-        COS_ROUND,
         duck_cast_double,
-        duck_dot,
+        duck_cos,
         duck_norm,
     )
 
@@ -272,11 +270,11 @@ cand AS (
 ),
 near AS (
   SELECT c.vec_a, c.vec_b,
-         round({duck_dot('ea.v', 'eb.v')} / (ea.nrm * eb.nrm), {COS_ROUND}) AS cos_sim
+         {duck_cos('ea.v', 'eb.v', 'ea.nrm', 'eb.nrm')} AS cos_sim
   FROM cand c
   JOIN e ea ON ea.vec_id = c.vec_a
   JOIN e eb ON eb.vec_id = c.vec_b
-  WHERE round({duck_dot('ea.v', 'eb.v')} / (ea.nrm * eb.nrm), {COS_ROUND})
+  WHERE {duck_cos('ea.v', 'eb.v', 'ea.nrm', 'eb.nrm')}
         >= {NEARDUP_COS_THRESHOLD}
 ),
 assign AS (SELECT doc_id,

@@ -24,16 +24,25 @@ DuckDB's last-bit float differences cannot flip an order.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tf_idf_using_mapreduce_spark.functions.vectors import (
     CAST_DOUBLE,
     COS_ROUND,
+    TILE_ROWS,
+    best_per_row,
+    cos_quotient,
+    cos_round,
+    cos_tile,
+    cos_tiles,
     duck_cast_double,
+    duck_cos,
     duck_dot,
     duck_norm,
-    spark_dot,
+    nearest_anchor,
+    spark_cos,
     spark_norm,
 )
 from tf_idf_using_mapreduce_spark.operators.dedup import min_root_forest
@@ -58,6 +67,19 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("nrm", F.expr(spark_norm("v"))).where(F.col("nrm") > 0)
 
 
+ANN_SCHEMA = "query_id long, neighbor_id long, cos_sim double, rk int"
+
+
+def _rank_neighbors(pairs: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, cos_sim, rk): each query's ``k`` best
+    candidates by rounded cosine, ties to the lowest neighbor_id, over
+    candidate rows carrying (query_id, vec_id, v, nrm, qv, qn)."""
+    scored = pairs.select("query_id", F.col("vec_id").alias("neighbor_id"),
+                          spark_cos("v", "qv", "nrm", "qn").alias("cos_sim"))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
+    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
+
+
 def ann_topk_bruteforce(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
     """(query_id, neighbor_id, cos_sim, rk): exact top-k cosine neighbors for
     each query vector (vec_id < N_QUERIES), excluding self."""
@@ -66,10 +88,7 @@ def ann_topk_bruteforce(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> Dat
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
     )
     pairs = vecs.crossJoin(F.broadcast(q)).where(F.col("vec_id") != F.col("query_id"))
-    cos = F.round(F.expr(spark_dot("v", "qv")) / (F.col("nrm") * F.col("qn")), COS_ROUND)
-    scored = pairs.select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos_sim"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
+    return _rank_neighbors(pairs, k)
 
 
 ANN_BRUTEFORCE_ORACLE = f"""
@@ -78,7 +97,7 @@ WITH e AS (SELECT vec_id, {duck_cast_double('embedding')} AS v,
            FROM embeddings WHERE nrm > 0),
 scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         round({duck_dot('c.v', 'q.v')} / (c.nrm * q.nrm), {COS_ROUND}) AS cos_sim
+         {duck_cos('c.v', 'q.v', 'c.nrm', 'q.nrm')} AS cos_sim
   FROM e q JOIN e c ON c.vec_id <> q.vec_id
   WHERE q.vec_id < {N_QUERIES}
 )
@@ -164,10 +183,7 @@ def ann_topk_lsh(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
         )
     )
     pairs = vecs.join(F.broadcast(q), "bucket").where(F.col("vec_id") != F.col("query_id"))
-    cos = F.round(F.expr(spark_dot("v", "qv")) / (F.col("nrm") * F.col("qn")), COS_ROUND)
-    scored = pairs.select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos_sim"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
+    return _rank_neighbors(pairs, k)
 
 
 def _ann_lsh_oracle() -> str:
@@ -183,7 +199,7 @@ qp AS (
 ),
 scored AS (
   SELECT qp.query_id, c.vec_id AS neighbor_id,
-         round({duck_dot('c.v', 'qp.qv')} / (c.nrm * qp.qn), {COS_ROUND}) AS cos_sim
+         {duck_cos('c.v', 'qp.qv', 'c.nrm', 'qp.qn')} AS cos_sim
   FROM qp JOIN b c ON c.bucket = qp.bucket AND c.vec_id <> qp.query_id
 )
 SELECT query_id, neighbor_id, cos_sim, rk FROM (
@@ -225,9 +241,9 @@ WITH e AS (SELECT vec_id, label, {duck_cast_double('embedding')} AS v,
                   {duck_norm(duck_cast_double('embedding'))} AS nrm
            FROM embeddings WHERE nrm > 0)
 SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       round({duck_dot('a.v', 'b.v')} / (a.nrm * b.nrm), {COS_ROUND}) AS cos_sim
+       {duck_cos('a.v', 'b.v', 'a.nrm', 'b.nrm')} AS cos_sim
 FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
-WHERE round({duck_dot('a.v', 'b.v')} / (a.nrm * b.nrm), {COS_ROUND}) >= {NEARDUP_COS_THRESHOLD}
+WHERE {duck_cos('a.v', 'b.v', 'a.nrm', 'b.nrm')} >= {NEARDUP_COS_THRESHOLD}
 """
 
 
@@ -385,6 +401,21 @@ def ann_topk_ivf(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
     return _ivf_search(vecs, anchors, k)
 
 
+def _anchor_matrix(anchors: list):
+    """(A, an): the anchors' vectors as the rows of a float64 matrix, in cid
+    order, and their norms."""
+    A = np.stack([np.asarray(r["v"], dtype=np.float64) for r in anchors])
+    an = np.asarray([float(r["nrm"]) for r in anchors], dtype=np.float64)
+    return A, an
+
+
+def _batch_vectors(pdf):
+    """(V, nrm): an Arrow batch's vectors as a float64 matrix, and their
+    norms."""
+    return (np.stack(pdf["v"].to_numpy()).astype(np.float64),
+            pdf["nrm"].to_numpy(dtype=np.float64))
+
+
 def _assign_cells_arrow(vecs: DataFrame, anchors: list) -> DataFrame:
     """(vec_id, v, nrm, cid): nearest-anchor cell per vector, Arrow-batched
     numpy with an EXACT-ORDER dot fold (r15 optimization of the `_ivf_search`
@@ -401,39 +432,22 @@ def _assign_cells_arrow(vecs: DataFrame, anchors: list) -> DataFrame:
     ``ann_topk_ivf``. Pinned against the expression form by
     tests/test_similarity.py::test_arrow_cell_assignment_matches_sql.
 
-    KNOWN TIE-ROUNDING DIVERGENCE (r15 ADVICE, documented by choice): the
-    'bit-identical' claim above covers the DOT FOLD, not the final rounding
-    step — ``np.round`` scales by 1e4 (COS_ROUND) and rounds HALF-TO-EVEN on
-    the binary value, while the query side of ``_ivf_search`` keeps Spark
-    SQL ``round()`` (HALF_UP on the shortest-decimal representation, which
-    is also DuckDB's behavior). The two differ only for a cosine whose
-    shortest double representation terminates EXACTLY at the half-ulp
-    boundary of the 4th decimal (e.g. 0.12345) — measure-zero for
-    quotients of dot products (a random double's shortest repr has ~17
-    digits), impossible to hit with the fixtures' generated embeddings, and
-    verified empirically by the full-registry oracle sweeps at every SF.
-    The query side stays in expression form deliberately: its scan prunes
-    to ≤ N_QUERIES rows and keeps PushedFilters, which an Arrow kernel
-    would forfeit; unifying the rounding would trade a real plan property
-    for a theoretical tie. If a production corpus could land on the
-    boundary, route BOTH sides through this kernel (one code path, one
-    rounding rule) rather than re-implementing decimal HALF_UP in numpy."""
-    import numpy as np
-
-    A = np.stack([np.asarray(r["v"], dtype=np.float64) for r in anchors])
-    an = np.asarray([float(r["nrm"]) for r in anchors], dtype=np.float64)
+    The final rounding step is the shared numpy one
+    (``vectors.nearest_anchor``), half-to-even where the query side's SQL
+    ``round()`` is HALF_UP; the two differ only on exact decimal ties,
+    pinned by tests/test_similarity.py::test_cos_rounding_pin."""
+    A, an = _anchor_matrix(anchors)
 
     def assign(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            nrm = pdf["nrm"].to_numpy(dtype=np.float64)
+            V, nrm = _batch_vectors(pdf)
             dots = np.zeros((len(V), len(A)), dtype=np.float64)
             for j in range(V.shape[1]):
                 dots += V[:, j:j + 1] * A[:, j][None, :]
-            C = np.round(dots / np.outer(nrm, an), COS_ROUND)
-            yield pdf.assign(cid=C.argmax(axis=1).astype("int32"))[
+            cid, _aff = nearest_anchor(dots, nrm, an)
+            yield pdf.assign(cid=cid.astype("int32"))[
                 ["vec_id", "v", "nrm", "cid"]]
 
     return vecs.mapInPandas(
@@ -452,9 +466,7 @@ def _ivf_search(vecs: DataFrame, anchors: list, k: int) -> DataFrame:
     if not anchors:
         # empty corpus ⇒ no quantizer cells (F.lit([]) cannot type an empty
         # anchor literal); empty-in → empty-out like the oracle
-        return vecs.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cos_sim double, rk int"
-        )
+        return vecs.sparkSession.createDataFrame([], ANN_SCHEMA)
     aff = _affinity_col(anchors, "v", "nrm")
     corpus = _assign_cells_arrow(vecs, anchors)
     q = (
@@ -471,10 +483,7 @@ def _ivf_search(vecs: DataFrame, anchors: list, k: int) -> DataFrame:
         )
     )
     pairs = corpus.join(F.broadcast(q), "cid").where(F.col("vec_id") != F.col("query_id"))
-    cos = F.round(F.expr(spark_dot("v", "qv")) / (F.col("nrm") * F.col("qn")), COS_ROUND)
-    scored = pairs.select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos_sim"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
+    return _rank_neighbors(pairs, k)
 
 
 ANN_IVF_ORACLE = f"""
@@ -490,7 +499,7 @@ affinity AS (
   SELECT e.vec_id, e.v, e.nrm, a.cid,
          row_number() OVER (
            PARTITION BY e.vec_id
-           ORDER BY round({duck_dot('e.v', 'a.av')} / (e.nrm * a.an), {COS_ROUND}) DESC,
+           ORDER BY {duck_cos('e.v', 'a.av', 'e.nrm', 'a.an')} DESC,
                     a.cid ASC) AS rn
   FROM e CROSS JOIN anchors a
 ),
@@ -501,7 +510,7 @@ probes AS (
 ),
 scored AS (
   SELECT p.query_id, c.vec_id AS neighbor_id,
-         round({duck_dot('c.v', 'p.qv')} / (c.nrm * p.qn), {COS_ROUND}) AS cos_sim
+         {duck_cos('c.v', 'p.qv', 'c.nrm', 'p.qn')} AS cos_sim
   FROM probes p JOIN assigned c ON c.cid = p.cid AND c.vec_id <> p.query_id
 )
 SELECT query_id, neighbor_id, cos_sim, rk FROM (
@@ -578,28 +587,22 @@ def _ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame | None:
     enter codegen — they evaluate INTERPRETED, and at the derived cell
     count that O(k·dim) per-row assignment was 17 s of a 22 s sf1.0
     wall-clock; as V @ A.T the same math is ~1 s. Assignment parity with
-    the oracles: affinity rounded at COS_ROUND BEFORE the argmax, ties to
-    the lowest cid (np.argmax returns the first maximum; anchor columns
-    are cid-ordered)."""
-    import numpy as np
-
+    the oracles: ``vectors.nearest_anchor`` rounds the affinity at
+    COS_ROUND BEFORE the argmax, ties to the lowest cid."""
     n_cells = _derive_ivf_cells(load_table(spark, sf_dir, "embeddings").count())
     anchors = _anchor_rows(spark, sf_dir, n_cells)
     if not anchors:
         return None
     vecs = _vectors(spark, sf_dir)
-    A = np.stack([np.asarray(r["v"], dtype=np.float64) for r in anchors])
-    an = np.asarray([r["nrm"] for r in anchors], dtype=np.float64)
+    A, an = _anchor_matrix(anchors)
 
     def assign(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            nrm = pdf["nrm"].to_numpy(dtype=np.float64)
-            C = np.round((V @ A.T) / np.outer(nrm, an), COS_ROUND)
-            pdf = pdf.assign(cid=C.argmax(axis=1).astype("int32"),
-                             aff=C.max(axis=1))
+            V, nrm = _batch_vectors(pdf)
+            cid, aff = nearest_anchor(V @ A.T, nrm, an)
+            pdf = pdf.assign(cid=cid.astype("int32"), aff=aff)
             yield pdf[["vec_id", "v", "nrm", "cid", "aff"]]
 
     return vecs.mapInPandas(
@@ -629,11 +632,35 @@ def dedup_embedding_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivf_cell_pairs(corpus)
 
 
+def _cell_edges(pdf):
+    """(ids, edges) for one IVF cell: ``ids`` its vec_ids sorted, and
+    ``edges`` an iterator of (ia, ib, cos) per ``cos_tiles`` slab — the
+    index pairs with ids[ia] < ids[ib] whose rounded cosine is ≥ the
+    threshold. The shared kernel of :func:`_ivf_cell_pairs` and
+    :func:`_ivf_cell_labels`. The cell law targets ~125 mean occupancy,
+    but a SKEWED cell (near-identical vectors collapsing into one quantizer
+    slot) is unbounded, and a full c×c matrix in one task is the
+    O(cell²)-memory hazard the hot-bucket caps exist for elsewhere; slabs
+    bound intermediates to O(TILE_ROWS·c)."""
+    pdf = pdf.sort_values("vec_id")
+    ids = pdf["vec_id"].to_numpy()
+    V, nrm = _batch_vectors(pdf)
+
+    def edges():
+        for i0, _raw, cos in cos_tiles(V, V, nrm, nrm):
+            keep = (ids[i0:i0 + TILE_ROWS, None] < ids[None, :]) & (
+                cos >= NEARDUP_COS_THRESHOLD)
+            ia, ib = np.nonzero(keep)
+            if ia.size:
+                yield ia + i0, ib, cos[ia, ib]
+
+    return ids, edges()
+
+
 def _ivf_cell_pairs(corpus: DataFrame) -> DataFrame:
     """Per-IVF-cell near-dup pair generation over an :func:`_ivf_assign`
     frame (shared by :func:`dedup_embedding_ivf` and
     :func:`semdedup_prune`)."""
-    import numpy as np
     import pandas as pd
 
     def cell_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -642,33 +669,12 @@ def _ivf_cell_pairs(corpus: DataFrame) -> DataFrame:
                               "cos_sim": pd.Series(dtype="float64")})
         if len(pdf) < 2:
             return empty
-        pdf = pdf.sort_values("vec_id")
-        ids = pdf["vec_id"].to_numpy()
-        V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-        nrm = pdf["nrm"].to_numpy(dtype=np.float64)
-        # Row-chunked like the allpairs.py tile kernels (round-8 advisor):
-        # the derived cell law targets ~125 mean occupancy, but a SKEWED
-        # cell (near-identical vectors collapsing into one quantizer slot)
-        # is unbounded, and a full c×c matrix (plus its triu copies) in one
-        # task is the exact O(cell²)-memory hazard the hot-bucket caps
-        # exist for elsewhere. Each 1024×c slab bounds intermediates to
-        # O(slab·c); ids are sorted, so the strict upper triangle is the
-        # mask ids_chunk < ids — per-element math (dot/(na·nb), round at
-        # COS_ROUND, >= threshold) is unchanged, so oracle parity holds.
-        parts = []
-        chunk = 1024
-        for i0 in range(0, len(ids), chunk):
-            Sc = (V[i0:i0 + chunk] @ V.T) / np.outer(nrm[i0:i0 + chunk], nrm)
-            cos = np.round(Sc, COS_ROUND)
-            keep = (ids[i0:i0 + chunk, None] < ids[None, :]) & (
-                cos >= NEARDUP_COS_THRESHOLD)
-            ia, ib = np.nonzero(keep)
-            if ia.size:
-                parts.append((ids[i0:i0 + chunk][ia], ids[ib], cos[ia, ib]))
+        ids, edges = _cell_edges(pdf)
+        parts = list(edges)
         if not parts:
             return empty
-        return pd.DataFrame({"vec_a": np.concatenate([p[0] for p in parts]),
-                             "vec_b": np.concatenate([p[1] for p in parts]),
+        return pd.DataFrame({"vec_a": ids[np.concatenate([p[0] for p in parts])],
+                             "vec_b": ids[np.concatenate([p[1] for p in parts])],
                              "cos_sim": np.concatenate([p[2] for p in parts])})
 
     return corpus.groupBy("cid").applyInPandas(
@@ -691,12 +697,11 @@ def _ivf_cell_labels(corpus: DataFrame) -> DataFrame:
     ``_ivf_cell_pairs``: only vectors appearing in ≥1 pair get a row,
     ``cluster_id`` = min member vec_id (union-find roots keep the smaller
     index; ids are processed sorted).
-    Per-element math (dot/(na·nb), round at COS_ROUND, ≥ threshold) is
-    byte-identical to :func:`_ivf_cell_pairs`'s kernel — the chunked GEMM is
-    the same — so the grouped pair set, and therefore the labeling, matches
-    the oracle's recursive CTE exactly. Pinned against the global-CC form by
+    The pairs come from :func:`_ivf_cell_pairs`'s own kernel
+    (:func:`_cell_edges`), so the grouped pair set, and therefore the
+    labeling, matches the oracle's recursive CTE exactly. Pinned against
+    the global-CC form by
     tests/test_similarity.py::test_cell_labels_match_global_cc."""
-    import numpy as np
     import pandas as pd
 
     def cell_labels(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -704,25 +709,13 @@ def _ivf_cell_labels(corpus: DataFrame) -> DataFrame:
                               "cluster_id": pd.Series(dtype="int64")})
         if len(pdf) < 2:
             return empty
-        pdf = pdf.sort_values("vec_id")
-        ids = pdf["vec_id"].to_numpy()
-        V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-        nrm = pdf["nrm"].to_numpy(dtype=np.float64)
+        ids, edges = _cell_edges(pdf)
         parent = np.arange(len(ids))
         touched = np.zeros(len(ids), dtype=bool)
-        # per chunk, the kept pairs' index arrays np.nonzero already produced
-        # go straight into the shared vectorized union-find; ids are sorted,
-        # so each root (the component's smallest index) is its min vec_id
-        chunk = 1024
-        for i0 in range(0, len(ids), chunk):
-            Sc = (V[i0:i0 + chunk] @ V.T) / np.outer(nrm[i0:i0 + chunk], nrm)
-            cos = np.round(Sc, COS_ROUND)
-            keep = (ids[i0:i0 + chunk, None] < ids[None, :]) & (
-                cos >= NEARDUP_COS_THRESHOLD)
-            ia, ib = np.nonzero(keep)
-            if not ia.size:
-                continue
-            ia = ia + i0
+        # per slab, the kept pairs' index arrays go straight into the shared
+        # vectorized union-find; ids are sorted, so each root (the
+        # component's smallest index) is its min vec_id
+        for ia, ib, _cos in edges:
             touched[ia] = True
             touched[ib] = True
             parent = min_root_forest(parent, ia, ib)
@@ -755,15 +748,15 @@ affinity AS (
   SELECT e.vec_id, e.v, e.nrm, a.cid,
          row_number() OVER (
            PARTITION BY e.vec_id
-           ORDER BY round({duck_dot('e.v', 'a.av')} / (e.nrm * a.an), {COS_ROUND}) DESC,
+           ORDER BY {duck_cos('e.v', 'a.av', 'e.nrm', 'a.an')} DESC,
                     a.cid ASC) AS rn
   FROM e CROSS JOIN anchors a
 ),
 assigned AS (SELECT vec_id, v, nrm, cid FROM affinity WHERE rn = 1)
 SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       round({duck_dot('a.v', 'b.v')} / (a.nrm * b.nrm), {COS_ROUND}) AS cos_sim
+       {duck_cos('a.v', 'b.v', 'a.nrm', 'b.nrm')} AS cos_sim
 FROM assigned a JOIN assigned b ON a.cid = b.cid AND a.vec_id < b.vec_id
-WHERE round({duck_dot('a.v', 'b.v')} / (a.nrm * b.nrm), {COS_ROUND}) >= {NEARDUP_COS_THRESHOLD}
+WHERE {duck_cos('a.v', 'b.v', 'a.nrm', 'b.nrm')} >= {NEARDUP_COS_THRESHOLD}
 """
 
 
@@ -848,10 +841,10 @@ anchors AS (
 ),
 affinity AS (
   SELECT e.vec_id, e.v, e.nrm, a.cid,
-         round({duck_dot('e.v', 'a.av')} / (e.nrm * a.an), {COS_ROUND}) AS aff,
+         {duck_cos('e.v', 'a.av', 'e.nrm', 'a.an')} AS aff,
          row_number() OVER (
            PARTITION BY e.vec_id
-           ORDER BY round({duck_dot('e.v', 'a.av')} / (e.nrm * a.an), {COS_ROUND}) DESC,
+           ORDER BY {duck_cos('e.v', 'a.av', 'e.nrm', 'a.an')} DESC,
                     a.cid ASC) AS rn
   FROM e CROSS JOIN anchors a
 ),
@@ -859,7 +852,7 @@ assigned AS (SELECT vec_id, v, nrm, cid, aff FROM affinity WHERE rn = 1),
 prs AS (
   SELECT a.vec_id AS va, b.vec_id AS vb
   FROM assigned a JOIN assigned b ON a.cid = b.cid AND a.vec_id < b.vec_id
-  WHERE round({duck_dot('a.v', 'b.v')} / (a.nrm * b.nrm), {COS_ROUND}) >= {NEARDUP_COS_THRESHOLD}
+  WHERE {duck_cos('a.v', 'b.v', 'a.nrm', 'b.nrm')} >= {NEARDUP_COS_THRESHOLD}
 ),
 edges AS (SELECT va AS a, vb AS b FROM prs UNION SELECT vb AS a, va AS b FROM prs),
 reach AS (
@@ -935,10 +928,10 @@ anchors AS (
 ),
 affinity AS (
   SELECT e.vec_id, a.cid,
-         round({duck_dot('e.v', 'a.av')} / (e.nrm * a.an), {COS_ROUND}) AS aff,
+         {duck_cos('e.v', 'a.av', 'e.nrm', 'a.an')} AS aff,
          row_number() OVER (
            PARTITION BY e.vec_id
-           ORDER BY round({duck_dot('e.v', 'a.av')} / (e.nrm * a.an), {COS_ROUND}) DESC,
+           ORDER BY {duck_cos('e.v', 'a.av', 'e.nrm', 'a.an')} DESC,
                     a.cid ASC) AS rn
   FROM e CROSS JOIN anchors a
 ),
@@ -980,7 +973,7 @@ WITH e AS (SELECT vec_id, {duck_cast_double('embedding')} AS v,
 scored AS (
   SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
          {duck_dot('a.v', 'b.v')} AS dot,
-         round({duck_dot('a.v', 'b.v')} / (a.nrm * b.nrm), {COS_ROUND}) AS cos_sim
+         {duck_cos('a.v', 'b.v', 'a.nrm', 'b.nrm')} AS cos_sim
   FROM e a JOIN e b ON a.vec_id < b.vec_id
 )
 SELECT vec_a, vec_b, cos_sim FROM scored
@@ -1108,9 +1101,7 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("cn", F.expr(spark_norm("cv")))
         .where(F.col("cn") > 0)
     )
-    cos = F.round(
-        F.expr(spark_dot("v", "cv")) / (F.col("nrm") * F.col("cn")), COS_ROUND
-    )
+    cos = spark_cos("v", "cv", "nrm", "cn")
     scored = vecs.join(F.broadcast(cent), "label").select(
         "label", "vec_id", cos.alias("cos_centroid")
     )
@@ -1183,7 +1174,7 @@ WITH e AS (SELECT vec_id, label, {duck_cast_double('embedding')} AS v,
 scored AS (
   SELECT a.vec_id, a.label AS own, b.vec_id AS nbr_id, b.label AS nbr,
          {duck_dot('a.v', 'b.v')} AS dot,
-         round({duck_dot('a.v', 'b.v')} / (a.nrm * b.nrm), {COS_ROUND}) AS cos_sim
+         {duck_cos('a.v', 'b.v', 'a.nrm', 'b.nrm')} AS cos_sim
   FROM e a JOIN e b ON b.vec_id <> a.vec_id
 ),
 nn AS (
@@ -1283,9 +1274,9 @@ def _lsh_nn1(vecs: DataFrame, bits: int = LSH_SIGN_DIMS) -> DataFrame:
     # distinct keys and each candidate holds ONE key, so a (qid, nid) pair
     # arises at most once globally — bucket-local bests are over disjoint
     # candidate sets and the global window below reduces them exactly.
-    # Per-element math is the file's established numpy convention
-    # (allpairs.py): dot/(nq·nc), structural-zero filter, round at
-    # COS_ROUND before ranking, ties to the smallest nid.
+    # Per-element math is the shared kernel (functions/vectors.py):
+    # cos_tile's dot/(nq·nc) rounded at COS_ROUND, a structural-zero
+    # filter, and best_per_row's ties to the smallest nid.
     both = cand.select(
         "bucket", F.col("nid").alias("id"), F.col("nbr").alias("lab"),
         "v", "nrm", F.lit(False).alias("is_q"),
@@ -1300,7 +1291,6 @@ def _lsh_nn1(vecs: DataFrame, bits: int = LSH_SIGN_DIMS) -> DataFrame:
     # per-group pandas-frame cost; here each task concatenates its ~40 MB
     # of Arrow batches once and slices buckets with numpy boundaries
     def _part_best(batches):
-        import numpy as np
         import pandas as pd
 
         pdfs = [p for p in batches if len(p)]
@@ -1317,7 +1307,6 @@ def _lsh_nn1(vecs: DataFrame, bits: int = LSH_SIGN_DIMS) -> DataFrame:
         starts = np.flatnonzero(np.r_[True, bk[1:] != bk[:-1]])
         bounds = np.r_[starts, len(bk)]
         o_q, o_o, o_n, o_b, o_c = [], [], [], [], []
-        imax = np.iinfo(np.int64).max
         for s, t in zip(bounds[:-1], bounds[1:]):
             qm = isq[s:t]
             if qm.all() or not qm.any():
@@ -1327,20 +1316,16 @@ def _lsh_nn1(vecs: DataFrame, bits: int = LSH_SIGN_DIMS) -> DataFrame:
             co = np.argsort(nid)
             nid = nid[co]
             nlab = labs[s:t][cm][co]
-            Sc = ((V[s:t][qm] @ V[s:t][cm][co].T)
-                  / np.outer(nrm[s:t][qm], nrm[s:t][cm][co]))
+            Sc, M = cos_tile(V[s:t][qm], V[s:t][cm][co],
+                             nrm[s:t][qm], nrm[s:t][cm][co])
             valid = (Sc != 0.0) & (qid[:, None] != nid[None, :])
-            M = np.round(Sc, COS_ROUND)
             M[~valid] = -np.inf
-            mx = M.max(axis=1)
-            ok = mx != -np.inf
+            ok, nb, mx = best_per_row(M, nid)
             if not ok.any():
                 continue
-            tie = M[ok] == mx[ok][:, None]
-            nb = np.where(tie, nid[None, :], imax).min(axis=1)
             ci = np.searchsorted(nid, nb)
             o_q.append(qid[ok]); o_o.append(labs[s:t][qm][ok])
-            o_n.append(nb); o_b.append(nlab[ci]); o_c.append(mx[ok])
+            o_n.append(nb); o_b.append(nlab[ci]); o_c.append(mx)
         if o_q:
             yield pd.DataFrame({
                 "qid": np.concatenate(o_q), "own": np.concatenate(o_o),
@@ -1409,7 +1394,7 @@ qp AS (
 scored AS (
   SELECT qp.qid, qp.own, c.vec_id AS nid, c.label AS nbr,
          {duck_dot('c.v', 'qp.qv')} AS dot,
-         round({duck_dot('c.v', 'qp.qv')} / (c.nrm * qp.qn), {COS_ROUND}) AS cos_sim
+         {duck_cos('c.v', 'qp.qv', 'c.nrm', 'qp.qn')} AS cos_sim
   FROM qp JOIN c ON c.bucket = qp.bucket AND c.vec_id <> qp.qid
 ),
 nn AS (
@@ -1579,8 +1564,6 @@ def _pq_lloyd(X, k: int, seed: int):
     """Deterministic Lloyd k-means (seeded init, fixed 20 iterations) — the
     subspace trainer. numpy-only so training is reproducible across hosts;
     empty cells keep their previous centroid (standard small-sample Lloyd)."""
-    import numpy as np
-
     rng = np.random.RandomState(seed)
     k = min(k, len(X))
     C = X[rng.choice(len(X), size=k, replace=False)].copy()
@@ -1600,8 +1583,6 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str):
     rule, so the sample is engine-reproducible), memoized per corpus
     identity like every quantizer in this module. ``None`` on an empty
     corpus."""
-    import numpy as np
-
     sig = _corpus_signature(sf_dir)
     key = (sf_dir, "pq", sig)
     if sig is None or key not in _ANCHOR_CACHE:
@@ -1625,6 +1606,65 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str):
     return _ANCHOR_CACHE[key]
 
 
+def _pq_query_rows(spark: SparkSession, sf_dir: str):
+    """(vecs, qrows): the lineage-cut vector table every PQ search scans
+    twice, and its ≤ ``N_QUERIES`` query rows collected driver-side."""
+    vecs = _vectors(spark, sf_dir).localCheckpoint(eager=False)
+    return vecs, vecs.where(F.col("vec_id") < N_QUERIES).select("vec_id", "v", "nrm").collect()
+
+
+def _pq_encode(V, nrm, books):
+    """rows × PQ_M sub-codes: per subspace, the nearest codebook centroid
+    of each unit-normalized row of ``V``."""
+    U = V / nrm[:, None]
+    d = books[0].shape[1]
+    return np.stack([
+        ((U[:, None, m * d:(m + 1) * d] - books[m][None, :, :]) ** 2)
+        .sum(-1).argmin(1)
+        for m in range(PQ_M)
+    ], axis=1)
+
+
+def _pq_query_tables(books, qrows):
+    """(qdata, DT): per query row its (vec_id, v, nrm), and its ADC table
+    ``DT[vec_id][m, j] = ||u_m - c_mj||²`` over the unit query vector u."""
+    d = books[0].shape[1]
+    qdata, DT = [], {}
+    for r in qrows:
+        u = np.asarray(r["v"], dtype=np.float64) / r["nrm"]
+        DT[r["vec_id"]] = np.asarray([
+            [float(((books[m][j] - u[m * d:(m + 1) * d]) ** 2).sum())
+             for j in range(len(books[m]))]
+            for m in range(PQ_M)
+        ])
+        qdata.append((r["vec_id"], r["v"], float(r["nrm"])))
+    return qdata, DT
+
+
+def _adc_frame(ids, codes, DT, cid=None, probes=None):
+    """(vec_id, query_id, adist) pandas frame: each query's ADC distance to
+    the coded rows — with ``probes``, only to rows whose cell ``cid`` the
+    query probes. ``None`` when no row qualifies."""
+    import pandas as pd
+
+    out_v, out_q, out_d = [], [], []
+    for qid in sorted(DT):
+        sel = slice(None) if probes is None else np.isin(cid, list(probes[qid]))
+        q_ids = ids[sel]
+        if not len(q_ids):
+            continue
+        out_v.append(q_ids)
+        out_q.append(np.full(len(q_ids), qid))
+        out_d.append(DT[qid][np.arange(PQ_M)[None, :], codes[sel]].sum(1))
+    if not out_v:
+        return None
+    return pd.DataFrame({
+        "vec_id": np.concatenate(out_v),
+        "query_id": np.concatenate(out_q),
+        "adist": np.concatenate(out_d),
+    })
+
+
 def ann_topk_pq(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
     """(query_id, neighbor_id, cos_sim, rk): PQ ANN with exact re-rank —
     encode every vector to M sub-codes, scan the CODES with per-query ADC
@@ -1640,57 +1680,20 @@ def ann_topk_pq(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
     that is the M-byte column, not the 4 KB embedding; the shortlist join
     back to full vectors is a broadcast of ~queries × shortlist ids; exact
     work is O(queries × shortlist), independent of corpus size."""
-    import math
-
-    import numpy as np
-
     books = _pq_codebooks(spark, sf_dir)
-    empty = "query_id long, neighbor_id long, cos_sim double, rk int"
     if books is None:
-        return spark.createDataFrame([], empty)
-    vecs = _vectors(spark, sf_dir).localCheckpoint(eager=False)
-    qrows = (
-        vecs.where(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "v", "nrm").collect()
-    )
+        return spark.createDataFrame([], ANN_SCHEMA)
+    vecs, qrows = _pq_query_rows(spark, sf_dir)
     if not qrows:
-        return spark.createDataFrame([], empty)
-    d = len(qrows[0]["v"]) // PQ_M
-    # per-query ADC tables: dt[m][j] = ||q_m - c_mj||² over the unit vectors
-    qdata = []
-    for r in qrows:
-        q = np.asarray(r["v"], dtype=np.float64) / r["nrm"]
-        dt = [[float(((books[m][j] - q[m * d:(m + 1) * d]) ** 2).sum())
-               for j in range(len(books[m]))] for m in range(PQ_M)]
-        qdata.append((r["vec_id"], r["v"], float(r["nrm"]), dt))
-    B = [np.asarray(b) for b in books]
-    DT = {qid: np.asarray(dt) for qid, _v, _n, dt in qdata}
-    qids = np.asarray(sorted(DT))
+        return spark.createDataFrame([], ANN_SCHEMA)
+    qdata, DT = _pq_query_tables(books, qrows)
 
     def adc(batches):
-        import pandas as pd
-
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            V = V / pdf["nrm"].to_numpy(dtype=np.float64)[:, None]
-            codes = np.stack([
-                ((V[:, None, m * d:(m + 1) * d] - B[m][None, :, :]) ** 2)
-                .sum(-1).argmin(1)
-                for m in range(PQ_M)
-            ], axis=1)                                    # rows × M
-            out_v, out_q, out_d = [], [], []
-            for qid in qids:
-                ad = DT[qid][np.arange(PQ_M)[None, :], codes].sum(1)
-                out_v.append(pdf["vec_id"].to_numpy())
-                out_q.append(np.full(len(pdf), qid))
-                out_d.append(ad)
-            yield pd.DataFrame({
-                "vec_id": np.concatenate(out_v),
-                "query_id": np.concatenate(out_q),
-                "adist": np.concatenate(out_d),
-            })
+            V, nrm = _batch_vectors(pdf)
+            yield _adc_frame(pdf["vec_id"].to_numpy(), _pq_encode(V, nrm, books), DT)
 
     adist = vecs.mapInPandas(adc, "vec_id long, query_id long, adist double") \
         .where(F.col("vec_id") != F.col("query_id"))
@@ -1715,21 +1718,9 @@ def _pq_shortlist_rerank(spark: SparkSession, vecs: DataFrame,
         .where(F.col("rk_s") <= shortlist)
         .select("query_id", "vec_id")
     )
-    qdf = spark.createDataFrame(
-        [(qid, v, nrm) for qid, v, nrm, _dt in qdata],
-        "query_id long, qv array<double>, qn double",
-    )
-    cos = F.round(
-        F.expr(spark_dot("v", "qv")) / (F.col("nrm") * F.col("qn")), COS_ROUND)
-    reranked = (
-        vecs.join(F.broadcast(short), "vec_id")
-        .join(F.broadcast(qdf), "query_id")
-        .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                cos.alias("cos_sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"),
-                                               F.asc("neighbor_id"))
-    return reranked.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
+    qdf = spark.createDataFrame(qdata, "query_id long, qv array<double>, qn double")
+    return _rank_neighbors(
+        vecs.join(F.broadcast(short), "vec_id").join(F.broadcast(qdf), "query_id"), k)
 
 
 def ann_topk_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1785,60 +1776,26 @@ def ann_topk_ivfpq(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFram
     Against the same fixture, plain PQ reads every code and plain IVF
     reads full vectors in probed cells — this reads codes in probed cells
     only."""
-    import numpy as np
-
-    empty = "query_id long, neighbor_id long, cos_sim double, rk int"
     state = _ivfpq_state(spark, sf_dir)
     if state is None:
-        return spark.createDataFrame([], empty)
+        return spark.createDataFrame([], ANN_SCHEMA)
     books, _anchors, A, an, n = state
-    vecs = _vectors(spark, sf_dir).localCheckpoint(eager=False)
-    qrows = (
-        vecs.where(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "v", "nrm").collect()
-    )
+    vecs, qrows = _pq_query_rows(spark, sf_dir)
     if not qrows:
-        return spark.createDataFrame([], empty)
-    d = len(qrows[0]["v"]) // PQ_M
+        return spark.createDataFrame([], ANN_SCHEMA)
     # driver-side per-query state: the derived-nprobe nearest cells (same
     # rounded affinity + lowest-cid tiebreak as _ivf_assign) and the ADC
     # tables — shared verbatim with the persisted-codes twin
     probes, qdata, DT = _ivfpq_query_state(books, A, an, qrows)
-    B = [np.asarray(b) for b in books]
-    qids = sorted(DT)
 
     def adc(batches):
-        import pandas as pd
-
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            nrm = pdf["nrm"].to_numpy(dtype=np.float64)
-            cid = np.round((V @ A.T) / np.outer(nrm, an), COS_ROUND).argmax(1)
-            U = V / nrm[:, None]
-            codes = np.stack([
-                ((U[:, None, m * d:(m + 1) * d] - B[m][None, :, :]) ** 2)
-                .sum(-1).argmin(1)
-                for m in range(PQ_M)
-            ], axis=1)                                    # rows × M
-            ids = pdf["vec_id"].to_numpy()
-            out_v, out_q, out_d = [], [], []
-            for qid in qids:
-                mask = np.isin(cid, list(probes[qid]))    # probed cells only
-                if not mask.any():
-                    continue
-                ad = DT[qid][np.arange(PQ_M)[None, :], codes[mask]].sum(1)
-                out_v.append(ids[mask])
-                out_q.append(np.full(int(mask.sum()), qid))
-                out_d.append(ad)
-            if not out_v:
-                continue
-            yield pd.DataFrame({
-                "vec_id": np.concatenate(out_v),
-                "query_id": np.concatenate(out_q),
-                "adist": np.concatenate(out_d),
-            })
+            cid, codes = _ivfpq_encode(pdf, A, an, books)
+            out = _adc_frame(pdf["vec_id"].to_numpy(), codes, DT, cid, probes)
+            if out is not None:
+                yield out
 
     adist = vecs.mapInPandas(adc, "vec_id long, query_id long, adist double") \
         .where(F.col("vec_id") != F.col("query_id"))
@@ -1856,8 +1813,6 @@ def _ivfpq_state(spark: SparkSession, sf_dir: str):
     """(books, anchors, A, an) — the IVFPQ coordinator state, or ``None`` on
     an empty corpus. Shared by the in-plan search and the persisted-codes
     twin so both quantize identically (their results must be row-identical)."""
-    import numpy as np
-
     books = _pq_codebooks(spark, sf_dir)
     if books is None:
         return None
@@ -1865,30 +1820,31 @@ def _ivfpq_state(spark: SparkSession, sf_dir: str):
     anchors = _anchor_rows(spark, sf_dir, _derive_ivf_cells(n))
     if not anchors:
         return None
-    A = np.stack([np.asarray(r["v"], dtype=np.float64) for r in anchors])
-    an = np.asarray([r["nrm"] for r in anchors], dtype=np.float64)
+    A, an = _anchor_matrix(anchors)
     return books, anchors, A, an, n
 
 
 def _ivfpq_query_state(books, A, an, qrows):
-    """(probes, qdata, DT) — per-query probe sets and ADC tables, shared by
-    both IVFPQ variants (identical quantization on both paths)."""
-    import numpy as np
-
-    d = len(qrows[0]["v"]) // PQ_M
+    """(probes, qdata, DT) — per-query probe sets (the derived-nprobe cells
+    of highest rounded affinity, ties to the lowest cid) and ADC tables,
+    shared by both IVFPQ variants (identical quantization on both paths)."""
     nprobe = _derive_ivfpq_nprobe(len(A))
-    qdata, probes = [], {}
+    probes = {}
     for r in qrows:
-        q = np.asarray(r["v"], dtype=np.float64)
-        aff = np.round((A @ q) / (an * r["nrm"]), COS_ROUND)
+        dots = A @ np.asarray(r["v"], dtype=np.float64)
+        aff = cos_round(cos_quotient(dots[None, :], r["nrm"], an))[0]
         order = np.lexsort((np.arange(len(aff)), -aff))
         probes[r["vec_id"]] = set(int(c) for c in order[:nprobe])
-        u = q / r["nrm"]
-        dt = [[float(((books[m][j] - u[m * d:(m + 1) * d]) ** 2).sum())
-               for j in range(len(books[m]))] for m in range(PQ_M)]
-        qdata.append((r["vec_id"], r["v"], float(r["nrm"]), dt))
-    DT = {qid: np.asarray(dt) for qid, _v, _n, dt in qdata}
+    qdata, DT = _pq_query_tables(books, qrows)
     return probes, qdata, DT
+
+
+def _ivfpq_encode(pdf, A, an, books):
+    """(cid, codes) of an Arrow batch: each vector's nearest-anchor cell and
+    its PQ sub-codes — the one IVFPQ encoder, so the in-plan and persisted
+    twins quantize identically by construction."""
+    V, nrm = _batch_vectors(pdf)
+    return nearest_anchor(V @ A.T, nrm, an)[0], _pq_encode(V, nrm, books)
 
 
 def ann_topk_ivfpq_persisted(spark: SparkSession, sf_dir: str,
@@ -1908,25 +1864,16 @@ def ann_topk_ivfpq_persisted(spark: SparkSession, sf_dir: str,
     codebooks, same anchors, same derived nprobe ⇒ results are
     ROW-IDENTICAL to :func:`ann_topk_ivfpq` (pytest-pinned), and the same
     oracled recall-twin discipline gates the values."""
-    import numpy as np
-
     from tf_idf_using_mapreduce_spark.operators.persisted import _ensure_index
 
-    empty = "query_id long, neighbor_id long, cos_sim double, rk int"
     state = _ivfpq_state(spark, sf_dir)
     if state is None:
-        return spark.createDataFrame([], empty)
+        return spark.createDataFrame([], ANN_SCHEMA)
     books, _anchors, A, an, n = state
-    B = [np.asarray(b) for b in books]
-    vecs = _vectors(spark, sf_dir).localCheckpoint(eager=False)
-    qrows = (
-        vecs.where(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "v", "nrm").collect()
-    )
+    vecs, qrows = _pq_query_rows(spark, sf_dir)
     if not qrows:
-        return spark.createDataFrame([], empty)
+        return spark.createDataFrame([], ANN_SCHEMA)
     probes, qdata, DT = _ivfpq_query_state(books, A, an, qrows)
-    d = len(qrows[0]["v"]) // PQ_M
 
     def encode(batches):
         import pandas as pd
@@ -1934,15 +1881,7 @@ def ann_topk_ivfpq_persisted(spark: SparkSession, sf_dir: str,
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            nrm = pdf["nrm"].to_numpy(dtype=np.float64)
-            cid = np.round((V @ A.T) / np.outer(nrm, an), COS_ROUND).argmax(1)
-            U = V / nrm[:, None]
-            codes = np.stack([
-                ((U[:, None, m * d:(m + 1) * d] - B[m][None, :, :]) ** 2)
-                .sum(-1).argmin(1)
-                for m in range(PQ_M)
-            ], axis=1)
+            cid, codes = _ivfpq_encode(pdf, A, an, books)
             yield pd.DataFrame({
                 "vec_id": pdf["vec_id"].to_numpy(),
                 "code": list(codes.astype("int32")),
@@ -1962,33 +1901,15 @@ def ann_topk_ivfpq_persisted(spark: SparkSession, sf_dir: str,
     codes_tbl = spark.table(name) if name is not None else build()
     probed = sorted(set().union(*probes.values()))
     scan = codes_tbl.where(F.col("cid").isin(probed))
-    qids = sorted(DT)
 
     def adc(batches):
-        import pandas as pd
-
         for pdf in batches:
             if not len(pdf):
                 continue
-            codes = np.stack(pdf["code"].to_numpy())
-            cid = pdf["cid"].to_numpy()
-            ids = pdf["vec_id"].to_numpy()
-            out_v, out_q, out_d = [], [], []
-            for qid in qids:
-                mask = np.isin(cid, list(probes[qid]))
-                if not mask.any():
-                    continue
-                ad = DT[qid][np.arange(PQ_M)[None, :], codes[mask]].sum(1)
-                out_v.append(ids[mask])
-                out_q.append(np.full(int(mask.sum()), qid))
-                out_d.append(ad)
-            if not out_v:
-                continue
-            yield pd.DataFrame({
-                "vec_id": np.concatenate(out_v),
-                "query_id": np.concatenate(out_q),
-                "adist": np.concatenate(out_d),
-            })
+            out = _adc_frame(pdf["vec_id"].to_numpy(), np.stack(pdf["code"].to_numpy()),
+                             DT, pdf["cid"].to_numpy(), probes)
+            if out is not None:
+                yield out
 
     adist = scan.mapInPandas(adc, "vec_id long, query_id long, adist double") \
         .where(F.col("vec_id") != F.col("query_id"))

@@ -557,7 +557,6 @@ LIMIT {k}
 RRF_K = 60       # Cormack et al.'s constant; dampens the head rank's weight
 RRF_POOL = 100   # per-ranker candidate list depth fused (standard truncation)
 RRF_SEM_QUERY_VEC = 0  # the pinned semantic query: vec 0's embedding
-RRF_COS_ROUND = 4      # the engine-wide cosine rounding (similarity.py)
 
 
 def rrf_fusion_topk(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
@@ -578,7 +577,7 @@ def rrf_fusion_topk(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
 
     Float parity: each lexical leg's score is the bm25_topk fixed-order
     pivot sum (never SUM() over per-term rows), rounded at SCORE_ROUND
-    BEFORE ranking; the semantic leg rounds its cosine at RRF_COS_ROUND
+    BEFORE ranking; the semantic leg rounds its cosine at COS_ROUND
     before ranking (the engine-wide convention); the fusion itself is a
     fixed-order sum of exact reciprocals (CAST(1 AS DOUBLE)/(K + rank)),
     identical IEEE ops on both engines. Ranks are integers — order-proof.
@@ -649,7 +648,7 @@ def _rrf_semantic_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from tf_idf_using_mapreduce_spark.functions.vectors import (
         CAST_DOUBLE,
-        spark_dot,
+        spark_cos,
         spark_norm,
     )
 
@@ -662,9 +661,7 @@ def _rrf_semantic_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame([], "doc_id long, rank bigint")
     qv = F.lit([float(x) for x in q[0]["v"]])
     qn = F.lit(float(q[0]["nrm"]))
-    cos = F.round(
-        F.expr(spark_dot("v", "_qv")) / (F.col("nrm") * F.col("_qn")), RRF_COS_ROUND
-    )
+    cos = spark_cos("v", "_qv", "nrm", "_qn")
     scored = e.withColumn("_qv", qv).withColumn("_qn", qn).select(
         F.col("vec_id").alias("doc_id"), cos.alias("score")
     )
@@ -684,7 +681,7 @@ def _vsm_score_expr(tf: str, df: str, n: str) -> str:
 def rrf_fusion_topk_oracle(k: int = 20) -> str:
     from tf_idf_using_mapreduce_spark.functions.vectors import (
         duck_cast_double,
-        duck_dot,
+        duck_cos,
         duck_norm,
     )
 
@@ -728,7 +725,7 @@ topb AS (SELECT doc_id, round({tb}, {SCORE_ROUND}) AS score FROM per_doc
 topv AS (SELECT doc_id, round({tv}, {SCORE_ROUND}) AS score FROM per_doc
          ORDER BY score DESC, doc_id ASC LIMIT {RRF_POOL}),
 tops AS (SELECT e.vec_id AS doc_id,
-                round({duck_dot('e.v', 'q.qv')} / (e.nrm * q.qn), {RRF_COS_ROUND}) AS score
+                {duck_cos('e.v', 'q.qv', 'e.nrm', 'q.qn')} AS score
          FROM e, qvec q
          ORDER BY score DESC, doc_id ASC LIMIT {RRF_POOL}),
 rb AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY score DESC, doc_id ASC) AS BIGINT)

@@ -462,6 +462,32 @@ FORCE_FRESH: frozenset[str] = frozenset({
     "events_stream_dedup",
     "events_stream_stream_join",
     "events_user_running_totals",
+    # one cosine (functions/vectors.py): spark_cos/duck_cos and the numpy
+    # tile, nearest-anchor, best-per-row and PQ codec kernels
+    "ann_topk_bruteforce",
+    "ann_topk_lsh",
+    "ann_topk_ivf",
+    "ann_topk_ivf_kmeans",
+    "ann_topk_pq",
+    "ann_topk_ivfpq",
+    "ann_topk_ivfpq_persisted",
+    "ann_topk_ivf_kmeans_recall",
+    "ann_topk_mllib_recall",
+    "ann_topk_pq_recall",
+    "ann_topk_ivfpq_recall",
+    "ann_topk_ivfpq_persisted_recall",
+    "dedup_embedding_cosine",
+    "dedup_embedding_ivf",
+    "semdedup_prune",
+    "diverse_sample_ivf",
+    "embedding_topk_pairs",
+    "embedding_outliers",
+    "knn_label_agreement",
+    "knn_label_agreement_lsh",
+    "tfidf_doc_similarity",
+    "split_leakage_semantic",
+    # its DDL path changed in r16 and no gate has pinned it since
+    "events_vacuum_roundtrip",
 })
 
 
