@@ -5,15 +5,29 @@ implementation (no Spark, no SQL) + DuckDB oracle parity + plan assertions.
 from __future__ import annotations
 
 import math
+import os
 import re
+import subprocess
+import sys
+import textwrap
+import threading
+import time
 from collections import Counter, defaultdict
 
 import duckdb
 import pytest
 
 from tests.conftest import SF_SMOKE, assert_query_matches_oracle
-from tf_idf_using_mapreduce_spark.functions.porter import porter_stem_py
-from tf_idf_using_mapreduce_spark.operators.tfidf import doc_freq, stemmed_tokens, tfidf
+from tf_idf_using_mapreduce_spark.functions.porter import porter_stem_py, with_stem
+from tf_idf_using_mapreduce_spark.operators import tfidf as tfidf_mod
+from tf_idf_using_mapreduce_spark.operators.tfidf import (
+    doc_freq,
+    stem_dictionary,
+    stemmed_tokens,
+    term_counts_of,
+    tfidf,
+)
+from tf_idf_using_mapreduce_spark.session import PACKAGE_PARENT
 from tf_idf_using_mapreduce_spark.sources.corpus import stopwords
 
 
@@ -109,6 +123,144 @@ def test_case_sensitive_vocabulary(spark):
     assert "the" not in {r["term"] for r in doc_freq_of(docs).collect()}
     terms = {r["term"] for r in tfidf_of(docs, case_sensitive=True).collect()}
     assert terms == set(vocab)
+
+
+# -- the session's Porter stem memo (stem_dictionary) -------------------------
+# Tokens prefixed "zqm" appear in no fixture, so each test's corpus is new to
+# the session's memo whatever ran before it.
+
+
+@pytest.fixture
+def stem_calls(monkeypatch):
+    """Each ``with_stem`` call ``stem_dictionary`` makes appends one entry."""
+    calls = []
+
+    def counting(df, *args, **kwargs):
+        calls.append(1)
+        return with_stem(df, *args, **kwargs)
+
+    monkeypatch.setattr(tfidf_mod, "with_stem", counting)
+    return calls
+
+
+def _tokens(spark, tokens):
+    return spark.createDataFrame([(t,) for t in tokens], "token string")
+
+
+def _stems_of(spark, tokens) -> dict[str, str]:
+    """token -> stem as ``stem_dictionary`` returns it over ``tokens``; it
+    asserts the memo holds each token once (a duplicate would double TF)."""
+    rows = stem_dictionary(_tokens(spark, tokens)).collect()
+    assert len(rows) == len({r["token"] for r in rows}), "duplicate tokens in the memo"
+    return {r["token"]: r["stem"] for r in rows}
+
+
+def test_stem_memo_second_call_stems_nothing(spark, stem_calls):
+    docs = spark.createDataFrame(
+        [(1, "zqmrunning zqmrunning zqmjumps"), (2, "zqmjumps zqmeasily")],
+        "doc_id long, text string",
+    )
+    first = sorted(tuple(r) for r in term_counts_of(docs).collect())
+    assert len(stem_calls) == 1
+    second = sorted(tuple(r) for r in term_counts_of(docs).collect())
+    assert len(stem_calls) == 1, "a warm call over the same corpus ran with_stem"
+    assert first == second == [(1, "zqmjump", 1), (1, "zqmrun", 2),
+                               (2, "zqmeasili", 1), (2, "zqmjump", 1)]
+
+
+def test_stem_memo_extends_to_new_corpus(spark):
+    """Corpus B after corpus A: B's tokens, shared and new, map to the stems
+    a direct ``with_stem`` and the pure-Python stemmer give."""
+    shared = ["zqmsharing", "zqmrelational", "running"]
+    a = shared + ["zqmalphaness", "zqmhopeful"]
+    b = shared + ["zqmbetaizing", "zqmconditional", "happiness"]
+    _stems_of(spark, a)
+    got = _stems_of(spark, b)
+    direct = {r["token"]: r["stem"] for r in with_stem(_tokens(spark, b)).collect()}
+    assert {t: got.get(t) for t in b} == direct == {t: porter_stem_py(t) for t in b}
+
+
+def test_stem_memo_shared_across_case_modes(spark, stem_calls):
+    """``case_sensitive`` tokens keep their case but stem to the lowercase
+    stem, so the default call finds every token the case-sensitive call
+    stemmed and stems nothing."""
+    docs = spark.createDataFrame(
+        [(1, "Zqmwalking zqmwalking"), (2, "zqmwalking Zqmtalks zqmtalks")],
+        "doc_id long, text string",
+    )
+    sensitive = sorted(tuple(r) for r in term_counts_of(docs, case_sensitive=True).collect())
+    assert len(stem_calls) == 1
+    default = sorted(tuple(r) for r in term_counts_of(docs).collect())
+    assert len(stem_calls) == 1, "the default call re-stemmed tokens the session has seen"
+    assert sensitive == default == [(1, "zqmwalk", 2), (2, "zqmtalk", 2), (2, "zqmwalk", 1)]
+    memo = _stems_of(spark, ["Zqmwalking", "zqmwalking"])
+    assert memo["Zqmwalking"] == memo["zqmwalking"] == "zqmwalk"
+
+
+def test_stem_memo_concurrent_corpora(spark, stem_calls, monkeypatch):
+    """Threads stemming different corpora at once each get a complete
+    dictionary, and no thread's update to the memo is lost. ``with_stem`` is
+    slowed and the switch interval shortened so the calls overlap."""
+    counting = tfidf_mod.with_stem
+
+    def slow(df, *args, **kwargs):
+        time.sleep(0.5)
+        return counting(df, *args, **kwargs)
+
+    monkeypatch.setattr(tfidf_mod, "with_stem", slow)
+    corpora = [[f"zqmthread{i}ing", f"zqmthread{i}ness", "running"] for i in range(5)]
+    start = threading.Barrier(len(corpora))
+    got: dict[int, dict[str, str]] = {}
+
+    def run(i):
+        start.wait()
+        got[i] = _stems_of(spark, corpora[i])
+
+    threads = [threading.Thread(target=run, args=(i,)) for i in range(len(corpora))]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    for i, tokens in enumerate(corpora):
+        assert {t: got[i].get(t) for t in tokens} == {t: porter_stem_py(t) for t in tokens}
+    before = len(stem_calls)
+    _stems_of(spark, [t for tokens in corpora for t in tokens])
+    assert len(stem_calls) == before, "a thread's tokens were lost from the memo"
+
+
+def test_stem_memo_not_shared_across_contexts(tmp_path):
+    """A new SparkContext in the same process starts an empty memo: the
+    slot of the stopped context, whose checkpoint blocks are gone, is never
+    read."""
+    script = textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {PACKAGE_PARENT!r})
+        from tf_idf_using_mapreduce_spark.operators import tfidf
+        from tf_idf_using_mapreduce_spark.session import get_spark
+
+        def stems(spark, tokens):
+            df = spark.createDataFrame([(t,) for t in tokens], "token string")
+            return sorted(tuple(r) for r in tfidf.stem_dictionary(df).collect())
+
+        first = get_spark("memo-first", shuffle_partitions=2)
+        stems(first, ["running", "cats"])
+        first.stop()
+        second = get_spark("memo-second", shuffle_partitions=2)
+        print(stems(second, ["jumping"]))
+        print(tfidf._stem_memo[0] == second.sparkContext.applicationId)
+    """)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_DRIVER_MEMORY="1g")
+    proc = subprocess.run([sys.executable, "-c", script], cwd=tmp_path, env=env,
+                          capture_output=True, text=True, timeout=300)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert proc.stdout.strip().splitlines()[-2:] == ["[('jumping', 'jump')]", "True"]
 
 
 def test_tfidf_doc_similarity_oracle_parity(spark):

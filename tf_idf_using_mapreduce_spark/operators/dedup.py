@@ -408,9 +408,15 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     Semantics: a containment value could only move if two DISTINCT md5
     fingerprints of one document shared a 60-bit prefix — ~n²/2⁶¹ for the
     ≤10³ fingerprints a document carries (≈10⁻¹³; verified no-collision on
-    every fixture SF), and BOTH engines would move together anyway. The
-    md5-string form remains in :func:`~tf_idf_using_mapreduce_spark.
-    operators.textstats.fingerprint_sets` for the oracled
+    every fixture SF), and BOTH engines would move together anyway. Across
+    documents the birthday bound is what counts: N distinct fingerprints in
+    the corpus give about N²/2⁶¹ colliding pairs — nil on the fixtures, but
+    ~4×10⁵ at N = 10¹². Each such pair reads as one shared fingerprint
+    between two documents, so it can add a candidate pair or inflate a
+    containment value; the oracle's identical prefix map keeps parity, so no
+    gate sees it. The md5-string form remains in
+    :func:`~tf_idf_using_mapreduce_spark.operators.textstats.fingerprint_sets`
+    for the oracled
     ``doc_fingerprints`` surface, which exposes fingerprint VALUES."""
     from tf_idf_using_mapreduce_spark.operators.textstats import fingerprint_sets
 

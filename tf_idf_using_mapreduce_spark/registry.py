@@ -416,16 +416,15 @@ register("events_vacuum_roundtrip", _tt.events_vacuum_roundtrip,
 # re-verify regardless of any prior green row. Maintained by hand; reset at
 # the start of each round.
 #
-# Round-14 window (derived): 11 FORCE_FRESH + 11 never-checked round-14
-# queries (daily persisted probe, IVFPQ + its recall twin, persisted-codes
-# IVFPQ + its recall twin, schema evolution, merge, CDC stream, time
-# travel, snapshot diff, vacuum) + 28 of the 48 round-10-stale queries = 50.
-# The 20 r10 queries that don't fit are the arithmetic of a 50-slot window
-# against a 194-query registry (the r13 precedent): all 20 are green in
-# this round's full local sf0.01 + sf0.1 sweeps (SCALE.md round-14
-# pre-flight), and the derived rotation makes them the stalest tier next
-# round, so they refresh first in r15. Every r9-stale query the r13
-# verdict flagged is FORCE_FRESH-pinned inside this window.
+# Window arithmetic against the correctness gate's 50-slot sample: every
+# query has gate evidence (rounds 12-16), so FORCE_FRESH alone fills it,
+# stalest evidence first; what falls past slot 50 is the round-16 entries
+# last in literal registration order. 52 entries before the stem memo, 58
+# with it; the 8 past slot 50 are tfidf_mllib_topk_overlap,
+# tfidf_doc_similarity, bigram_pmi, split_leakage, split_leakage_semantic,
+# semdedup_prune, diverse_sample_ivf and documents_stream_chunk_dedup. All
+# 8 are hash-checked locally with tools/check_oracle.py at sf0.01 and sf0.1
+# (CHANGES.md, stem memo entry).
 FORCE_FRESH: frozenset[str] = frozenset({
     # one document-frequency definition (the counts-table vocabulary) and
     # one shared BM25/RRF postings front
@@ -488,6 +487,14 @@ FORCE_FRESH: frozenset[str] = frozenset({
     "split_leakage_semantic",
     # its DDL path changed in r16 and no gate has pinned it since
     "events_vacuum_roundtrip",
+    # one session stem memo (tfidf.stem_dictionary): every query that stems
+    # through it (doc_freq_top100 and tfidf_doc_similarity are listed above)
+    "tfidf",
+    "top_terms_per_doc",
+    "doc_freq_approx",
+    "doc_freq_approx_err",
+    "tfidf_mllib",
+    "tfidf_mllib_topk_overlap",
 })
 
 
