@@ -172,10 +172,56 @@ def test_connected_components_warns_on_cap_exhaustion(spark):
                connected_components(edges, max_iters=1, local_edges=0).collect()}
     assert any("round cap" in str(w.message) for w in rec)
     assert all(cid <= d for d, cid in got.items())
+    # the exact OVER-SPLIT labeling after one probe (two star rounds): each
+    # node past 5 points 4 hops down the path, not at the component min 1
+    assert got == {d: max(1, d - 4) for d in range(1, 17)}
     with _w.catch_warnings(record=True) as rec2:
         _w.simplefilter("always")
         connected_components_twostar(edges, max_iters=1).collect()
     assert any("round cap" in str(w.message) for w in rec2)
+
+
+def _jobs_of(spark, fn, group: str) -> int:
+    """Spark jobs ``fn()`` runs, counted by job group: unlike wall time, a
+    count the host's load cannot move."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup("", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_connected_components_job_count(spark):
+    """Job-count regression guard. Rounds only (``local_edges=0``), the
+    16-node path runs 8 star rounds = 4 probes of 4 jobs each (the round,
+    round and distinct map stages plus the observed cut), then 2 for the
+    extraction. At the default bound the transitive fixture runs one probe
+    and the local finish's single job."""
+    from tf_idf_using_mapreduce_spark.operators.dedup import connected_components
+
+    path = spark.createDataFrame([(i, i + 1) for i in range(1, 16)], "doc_a long, doc_b long")
+    stats = {}
+    assert _jobs_of(spark, lambda: connected_components(
+        path, local_edges=0, stats=stats).collect(), "cc-path16") == 18
+    assert stats["rounds"] == 8
+    trans = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (22, 23), (23, 24)],
+        "doc_a long, doc_b long",
+    )
+    assert _jobs_of(spark, lambda: connected_components(trans).collect(), "cc-trans") == 4
+
+
+def test_star_round_is_one_grouping(spark):
+    """One star round plans exactly one hash exchange (the grouping by
+    node) and no join: both stars come from each node's neighbor set."""
+    pairs = spark.createDataFrame([(2, 1), (3, 2), (4, 3)], "u long, v long")
+    plan = dedup._star_round(pairs)._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
+    assert "Join" not in plan, plan
+    assert sorted(tuple(r) for r in dedup._star_round(pairs).distinct().collect()) == [
+        (2, 1), (3, 1), (3, 2), (4, 2), (4, 3)]
 
 
 def test_dedup_incremental_oracle_parity(spark):

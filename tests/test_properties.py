@@ -120,8 +120,9 @@ def test_connected_components_matches_union_find(edge_list):
 
     edges = spark.createDataFrame(edge_list, "doc_a long, doc_b long")
     for bound in (CC_LOCAL_EDGES, 0, 3):
-        got = {r["doc_id"]: r["cluster_id"] for r in
-               connected_components(edges, local_edges=bound).collect()}
+        rows = connected_components(edges, local_edges=bound).collect()
+        got = {r["doc_id"]: r["cluster_id"] for r in rows}
+        assert len(got) == len(rows), bound  # one label row per node
         assert got == want, bound
 
 

@@ -168,6 +168,18 @@ def test_stem_memo_second_call_stems_nothing(spark, stem_calls):
                                (2, "zqmeasili", 1), (2, "zqmjump", 1)]
 
 
+def test_stem_memo_is_one_partition(spark, monkeypatch):
+    """The memo is vocabulary-sized, so it lives in ONE partition: each of
+    its broadcasts then runs one task. Holds after a context's first stem
+    (the slot emptied), after a stem that extends the memo, and on a hit."""
+    monkeypatch.setattr(tfidf_mod, "_stem_memo", None)
+    assert stem_dictionary(_tokens(spark, ["zqmpartone", "zqmparting"])).rdd.getNumPartitions() == 1
+    grown = stem_dictionary(_tokens(spark, ["zqmparttwo", "zqmparting"]))
+    assert grown.rdd.getNumPartitions() == 1
+    assert {"zqmpartone", "zqmparttwo", "zqmparting"} <= {r["token"] for r in grown.collect()}
+    assert stem_dictionary(_tokens(spark, ["zqmparting"])).rdd.getNumPartitions() == 1
+
+
 def test_stem_memo_extends_to_new_corpus(spark):
     """Corpus B after corpus A: B's tokens, shared and new, map to the stems
     a direct ``with_stem`` and the pure-Python stemmer give."""

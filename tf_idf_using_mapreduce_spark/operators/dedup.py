@@ -34,7 +34,7 @@ from __future__ import annotations
 
 import warnings
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
@@ -1393,6 +1393,33 @@ def _local_labels(pdf):
     return pd.DataFrame({"doc_id": ids, "cluster_id": ids[parent]})
 
 
+def _closed_min(pairs: DataFrame) -> DataFrame:
+    """(u, nb, m): every node of the ``(u, v)`` edges with its neighbor set
+    Γ(u) and m = min(Γ(u) ∪ {u}). One grouping of the symmetric closure
+    (each edge exploded into both directions), so one hash exchange;
+    ``collect_set`` drops duplicate edges inside each group, so the input
+    need not be distinct. Γ(u) is one row in one task: its size is u's
+    degree, at most its component's size."""
+    return (
+        pairs.select(F.inline(F.array(
+            F.struct("u", "v"), F.struct(F.col("v").alias("u"), F.col("u").alias("v")))))
+        .groupBy("u").agg(F.collect_set("v").alias("nb"))
+        .withColumn("m", F.least("u", F.array_min("nb")))
+    )
+
+
+def _star_round(pairs: DataFrame) -> DataFrame:
+    """One large-star + small-star round of :func:`connected_components`
+    over canonical ``(u, v)`` edges (u > v): every member x ≠ m of each
+    node's closed neighborhood Γ(u) ∪ {u} attached to m. Every emitted edge
+    has x > m, so the output stays canonical; it may repeat an edge that
+    two nodes emit."""
+    return _closed_min(pairs).select(
+        F.explode(F.array_remove(F.concat("nb", F.array("u")), F.col("m"))).alias("u"),
+        F.col("m").alias("v"),
+    )
+
+
 def connected_components(edges: DataFrame, src: str = "doc_a", dst: str = "doc_b",
                          max_iters: int = CC_MAX_ITERS, stats: dict | None = None,
                          local_edges: int = CC_LOCAL_EDGES) -> DataFrame:
@@ -1406,134 +1433,70 @@ def connected_components(edges: DataFrame, src: str = "doc_a", dst: str = "doc_b
     Analysis*, VLDB'12: pay for a round only while the data cannot be
     finished in one task):
 
-    - ROUNDS: alternating large-star / small-star (Kiveris et al.,
-      "Connected Components in MapReduce and Beyond", SoCC'14 — public
-      algorithm). O(log n) rounds in the component SIZE, not the diameter,
-      so a 100 TB web-crawl graph with long path-shaped near-dup chains
-      converges in ~log rounds where plain label propagation needs diameter
-      rounds. Each round preserves every component and its minimum; the
-      edge count shrinks monotonically toward the star forest.
+    - ROUNDS: large-star and small-star (Kiveris et al., "Connected
+      Components in MapReduce and Beyond", SoCC'14 — public algorithm),
+      both in every round. O(log n) rounds in the component SIZE, not the
+      diameter, so long path-shaped near-dup chains converge in ~log rounds
+      where plain label propagation needs diameter rounds. Each round
+      preserves every component, its minimum and its node set; the edge
+      count shrinks toward the star forest. With m(u) = min(Γ(u) ∪ {u}):
 
-      - large-star(u): m = min(Γ(u) ∪ {u}); connect every STRICTLY LARGER
-        neighbor to m — long tails fold upward without touching the minimum.
-      - small-star(u): over edges oriented child≥parent, m = min(Γ≤(u) ∪
-        {u}); reconnect u and its ≤-neighbors to m — flattens local stars.
+      - large-star(u): connect every neighbor x > u to m(u);
+      - small-star(u), when u has a smaller neighbor: connect u and every
+        smaller neighbor x ≠ m(u) to m(u).
+
+      Their union is {(x, m(u)) : x ∈ Γ(u) ∪ {u}, x ≠ m(u)}, so a round
+      (:func:`_star_round`) is one reducer over each node's neighbor set:
+      one grouping, then one generator, no join.
     - LOCAL FINISH: once the probed edge count is at or below
       ``local_edges`` (default :data:`CC_LOCAL_EDGES`), the remaining edges
-      go to ONE grouped-map ``applyInPandas`` task that labels them with the
-      vectorized union-find :func:`min_root_forest`. At fixture scale this
-      happens at the first probe, before any round.
+      go to ONE grouped-map ``applyInPandas`` task that labels every node
+      with the vectorized union-find :func:`min_root_forest`. At fixture
+      scale this happens at the first probe, before any round.
 
     ``local_edges=0`` runs rounds only: no up-front probe, rounds to the
-    fixpoint, then star extraction — the pure distributed form, which
+    fixpoint, then star extraction (every node of the final edges labeled
+    m(u)) — the pure distributed form, which
     :func:`connected_components_twostar` keeps under the oracle.
 
-    Fixpoint when the edge set stops changing (count + order-insensitive
-    bit_xor of per-edge xxhash64 — one tiny aggregate per probe, coordinator
-    control like AQE's runtime re-planning; xor is safe because the edge set
-    is distinct). The check compares against ALL signatures seen so far, not
-    just the previous probe's, so a periodic oscillation of the edge set
-    terminates instead of spinning to the cap (Kiveris et al. prove
-    monotone convergence, so a revisited state can never progress further).
-    The same probe's count decides the local finish.
+    Two rounds per probe: the probe takes the distinct edge set, cuts it
+    and computes its signature (count + order-insensitive bit_xor of
+    per-edge xxhash64; xor is exact because the set is distinct). The
+    fixpoint is a signature seen before at any earlier probe, so a periodic
+    oscillation terminates instead of spinning to the cap (Kiveris et al.
+    prove monotone convergence, so a revisited state can never progress
+    further). The same probe's count decides the local finish.
+    ``stats["rounds"]`` (optional out-param) reports the star rounds run.
 
-    CAP-EXHAUSTION CONTRACT: if ``max_iters`` is hit before a fixpoint or a
-    local finish, the star extraction (min neighbor per node) can assign
-    labels that are NOT component minima — i.e. an OVER-SPLIT labeling (one
-    true component reported as several), not merely a coarser merge. For
-    dedup that direction is safe (keeps extra docs, never deletes across a
-    split), but callers must treat the RuntimeWarning as a correctness
-    signal and raise the cap."""
-    # canonical (child=max, parent=min) pairs, self-loops dropped; one
-    # materialization up front so rounds don't recompute the upstream pair
-    # pipeline. Storing CANONICAL pairs (r5) halves the per-round distinct
-    # work: the symmetric closure each large-star needs is then a pure
-    # projection union (a distinct canonical set cannot contain both
-    # orientations), where the r4 form ran a second corpus-scale DISTINCT
-    # over 2|E| rows per round — and every new edge either star emits is
-    # already child>parent, so one distinct per round suffices.
+    CAP-EXHAUSTION CONTRACT: if ``max_iters`` probes (2·max_iters rounds)
+    pass before a fixpoint or a local finish, the star extraction can
+    assign labels that are NOT component minima — i.e. an OVER-SPLIT
+    labeling (one true component reported as several), not merely a
+    coarser merge. For dedup that direction is safe (keeps extra docs,
+    never deletes across a split), but callers must treat the
+    RuntimeWarning as a correctness signal and raise the cap."""
+    def probe(df: DataFrame) -> tuple[DataFrame, tuple]:
+        # the distinct edge set, cut, with its signature observed in the
+        # cut's own job; under AQE the cut also runs the upstream shuffle
+        # stages, one job each
+        sig = Observation()
+        cut = df.distinct().observe(
+            sig, F.count(F.lit(1)).alias("n"), F.expr("bit_xor(xxhash64(u, v))").alias("h"),
+        ).localCheckpoint(eager=True)
+        return cut, (sig.get["n"], sig.get["h"])
+
+    # canonical (child=max, parent=min) pairs, self-loops dropped
     pairs = (
         edges.select(F.greatest(F.col(src), F.col(dst)).alias("u"),
                      F.least(F.col(src), F.col(dst)).alias("v"))
         .where(F.col("u") != F.col("v"))
-        .distinct()
-        # lazy (r15): the first probe materializes these blocks en route —
-        # the eager form paid a dedicated materialization job up front
-        .localCheckpoint(eager=False)
     )
-    nodes = (
-        pairs.select(F.col("u").alias("doc_id"))
-        .unionByName(pairs.select(F.col("v").alias("doc_id")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-
-    def _sig(df: DataFrame) -> tuple:
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    # ``stats`` (optional out-param): {"rounds": r} after the loop — the
-    # O(log component-size) convergence claim made measurable by harnesses
-    # (tools/skew_bench.py) without touching the return contract
-    def one_round(pairs: DataFrame) -> DataFrame:
-        # symmetric closure by projection (no distinct needed — see above)
-        sym = pairs.unionByName(pairs.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        # ONE grouping computes BOTH stars' minima (r16, guide §2.4: two
-        # aggregations keyed the same way share one exchange — the former
-        # shape shuffled sym for the large-star min and pairs again for the
-        # small-star min every round):
-        #   lm = min(Γ(u) ∪ {u})              (large-star attach target)
-        #   sm = min over v < u, i.e. min of u's CANONICAL parents — exactly
-        #        the former pairs.groupBy(u).min(v), since the canonical
-        #        orientation is sym restricted to v < u; NULL when u has no
-        #        smaller neighbor (u was no pair's child), matching the
-        #        former smin's absent row.
-        mins = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("lm"),
-            F.min(F.when(F.col("v") < F.col("u"), F.col("v"))).alias("sm"),
-        )
-        # large-star: neighbors strictly above u attach to lm = min(Γ(u) ∪
-        # {u}); lm ≤ u < v, so the emitted (v, lm) is already child>parent
-        large = (
-            sym.join(mins.select("u", "lm"), "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("lm").alias("v"))
-            .where(F.col("u") != F.col("v"))
-        )
-        # small-star on the child≥parent orientation (= the canonical pairs
-        # themselves): u and its ≤-neighbors attach to the local minimum sm
-        # (non-NULL exactly for the u that appear as a pair's child)
-        smin = mins.where(F.col("sm").isNotNull()).select("u", F.col("sm").alias("m"))
-        small = (
-            pairs.join(smin, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(smin.select(F.col("u"), F.col("m").alias("v")))
-            .where(F.col("u") != F.col("v"))
-        )
-        return (
-            large.unionByName(small).distinct()
-            # lazy (r15): the signature aggregate below is the round's first
-            # action — it materializes the checkpoint(s) and computes the
-            # fixpoint signature in ONE job (the eager form ran 2 jobs/round)
-            .localCheckpoint(eager=False)
-        )
-
-    # TWO star rounds per signature probe (r16, guide §5 driver / VERDICT
-    # r15 "job-count reduction is the lever"): the signature collect is the
-    # per-round driver round-trip, and a lazy checkpoint chain lets one job
-    # materialize both rounds' blocks — so probing every second round halves
-    # the driver round-trips for the same star algebra. Termination is
-    # unchanged: the probed subsequence of edge sets is still monotone
-    # (Kiveris et al.), so a revisited signature still means a fixpoint/
-    # oscillation, at worst one extra (no-op) round of work after the
-    # fixpoint. ``max_iters`` caps probe iterations (= 2·max_iters star
-    # rounds).
     seen: set[tuple] = set()
     rounds = 0
-    finish_local = local_edges > 0 and _sig(pairs)[0] <= local_edges
+    finish_local = False
+    if local_edges > 0:
+        pairs, sig = probe(pairs)
+        finish_local = sig[0] <= local_edges
     while not finish_local:
         if rounds == 2 * max_iters:
             warnings.warn(
@@ -1547,9 +1510,8 @@ def connected_components(edges: DataFrame, src: str = "doc_a", dst: str = "doc_b
                 stacklevel=2,
             )
             break
-        pairs = one_round(one_round(pairs))
+        pairs, sig = probe(_star_round(_star_round(pairs)))
         rounds += 2
-        sig = _sig(pairs)
         if sig in seen:
             break
         seen.add(sig)
@@ -1557,18 +1519,12 @@ def connected_components(edges: DataFrame, src: str = "doc_a", dst: str = "doc_b
     if stats is not None:
         stats["rounds"] = rounds
     if finish_local:
-        labels = (
+        return (
             pairs.withColumn("g", F.lit(0)).groupBy("g")
             .applyInPandas(_local_labels, "doc_id long, cluster_id long")
         )
-    else:
-        # at fixpoint the canonical edges form stars: (child, root)
-        labels = pairs.groupBy(F.col("u").alias("doc_id")).agg(F.min("v").alias("cluster_id"))
-    # nodes the labels miss (star roots) keep themselves
-    return (
-        nodes.join(labels, "doc_id", "left")
-        .select("doc_id", F.coalesce("cluster_id", "doc_id").alias("cluster_id"))
-    )
+    # at a fixpoint the canonical edges form stars: each node's m is its root
+    return _closed_min(pairs).select(F.col("u").alias("doc_id"), F.col("m").alias("cluster_id"))
 
 
 def connected_components_twostar(edges: DataFrame, src: str = "doc_a", dst: str = "doc_b",

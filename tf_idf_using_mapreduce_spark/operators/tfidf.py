@@ -92,8 +92,10 @@ def stem_dictionary(tokens_df: DataFrame) -> DataFrame:
     - only when tokens are missing: those tokens round-robin to
       ``defaultParallelism`` partitions (the distinct shuffle is small, so
       AQE coalesces it to one partition, which would stem serially),
-      ``with_stem`` over them, and the union with the memo checkpointed as
-      the new memo.
+      ``with_stem`` over them, checkpointed, and their union with the memo
+      coalesced to ONE partition and checkpointed as the new memo: a
+      vocabulary-sized frame broadcasts from one task, where a partition
+      per core would run one task each for both broadcasts of every call.
 
     The memo is one slot keyed by the live SparkContext's
     ``applicationId``: a different or restarted context starts an empty
@@ -121,9 +123,10 @@ def stem_dictionary(tokens_df: DataFrame) -> DataFrame:
         parts = sc.defaultParallelism
         stemmed = with_stem(missing.repartition(parts), "token").localCheckpoint(eager=True)
         if memo is not None:
-            stemmed = memo.unionByName(stemmed).coalesce(parts).localCheckpoint(eager=True)
-        _stem_memo = (sc.applicationId, stemmed)
-        return stemmed
+            stemmed = memo.unionByName(stemmed)
+        memo = stemmed.coalesce(1).localCheckpoint(eager=True)
+        _stem_memo = (sc.applicationId, memo)
+        return memo
 
 
 def stemmed_tokens_of(docs: DataFrame, case_sensitive: bool = False) -> DataFrame:
