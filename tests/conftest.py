@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+from types import SimpleNamespace
 
 import duckdb
 import pytest
@@ -70,3 +71,41 @@ def assert_query_matches_oracle(spark, name: str, sf_dir: str = SF_SMOKE):
     assert s_norm == d_norm, f"{name}: value mismatch, first diff: " + str(
         next(((a, b) for a, b in zip(s_norm, d_norm) if a != b), None)
     )
+
+
+def jobs_of(spark, fn, group: str) -> int:
+    """Spark jobs ``fn()`` runs, counted by job group: unlike wall time, a
+    count the host's load cannot move."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup("", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# py4j's "delete this JVM object" command: sent whenever Python frees a
+# JavaObject, so its count depends on garbage-collection timing, not on the
+# code under test
+_PY4J_DELETE = "m\nd\n"
+
+
+@pytest.fixture
+def py4j_round_trips(spark, monkeypatch):
+    """A running count (``.n``) of the py4j gateway round trips the driver
+    makes while the test runs, object deletes excluded. Building a DataFrame
+    costs one round trip per JVM call, so this count measures driver-side
+    build work deterministically, where a timing would move with the host's
+    load."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    counter = SimpleNamespace(n=0)
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith(_PY4J_DELETE):
+            counter.n += 1
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    return counter

@@ -7,7 +7,7 @@ import re
 
 import pytest
 
-from tests.conftest import SF_SMOKE, assert_query_matches_oracle
+from tests.conftest import SF_SMOKE, assert_query_matches_oracle, jobs_of
 from tf_idf_using_mapreduce_spark.operators import dedup
 
 
@@ -181,18 +181,6 @@ def test_connected_components_warns_on_cap_exhaustion(spark):
     assert any("round cap" in str(w.message) for w in rec2)
 
 
-def _jobs_of(spark, fn, group: str) -> int:
-    """Spark jobs ``fn()`` runs, counted by job group: unlike wall time, a
-    count the host's load cannot move."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setJobGroup("", "")
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_connected_components_job_count(spark):
     """Job-count regression guard. Rounds only (``local_edges=0``), the
     16-node path runs 8 star rounds = 4 probes of 4 jobs each (the round,
@@ -203,14 +191,14 @@ def test_connected_components_job_count(spark):
 
     path = spark.createDataFrame([(i, i + 1) for i in range(1, 16)], "doc_a long, doc_b long")
     stats = {}
-    assert _jobs_of(spark, lambda: connected_components(
+    assert jobs_of(spark, lambda: connected_components(
         path, local_edges=0, stats=stats).collect(), "cc-path16") == 18
     assert stats["rounds"] == 8
     trans = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (22, 23), (23, 24)],
         "doc_a long, doc_b long",
     )
-    assert _jobs_of(spark, lambda: connected_components(trans).collect(), "cc-trans") == 4
+    assert jobs_of(spark, lambda: connected_components(trans).collect(), "cc-trans") == 4
 
 
 def test_star_round_is_one_grouping(spark):

@@ -98,6 +98,15 @@ def test_pos_counts_plan_is_pure_jvm(spark):
     assert "EvalPython" not in plan, plan[:1500]
 
 
+def test_pos_counts_lowers_each_token_once(spark):
+    """The tag CASE tests the lowercased token ~35 times; ``with_pos_tag``
+    projects ``lower(token)`` once and the CASE reads that column, and
+    Catalyst must not inline it back into every WHEN."""
+    plan = pos_counts(spark, SF_SMOKE)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("lower(") == 1, plan[:1500]
+    assert pos_tag_sql("token").count("lower(token)") > 30
+
+
 def test_model_swap_seam_one_load_per_task(spark, tmp_path):
     """VERDICT r1 item 6: push a non-trivial per-executor 'model' through the
     mapInPandas stripes seam — the factory must run once per TASK (not per

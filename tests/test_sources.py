@@ -6,9 +6,12 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from tf_idf_using_mapreduce_spark.sources.corpus import read_binary_dir, read_jsonl_corpus
+from tests.conftest import SF_SMOKE, jobs_of
+from tf_idf_using_mapreduce_spark.sources.corpus import load_table, read_binary_dir, read_jsonl_corpus
 
 
 def test_jsonl_corpus_roundtrip_and_corrupt_isolation(spark, tmp_path):
@@ -111,3 +114,37 @@ def test_orc_roundtrip_matches_parquet(spark, tmp_path):
         )
     )
     assert a == b
+
+
+def test_load_table_memo_hit_starts_no_job(spark, tmp_path):
+    """A table's first read infers its schema with a Spark job; a second
+    read of the unchanged file reuses the inferred schema and starts none."""
+    pq.write_table(pa.table({"doc_id": [1, 2], "text": ["a b", "c"]}),
+                   tmp_path / "documents.parquet")
+    assert jobs_of(spark, lambda: load_table(spark, str(tmp_path), "documents"), "lt-first") >= 1
+    again = []
+    assert jobs_of(spark, lambda: again.append(load_table(spark, str(tmp_path), "documents")),
+                   "lt-hit") == 0
+    assert sorted(tuple(r) for r in again[0].collect()) == [(1, "a b"), (2, "c")]
+
+
+def test_load_table_rewritten_file_gets_its_new_schema(spark, tmp_path):
+    path = tmp_path / "documents.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert load_table(spark, str(tmp_path), "documents").dtypes == [("a", "bigint")]
+    pq.write_table(pa.table({"b": ["x"], "c": [1.5]}), path)
+    df = load_table(spark, str(tmp_path), "documents")
+    assert df.dtypes == [("b", "string"), ("c", "double")]
+    assert [tuple(r) for r in df.collect()] == [("x", 1.5)]
+
+
+def test_load_table_events_ts_on_memo_hit(spark):
+    """events.ts (parquet TIMESTAMP(NANOS)) is read as long nanos and
+    converted; a memo hit must convert it the same way."""
+    first = load_table(spark, SF_SMOKE, "events")
+    hit = []
+    assert jobs_of(spark, lambda: hit.append(load_table(spark, SF_SMOKE, "events")), "lt-events") == 0
+    ts_type = dict(hit[0].dtypes)["ts"]
+    assert ts_type.startswith("timestamp") and ts_type == dict(first.dtypes)["ts"]
+    rows = [sorted(tuple(r) for r in df.select("event_id", "ts").collect()) for df in (first, hit[0])]
+    assert rows[0] == rows[1]

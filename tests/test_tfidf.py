@@ -19,6 +19,7 @@ import pytest
 
 from tests.conftest import SF_SMOKE, assert_query_matches_oracle
 from tf_idf_using_mapreduce_spark.functions.porter import porter_stem_py, with_stem
+from tf_idf_using_mapreduce_spark.functions.text import explode_tokens, filter_stopwords
 from tf_idf_using_mapreduce_spark.operators import tfidf as tfidf_mod
 from tf_idf_using_mapreduce_spark.operators.tfidf import (
     doc_freq,
@@ -28,7 +29,7 @@ from tf_idf_using_mapreduce_spark.operators.tfidf import (
     tfidf,
 )
 from tf_idf_using_mapreduce_spark.session import PACKAGE_PARENT
-from tf_idf_using_mapreduce_spark.sources.corpus import stopwords
+from tf_idf_using_mapreduce_spark.sources.corpus import stopwords, stopwords_sql_list
 
 
 def _pure_python_pipeline(sf_dir: str):
@@ -106,6 +107,36 @@ def test_scan_prunes_columns(spark):
     assert m, plan[:2000]
     cols = {c.split(":")[0] for c in m.group(1).split(",") if ":" in c}
     assert cols <= {"doc_id", "text"}, cols
+
+
+def test_spark_parses_the_stop_list_verbatim(spark):
+    """The stop filter is SQL text, so Spark's parse of that text IS the
+    list it filters by: every pattern, in order, including the doubled
+    quotes of ``a's``/``ain't`` and the dead trailing-space patterns."""
+    parsed = spark.sql(f"SELECT array{stopwords_sql_list()} AS s").collect()[0]["s"]
+    assert parsed == list(stopwords())
+    assert {"a's", "ain't", "de ", "er "} <= set(parsed)
+
+
+def test_filter_stopwords_keeps_what_python_keeps(spark):
+    """On the smoke corpus the SQL predicate keeps exactly the tokens a
+    Python ``not in set(stopwords())`` keeps, with their multiplicity."""
+    toks = explode_tokens(spark.read.parquet(f"{SF_SMOKE}/documents.parquet"))
+    stops = set(stopwords())
+    every = [r["token"] for r in toks.collect()]
+    kept = [r["token"] for r in filter_stopwords(toks).collect()]
+    assert Counter(kept) == Counter(t for t in every if t not in stops)
+    assert len(kept) < len(every)
+
+
+def test_stemmed_tokens_build_round_trips(spark, py4j_round_trips):
+    """A warm ``stemmed_tokens`` build stays under 200 py4j round trips
+    (~135 today). The stop filter as ``Column.isin(*words)`` costs one
+    round trip per stop word and took this build to ~1,600."""
+    stemmed_tokens(spark, SF_SMOKE)  # warm: schema and stem memos
+    before = py4j_round_trips.n
+    stemmed_tokens(spark, SF_SMOKE)
+    assert py4j_round_trips.n - before < 200
 
 
 def test_case_sensitive_vocabulary(spark):

@@ -7,7 +7,9 @@ DETERMINISTIC rule tagger over the UD tagset (closed-class lexicons + suffix
 heuristics + NOUN default), expressed as ONE portable SQL CASE usable verbatim
 by Spark (``F.expr`` → whole-stage codegen) and the DuckDB oracle — counting
 semantics (A1/A2) are what the correctness contract checks, not tag-inventory
-fidelity (SURVEY.md §7.3 "POS tagset").
+fidelity (SURVEY.md §7.3 "POS tagset"). The Spark side feeds the same CASE a
+once-projected ``lower(token)`` column (:func:`with_pos_tag`); the oracles
+spell ``lower(token)`` inline.
 
 A ``mapInPandas`` stripes variant re-implements the same rules in Python
 (shared lexicon constants) to reproduce the reference's pairs-vs-stripes
@@ -63,9 +65,15 @@ def _in_list(expr: str, words: tuple[str, ...]) -> str:
     return f"{expr} IN ({quoted})"
 
 
-def pos_tag_sql(token_col: str = "token") -> str:
-    """Portable SQL CASE mapping a token to its UD tag."""
-    t = f"lower({token_col})"
+def pos_tag_sql(token_col: str = "token", lower_col: str | None = None) -> str:
+    """Portable SQL CASE mapping a token to its UD tag.
+
+    The lexicon and suffix rules test the lowercased token, ~35 times per
+    token. ``lower_col`` names a column that already holds
+    ``lower(token_col)``, so a caller that projects it once
+    (:func:`with_pos_tag`) lowercases each token once; without it the CASE
+    spells ``lower(token_col)`` inline (the oracles' text)."""
+    t = lower_col or f"lower({token_col})"
     whens: list[str] = []
     # NUM: all digits (translate deletes digits; empty remainder = numeric).
     # length > 0 guard: translate('') = '' would tag the EMPTY token NUM
@@ -136,7 +144,15 @@ def explode_pos_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def with_pos_tag(df: DataFrame, token_col: str = "token", out_col: str = "tag") -> DataFrame:
-    return df.withColumn(out_col, F.expr(pos_tag_sql(token_col)))
+    """``df`` plus the UD tag of ``token_col``: ``lower(token)`` is projected
+    once and the CASE reads that column. Catalyst keeps the projection, since
+    collapsing it would repeat a non-trivial expression."""
+    lowered = f"_lower_{token_col}"
+    return (
+        df.withColumn(lowered, F.lower(token_col))
+        .withColumn(out_col, F.expr(pos_tag_sql(token_col, lowered)))
+        .drop(lowered)
+    )
 
 
 # --------------------------------------------------------------------------- #

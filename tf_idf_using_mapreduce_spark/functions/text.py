@@ -17,8 +17,12 @@ so ``"ab1cd"`` glues to one token ``abcd``; the canonical extractor yields
 ``ab, cd``. Identical on all-letter corpora (the fixtures).
 
 Stop-word filtering (P4, ``DocumentFreq.java:66-68``) applies to the RAW token
-*before* stemming (quirk Q2) and is expressed as ``NOT IN (stop-list)`` —
-Catalyst folds the 355-literal list into an efficient predicate.
+*before* stemming (quirk Q2) and is ONE SQL predicate, ``token NOT IN
+(stop-list)``, over the same list text the oracle pastes
+(``stopwords_sql_list``). Catalyst folds the literals into one
+``NOT token INSET (...)``. The predicate is parsed from SQL text on purpose:
+``Column.isin(*words)`` builds the same filter from one py4j call per
+literal, ~1.5k gateway round trips and ~0.25 s of driver time per build.
 """
 
 from __future__ import annotations
@@ -26,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from tf_idf_using_mapreduce_spark.sources.corpus import stopwords, stopwords_sql_list
+from tf_idf_using_mapreduce_spark.sources.corpus import stopwords_sql_list
 
 # One portable tokenizer expression: maximal lowercase-letter runs.
 TOKENIZE_SQL = "regexp_extract_all(lower({col}), '([a-z]+)', 1)"
@@ -60,7 +64,7 @@ def explode_tokens(df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 
 def filter_stopwords(df: DataFrame, token_col: str = "token") -> DataFrame:
     """P4/J2: drop stop-list tokens (raw token, pre-stem — quirk Q2)."""
-    return df.where(~F.col(token_col).isin(*stopwords()))
+    return df.where(F.expr(f"{token_col} NOT IN {stopwords_sql_list()}"))
 
 
 # ---------------------------------------------------------------------------

@@ -420,11 +420,12 @@ register("events_vacuum_roundtrip", _tt.events_vacuum_roundtrip,
 # query has gate evidence (rounds 12-16), so FORCE_FRESH alone fills it,
 # stalest evidence first; what falls past slot 50 is the round-16 entries
 # last in literal registration order. 52 entries before the stem memo, 58
-# with it; the 8 past slot 50 are tfidf_mllib_topk_overlap,
-# tfidf_doc_similarity, bigram_pmi, split_leakage, split_leakage_semantic,
-# semdedup_prune, diverse_sample_ivf and documents_stream_chunk_dedup. All
-# 8 are hash-checked locally with tools/check_oracle.py at sf0.01 and sf0.1
-# (CHANGES.md, stem memo entry).
+# with it, 59 with pos_counts; the 9 past slot 50 are tfidf_mllib,
+# tfidf_mllib_topk_overlap, tfidf_doc_similarity, bigram_pmi, split_leakage,
+# split_leakage_semantic, semdedup_prune, diverse_sample_ivf and
+# documents_stream_chunk_dedup. The whole registry is hash-checked locally
+# with tools/check_oracle.py at sf0.01 and sf0.1 (CHANGES.md, build-floor
+# entry).
 FORCE_FRESH: frozenset[str] = frozenset({
     # one document-frequency definition (the counts-table vocabulary) and
     # one shared BM25/RRF postings front
@@ -495,6 +496,8 @@ FORCE_FRESH: frozenset[str] = frozenset({
     "doc_freq_approx_err",
     "tfidf_mllib",
     "tfidf_mllib_topk_overlap",
+    # the tag CASE reads a once-projected lower(token) column
+    "pos_counts",
 })
 
 

@@ -7,7 +7,8 @@ Maps the reference's I/O surface onto Spark:
 - S2 file-name-as-document-id (``DocumentFreq.java:64``, ``IDF.java:84``) →
   ``F.input_file_name()`` column.
 - S3 stop-list side input (``DocumentFreq.java:35-57``) → :func:`stopwords`
-  (driver-side list, broadcast by Catalyst inside ``isin``/anti-join).
+  (driver-side list; :func:`stopwords_sql_list` is its SQL text, which the
+  engine's ``NOT IN`` filter and the oracles share).
 - S4 DF-lookup TSV side input (``IDF.java:62-79``) → :func:`read_tsv` +
   ``F.broadcast`` join (the engine normally keeps the DF table in the same DAG
   instead — SURVEY.md §2.1 S8).
@@ -15,17 +16,19 @@ Maps the reference's I/O surface onto Spark:
   ``README.md:14-15``) → :func:`write_tsv`.
 
 Fixture tables (TESTDATA.md) are Parquet; :func:`load_table` /
-:func:`load_tables` read them with schema-on-read and full predicate/column
-pushdown.
+:func:`load_tables` read them with schema-on-read (inferred once per file)
+and full predicate/column pushdown.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -36,10 +39,25 @@ _RESOURCE_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__f
 STOPWORDS_PATH = os.path.join(_RESOURCE_DIR, "stopwords.txt")
 
 
+# path -> ((st_mtime_ns, st_size), the schema Spark inferred for that file)
+_schema_memo: dict[str, tuple[tuple[int, int], StructType]] = {}
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """``<sf_dir>/<name>.parquet`` as a DataFrame, schema-on-read.
+
+    Spark infers a parquet schema with a job that reads the footer (~0.1 s
+    on a 4-core host). The first read of a file pays it; the inferred
+    ``StructType`` is memoized under ``(path, st_mtime_ns, st_size)``, the
+    same immutable-file reasoning as :func:`_file_split_stats`, and later
+    reads pass it to ``spark.read.schema`` and run no job. A rewritten file
+    changes its key and is inferred again. A path that is not a regular
+    file (a directory dataset, a missing file) is inferred on every read.
+    """
     # Self-sufficient under ANY caller-provided session (the driver contract
     # passes its own SparkSession): the confs the engine depends on for
-    # correctness are runtime-settable and idempotent.
+    # correctness are runtime-settable and idempotent. They are set before
+    # every read, so a memoized schema was inferred under the same confs.
     # - nanosAsLong: events.ts is TIMESTAMP(NANOS), which Spark otherwise
     #   refuses (PARQUET_TYPE_ILLEGAL); read as long nanos, convert below
     #   (matches DuckDB's CAST(ts AS TIMESTAMP) truncation to micros).
@@ -47,7 +65,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     #   oracle's naive timestamps regardless of host timezone.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    try:
+        st = os.stat(path)
+        key = (st.st_mtime_ns, st.st_size) if stat.S_ISREG(st.st_mode) else None
+    except OSError:
+        key = None
+    memo = _schema_memo.get(path)
+    if key is not None and memo is not None and memo[0] == key:
+        df = spark.read.schema(memo[1]).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        if key is not None:
+            _schema_memo[path] = (key, df.schema)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return df
