@@ -75,13 +75,16 @@ def assert_query_matches_oracle(spark, name: str, sf_dir: str = SF_SMOKE):
 
 def jobs_of(spark, fn, group: str) -> int:
     """Spark jobs ``fn()`` runs, counted by job group: unlike wall time, a
-    count the host's load cannot move."""
+    count the host's load cannot move. The status tracker learns of a job
+    from the asynchronous listener bus, so the bus is drained before the
+    count is read; otherwise a job that just started can be missed."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
         fn()
     finally:
         sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 

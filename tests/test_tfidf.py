@@ -15,9 +15,12 @@ import time
 from collections import Counter, defaultdict
 
 import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE, assert_query_matches_oracle
+from tests.conftest import SF_SMOKE, assert_query_matches_oracle, jobs_of
 from tf_idf_using_mapreduce_spark.functions.porter import porter_stem_py, with_stem
 from tf_idf_using_mapreduce_spark.functions.text import explode_tokens, filter_stopwords
 from tf_idf_using_mapreduce_spark.operators import tfidf as tfidf_mod
@@ -131,8 +134,9 @@ def test_filter_stopwords_keeps_what_python_keeps(spark):
 
 def test_stemmed_tokens_build_round_trips(spark, py4j_round_trips):
     """A warm ``stemmed_tokens`` build stays under 200 py4j round trips
-    (~135 today). The stop filter as ``Column.isin(*words)`` costs one
-    round trip per stop word and took this build to ~1,600."""
+    (~105 today, the stem memo's covered-frame lookup included). The stop
+    filter as ``Column.isin(*words)`` costs one round trip per stop word
+    and took this build to ~1,600."""
     stemmed_tokens(spark, SF_SMOKE)  # warm: schema and stem memos
     before = py4j_round_trips.n
     stemmed_tokens(spark, SF_SMOKE)
@@ -277,25 +281,131 @@ def test_stem_memo_concurrent_corpora(spark, stem_calls, monkeypatch):
     assert len(stem_calls) == before, "a thread's tokens were lost from the memo"
 
 
+def _write_tokens(path, tokens):
+    pq.write_table(pa.table({"token": tokens}), path)
+
+
+def test_stem_memo_covered_frame_runs_no_job(spark, stem_calls, tmp_path):
+    """A repeat call over a file-backed frame the memo already covers (the
+    same plan over unchanged files, built afresh) returns the memo without
+    running a job; the first call stems, and both return the same stems."""
+    path = str(tmp_path / "tokens.parquet")
+    tokens = ["zqmcoverings", "zqmcovered", "running"]
+    _write_tokens(path, tokens)
+    first = stem_dictionary(spark.read.parquet(path))
+    assert len(stem_calls) == 1
+    fresh = spark.read.parquet(path)  # its schema inference is a job of its own
+    again = []
+    assert jobs_of(spark, lambda: again.append(stem_dictionary(fresh)), "stem-covered") == 0
+    assert len(stem_calls) == 1
+    want = {t: porter_stem_py(t) for t in tokens}
+    for memo in (first, again[0]):
+        assert {r["token"]: r["stem"] for r in memo.collect() if r["token"] in want} == want
+
+
+def test_stem_memo_keyless_frame_keeps_the_record(spark, tmp_path):
+    """A call over a frame with no key (in-memory rows) probes, and the
+    record of the covered file frame survives it: the memo only grew."""
+    path = str(tmp_path / "tokens.parquet")
+    _write_tokens(path, ["zqmkeeping", "zqmkept"])
+    stem_dictionary(spark.read.parquet(path))
+    stem_dictionary(spark.createDataFrame([("zqmkeepers",)], "token string"))
+    fresh = spark.read.parquet(path)
+    assert jobs_of(spark, lambda: stem_dictionary(fresh), "stem-keyless") == 0
+
+
+def test_stem_memo_rewritten_file_is_probed_again(spark, stem_calls, tmp_path):
+    """A parquet file rewritten with new tokens is no longer covered: the
+    next call probes, stems the new tokens, and the counts match the
+    pure-Python stemmer."""
+    path = str(tmp_path / "documents.parquet")
+
+    def counts_match(texts):
+        got = sorted(tuple(r) for r in term_counts_of(spark.read.parquet(path)).collect())
+        want = Counter((d, porter_stem_py(t)) for d, text in enumerate(texts) for t in text.split())
+        assert got == sorted((d, stem, n) for (d, stem), n in want.items())
+
+    old = ["zqmrewrite zqmrewriting", "zqmrewrites"]
+    pq.write_table(pa.table({"doc_id": [0, 1], "text": old}), path)
+    counts_match(old)
+    counts_match(old)
+    assert len(stem_calls) == 1
+    new = ["zqmrewrite zqmfreshness", "zqmrewritings zqmfreshly zqmfreshly"]
+    pq.write_table(pa.table({"doc_id": [0, 1], "text": new}), path)
+    counts_match(new)
+    assert len(stem_calls) == 2, "the rewritten file's new tokens were not stemmed"
+
+
+def test_stem_memo_nondeterministic_frame_always_probes(spark, tmp_path):
+    """A frame whose plan is nondeterministic is never recorded as covered:
+    the same frame object still runs the probe on a repeat call."""
+    path = str(tmp_path / "tokens.parquet")
+    _write_tokens(path, ["zqmrandomly", "zqmrandoms"])
+    frame = spark.read.parquet(path).where(F.rand() < 2.0)
+    stem_dictionary(frame)
+    assert jobs_of(spark, lambda: stem_dictionary(frame), "stem-rand") > 0
+
+
+def test_stem_memo_reset_slot_forgets_covered_frames(spark, stem_calls, tmp_path, monkeypatch):
+    """The covered records live in the memo slot: emptying the slot drops
+    them with the memo, so a frame covered before is stemmed again."""
+    path = str(tmp_path / "tokens.parquet")
+    tokens = ["zqmresetting", "zqmresets"]
+    _write_tokens(path, tokens)
+    stem_dictionary(spark.read.parquet(path))
+    stem_dictionary(spark.read.parquet(path))
+    assert len(stem_calls) == 1
+    monkeypatch.setattr(tfidf_mod, "_stem_memo", None)
+    got = stem_dictionary(spark.read.parquet(path)).collect()
+    assert len(stem_calls) == 2
+    assert {r["token"]: r["stem"] for r in got} == {t: porter_stem_py(t) for t in tokens}
+
+
+def test_tfidf_build_job_count(spark):
+    """Job-count regression guard: a warm ``doc_freq`` or ``tfidf`` build
+    runs 2 jobs, the stem memo's broadcast and the counts cut's map stage.
+    The memo covers the corpus's token frame, so no miss probe runs (it
+    cost 2 more: its distinct's map stage and the observed cut). Same at
+    2, 4 and 8 cores."""
+    doc_freq(spark, SF_SMOKE)
+    tfidf(spark, SF_SMOKE)
+    assert jobs_of(spark, lambda: doc_freq(spark, SF_SMOKE), "doc-freq-build") == 2
+    assert jobs_of(spark, lambda: tfidf(spark, SF_SMOKE), "tfidf-build") == 2
+
+
 def test_stem_memo_not_shared_across_contexts(tmp_path):
-    """A new SparkContext in the same process starts an empty memo: the
-    slot of the stopped context, whose checkpoint blocks are gone, is never
-    read."""
+    """A new SparkContext in the same process starts an empty memo with no
+    covered frames: the slot of the stopped context, whose checkpoint
+    blocks are gone, is never read, and a frame the old memo covered is
+    stemmed again."""
+    _write_tokens(str(tmp_path / "tokens.parquet"), ["walking", "talks"])
     script = textwrap.dedent(f"""
         import sys
         sys.path.insert(0, {PACKAGE_PARENT!r})
         from tf_idf_using_mapreduce_spark.operators import tfidf
         from tf_idf_using_mapreduce_spark.session import get_spark
 
+        calls = []
+        with_stem = tfidf.with_stem
+        tfidf.with_stem = lambda *a, **k: calls.append(1) or with_stem(*a, **k)
+
         def stems(spark, tokens):
             df = spark.createDataFrame([(t,) for t in tokens], "token string")
             return sorted(tuple(r) for r in tfidf.stem_dictionary(df).collect())
 
+        def file_stems(spark):
+            df = spark.read.parquet("tokens.parquet")
+            return sorted(tuple(r) for r in tfidf.stem_dictionary(df).collect())
+
         first = get_spark("memo-first", shuffle_partitions=2)
         stems(first, ["running", "cats"])
+        file_stems(first)
+        file_stems(first)
+        print(len(calls))
         first.stop()
         second = get_spark("memo-second", shuffle_partitions=2)
         print(stems(second, ["jumping"]))
+        print(file_stems(second), len(calls))
         print(tfidf._stem_memo[0] == second.sparkContext.applicationId)
     """)
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
@@ -303,7 +413,12 @@ def test_stem_memo_not_shared_across_contexts(tmp_path):
     proc = subprocess.run([sys.executable, "-c", script], cwd=tmp_path, env=env,
                           capture_output=True, text=True, timeout=300)
     assert proc.returncode == 0, proc.stderr[-3000:]
-    assert proc.stdout.strip().splitlines()[-2:] == ["[('jumping', 'jump')]", "True"]
+    assert proc.stdout.strip().splitlines()[-4:] == [
+        "2",
+        "[('jumping', 'jump')]",
+        "[('jumping', 'jump'), ('talks', 'talk'), ('walking', 'walk')] 4",
+        "True",
+    ]
 
 
 def test_tfidf_doc_similarity_oracle_parity(spark):

@@ -43,6 +43,18 @@ STOPWORDS_PATH = os.path.join(_RESOURCE_DIR, "stopwords.txt")
 _schema_memo: dict[str, tuple[tuple[int, int], StructType]] = {}
 
 
+def file_signature(path: str) -> tuple[int, int] | None:
+    """(``st_mtime_ns``, ``st_size``) of a regular file, or None for a
+    directory, a missing file or any other path: what the engine's
+    file-keyed memos compare, on the rule that a file rewritten in place
+    changes its mtime or its size."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (st.st_mtime_ns, st.st_size) if stat.S_ISREG(st.st_mode) else None
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """``<sf_dir>/<name>.parquet`` as a DataFrame, schema-on-read.
 
@@ -66,11 +78,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        st = os.stat(path)
-        key = (st.st_mtime_ns, st.st_size) if stat.S_ISREG(st.st_mode) else None
-    except OSError:
-        key = None
+    key = file_signature(path)
     memo = _schema_memo.get(path)
     if key is not None and memo is not None and memo[0] == key:
         df = spark.read.schema(memo[1]).parquet(path)

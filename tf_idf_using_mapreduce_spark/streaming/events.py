@@ -107,12 +107,13 @@ def _drain(writer: DataStreamWriter, spark: SparkSession, timeout_s: int,
     stream's lifetime (state partitioning is fixed at first start) and the
     previous value is restored on every path out, errors included. The pin
     is SESSION-WIDE: it assumes the session runs one query at a time (single
-    tenancy; ROADMAP 4(d)). A batch query started concurrently on the same
+    tenancy; ROADMAP 6(d)). A batch query started concurrently on the same
     session would plan with the stream's partition count, and two
     concurrent drains would restore each other's values out of order.
 
     The deadline clock starts BEFORE ``awaitTermination``, so a hung query
-    gets ``timeout_s`` in total, not twice that. A query still active at the deadline is stopped and raised as ``TimeoutError``:
+    gets ``timeout_s`` in total, not twice that. A query still active at
+    the deadline is stopped and raised as ``TimeoutError``:
     ``what``/``output`` name the query and its partial output in the
     message, never returned as if complete."""
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
