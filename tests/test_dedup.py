@@ -238,12 +238,47 @@ def test_dedup_incremental_split_contract(spark):
             assert full[key] == r["jaccard"], (r, full[key])
 
 
-def test_dedup_incremental_plan_broadcasts_batch_side(spark):
-    """The daily-batch probe must broadcast into the index (the index is
-    write-once state and must never reshuffle): no sort-merge or shuffled
-    hash join anywhere in the plan."""
-    p = dedup.dedup_incremental(spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
+# the in-memory incremental probes; the persisted twins' plans are pinned
+# in tests/test_persisted.py
+IN_MEMORY_INCREMENTALS = [
+    "dedup_incremental", "dedup_substring_incremental",
+    "dedup_image_phash_incremental", "dedup_audio_fingerprint_incremental",
+    "dedup_video_frames_incremental",
+]
+
+
+@pytest.mark.parametrize("name", IN_MEMORY_INCREMENTALS)
+def test_incremental_plan_broadcasts_batch_side(spark, name):
+    """The daily-batch probe broadcasts into the index (the index is
+    write-once state and must never reshuffle): a broadcast hash join, and
+    no sort-merge or shuffled hash join anywhere in the plan."""
+    from tf_idf_using_mapreduce_spark.registry import QUERIES
+
+    p = QUERIES[name](spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in p, p[:3000]
     assert "SortMergeJoin" not in p and "ShuffledHashJoin" not in p, p[:3000]
+
+
+@pytest.mark.parametrize("name, jobs", [
+    ("dedup_incremental", 7),
+    ("dedup_substring_incremental", 6),
+    ("dedup_image_phash_incremental", 4),
+    ("dedup_audio_fingerprint_incremental", 7),
+    ("dedup_video_frames_incremental", 10),
+    ("dedup_incremental_persisted", 7),
+    ("dedup_image_phash_incremental_persisted", 4),
+])
+def test_incremental_probe_job_count(spark, name, jobs):
+    """Job-count regression guard for the shared split and broadcast probe
+    (``dedup._split_batch`` / ``dedup._probe_index``): build plus collect
+    on the smoke corpus, after one warm call that writes the persisted
+    index and memoizes the table schemas. The counts are those of the
+    per-query probes the helpers replaced."""
+    from tf_idf_using_mapreduce_spark.registry import QUERIES
+
+    fn = QUERIES[name]
+    fn(spark, SF_SMOKE).collect()
+    assert jobs_of(spark, lambda: fn(spark, SF_SMOKE).collect(), f"incr-{name}") == jobs
 
 
 # --------------------------------------------------------------------------- #
@@ -736,14 +771,6 @@ def test_dedup_substring_incremental_split_contract(spark):
     assert all(r["dup_of"] % dedup.INCR_BATCH_MOD != 0 for r in rows)
     # span geometry invariants
     assert all(r["span_len"] >= dedup.SUBSTR_MIN_SPAN for r in rows)
-
-
-def test_dedup_substring_incremental_plan_broadcasts_batch_side(spark):
-    """Daily-cost contract: the small batch side broadcasts into the
-    write-once fingerprint index — the index is never reshuffled (no
-    sort-merge or shuffled-hash join anywhere in the plan)."""
-    p = dedup.dedup_substring_incremental(spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" not in p and "ShuffledHashJoin" not in p, p[:3000]
 
 
 def test_dedup_substring_incremental_finds_cross_split_boilerplate(spark):

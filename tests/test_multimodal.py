@@ -119,6 +119,16 @@ def test_dedup_image_phash_incremental_oracle_parity(spark):
     assert_query_matches_oracle(spark, "dedup_image_phash_incremental")
 
 
+_A_LETTERS = "".join(("aaaa" if j % 2 == 0 else "zzzz") for j in range(64))
+_B_LETTERS = "zzzz" + _A_LETTERS[4:]  # one aHash bit from A
+_IMAGE_INCR_ROWS = [
+    (1, _A_LETTERS),  # index
+    (2, "".join(chr(97 + (j * 11) % 26) * 4 for j in range(64))),  # index, unrelated
+    (5, _B_LETTERS),  # batch: near-dup of index doc 1
+    (10, _B_LETTERS),  # batch: identical to doc 5 (batch-internal pair)
+]
+
+
 def test_dedup_image_phash_incremental_probes_index_only(spark):
     """Daily-ingest contract: batch payloads (doc_id % 5 == 0) pair against
     the INDEX only — a batch-internal duplicate pair is out of contract, an
@@ -131,16 +141,7 @@ def test_dedup_image_phash_incremental_probes_index_only(spark):
     import __spark_entry__ as e
     from tools.canon import canon_rows
 
-    a_letters = "".join(("aaaa" if j % 2 == 0 else "zzzz") for j in range(64))
-    b_letters = "zzzz" + a_letters[4:]  # one aHash bit from A
-    c_letters = "".join(chr(97 + (j * 11) % 26) * 4 for j in range(64))
-    rows = [
-        (1, a_letters),   # index
-        (2, c_letters),   # index, unrelated
-        (5, b_letters),   # batch: near-dup of index doc 1
-        (10, b_letters),  # batch: identical to doc 5 (batch-internal pair)
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    df = spark.createDataFrame(_IMAGE_INCR_ROWS, "doc_id long, text string")
     with tempfile.TemporaryDirectory() as tmp:
         df.coalesce(1).write.parquet(f"{tmp}/documents.parquet")
         got = mm.dedup_image_phash_incremental(spark, tmp).toPandas()
@@ -154,6 +155,21 @@ def test_dedup_image_phash_incremental_probes_index_only(spark):
     pairs = {(r.doc_id, r.dup_of): r.hamming for r in got.itertuples()}
     assert pairs == {(5, 1): 1, (10, 1): 1}  # no (5,10)/(10,5) batch pair
     assert canon_rows(got) == canon_rows(ora)
+
+
+def test_image_incremental_reads_bucket_cap_at_call_time(spark, monkeypatch, tmp_path):
+    """tools/skew_bench.py rebinds ``dedup.LSH_BUCKET_CAP`` and counts on the
+    multimodal operators reading it at call time, not as a name copied at
+    import. At cap 0 every index bucket is hot, so the probe that finds two
+    pairs at the production cap finds none. (The smoke corpus has no image
+    near-dup across the split, so it could not tell the two apart.)"""
+    from tf_idf_using_mapreduce_spark.operators import dedup
+
+    spark.createDataFrame(_IMAGE_INCR_ROWS, "doc_id long, text string") \
+        .coalesce(1).write.parquet(f"{tmp_path}/documents.parquet")
+    assert mm.dedup_image_phash_incremental(spark, str(tmp_path)).count() == 2
+    monkeypatch.setattr(dedup, "LSH_BUCKET_CAP", 0)
+    assert mm.dedup_image_phash_incremental(spark, str(tmp_path)).count() == 0
 
 
 # --------------------------------------------------------------------------- #
@@ -345,21 +361,17 @@ def test_incremental_video_is_batch_restricted_to_new_docs(spark):
 
 
 def test_modality_dedup_plan_shapes(spark):
-    """Scale-posture plan asserts for the new modality operators (mirrors
-    the ExactSubstr pins): hot-bucket drops are BROADCAST anti-joins, pair
-    stages never degenerate to cartesian/nested-loop, and both incremental
-    probes keep the write-once index un-reshuffled (no sort-merge or
-    shuffled-hash join anywhere)."""
+    """Scale-posture plan asserts for the batch modality operators (mirrors
+    the ExactSubstr pins): hot-bucket drops are BROADCAST anti-joins and
+    pair stages never degenerate to cartesian/nested-loop. The incremental
+    probes' broadcast pin is
+    tests/test_dedup.py::test_incremental_plan_broadcasts_batch_side."""
     import re
 
     for fn in (mm.dedup_audio_fingerprint, mm.dedup_video_frames):
         p = fn(spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
         assert re.search(r"BroadcastHashJoin .*LeftAnti", p), p[:3000]
         assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
-    for fn in (mm.dedup_audio_fingerprint_incremental,
-               mm.dedup_video_frames_incremental):
-        p = fn(spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" not in p and "ShuffledHashJoin" not in p, p[:3000]
 
 
 # --------------------------------------------------------------------------- #

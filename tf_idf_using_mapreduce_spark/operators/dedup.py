@@ -84,6 +84,45 @@ def _drop_hot_buckets(bands: DataFrame, keys: list[str], cap: int) -> DataFrame:
     return bands.join(F.broadcast(hot), keys, "left_anti")
 
 
+# deterministic fixture split: every 5th doc arrives as the "new batch",
+# the rest are the already-indexed corpus (oracle-expressible, no state file)
+INCR_BATCH_MOD = 5
+
+
+def _split_batch(frame: DataFrame, keys: list[str], cap: int,
+                 buckets=lambda side: side) -> tuple[DataFrame, DataFrame]:
+    """(index, batch): the incremental family's fixture split of ``frame``
+    into the already-indexed corpus and the newly arriving batch, each side
+    mapped through ``buckets`` to its bucket rows (keyed by ``keys``), with
+    the index's hot buckets (> ``cap`` members) dropped exactly as the batch
+    operators drop them. Splitting BEFORE ``buckets`` lets a persisted twin
+    hash only the batch's documents when its index already sits on disk."""
+    is_new = F.col("doc_id") % INCR_BATCH_MOD == 0
+    idx = _drop_hot_buckets(buckets(frame.where(~is_new)), keys, cap)
+    return idx, buckets(frame.where(is_new))
+
+
+def _probe_index(idx: DataFrame, batch: DataFrame, keys: list[str],
+                 carry: tuple[str, ...] = ()) -> DataFrame:
+    """(doc_id, dup_of, <c>_new..., <c>_idx...): every batch row matched to
+    the index rows sharing its bucket ``keys`` — ``doc_id`` the new
+    document, ``dup_of`` the indexed one, and each ``carry`` column from
+    both sides. The index is write-once state (appended after each batch,
+    rebuilt never), so the SMALL batch side broadcasts into it and the index
+    never reshuffles: daily cost is O(batch + matches), not O(corpus).
+    Batch-internal pairs are out of contract (the batch's own backfill run
+    handles those)."""
+    new = batch.select(
+        F.col("doc_id").alias("new_id"), *keys,
+        *[F.col(c).alias(f"{c}_new") for c in carry],
+    )
+    return idx.join(F.broadcast(new), keys).select(
+        F.col("new_id").alias("doc_id"), F.col("doc_id").alias("dup_of"),
+        *[f"{c}_new" for c in carry],
+        *[F.col(c).alias(f"{c}_idx") for c in carry],
+    )
+
+
 # --------------------------------------------------------------------------- #
 # exact dedup
 # --------------------------------------------------------------------------- #
@@ -818,41 +857,19 @@ LIMIT {BOILERPLATE_TOP_K}
 # incremental dedup (daily-ingest batch vs persisted index)
 # --------------------------------------------------------------------------- #
 
-# deterministic fixture split: every 5th doc arrives as the "new batch",
-# the rest are the already-indexed corpus (oracle-expressible, no state file)
-INCR_BATCH_MOD = 5
-
-
 def dedup_substring_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, dup_of, pos_new, pos_idx, span_len): INCREMENTAL ExactSubstr
     — repeated spans between each newly arriving document (fixture split:
-    ``doc_id % INCR_BATCH_MOD = 0``, same contract as
-    :func:`dedup_incremental`) and the already-indexed corpus. The daily
-    steady state to :func:`dedup_substring`'s backfill: in production the
-    positional fingerprint table is write-once state (appended after each
-    batch, rebuilt never); a daily batch computes fingerprints for ITS
-    documents only (map-only, linear in batch size) and probes the index
-    with a BROADCAST of the small batch side — the index is never
-    reshuffled, so daily cost is O(batch + matches), not O(corpus).
-    Hot index fingerprints (> ``SUBSTR_FP_CAP`` entries — boilerplate,
+    ``doc_id % INCR_BATCH_MOD = 0``, :func:`_split_batch`) and the
+    already-indexed corpus, the daily steady state to
+    :func:`dedup_substring`'s backfill: the positional fingerprint table is
+    the write-once index, probed by :func:`_probe_index`. Hot index
+    fingerprints (> ``SUBSTR_FP_CAP`` entries — boilerplate,
     non-discriminative) are excluded exactly as in the batch operator,
     mirrored in the oracle; the span merge is the same gaps-and-islands
-    window over (new doc, index doc, diagonal). Batch-internal pairs are
-    out of contract (the batch's own backfill run handles those)."""
-    ex = _positional_shingles(spark, sf_dir)
-    is_new = F.col("doc_id") % INCR_BATCH_MOD == 0
-    idx = _drop_hot_buckets(ex.where(~is_new), ["fp"], SUBSTR_FP_CAP)
-    new = ex.where(is_new).select(
-        F.col("doc_id").alias("new_id"), F.col("pos").alias("pos_new"), "fp"
-    )
-    m = (
-        idx.join(F.broadcast(new), "fp")
-        .select(
-            F.col("new_id").alias("doc_id"), "pos_new",
-            F.col("doc_id").alias("dup_of"), F.col("pos").alias("pos_idx"),
-        )
-        .distinct()
-    )
+    window over (new doc, index doc, diagonal)."""
+    idx, batch = _split_batch(_positional_shingles(spark, sf_dir), ["fp"], SUBSTR_FP_CAP)
+    m = _probe_index(idx, batch, ["fp"], ("pos",)).distinct()
     w_run = Window.partitionBy("doc_id", "dup_of", "diag").orderBy("pos_new")
     spans = (
         m.withColumn("diag", F.col("pos_new") - F.col("pos_idx"))
@@ -918,15 +935,8 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the already-indexed corpus (the rest), verified with exact
     Jaccard ≥ 0.8. This is the operator a pipeline runs DAILY: the
     full-corpus ``dedup_minhash_lsh`` is the backfill; this is the steady
-    state.
-
-    Scale shape — the reason this exists as its own operator: the index's
-    band table is write-once state (in production: the persisted sketch/band
-    table, rebuilt never, appended after each batch). A daily batch computes
-    signatures for ITS documents only (map-only, linear in batch size) and
-    probes the index with a broadcast of the SMALL batch side — the index is
-    never reshuffled, so daily cost is O(batch + matches), not O(corpus).
-    Hot index buckets are excluded exactly as in the batch operator
+    state, its LSH band table the write-once index that
+    :func:`_probe_index` probes. Hot index buckets are excluded exactly as in the batch operator
     (boilerplate band keys are non-discriminative), mirrored in the oracle.
     """
     # one (doc_id, sh, s0..s15) checkpoint, as in dedup_minhash_lsh: the
@@ -935,17 +945,10 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_signatures_with_sets(_shingle_sets(spark, sf_dir))
         .localCheckpoint(eager=False)
     )
-    sets = table.select("doc_id", "sh")
-    bands = _lsh_band_table(table)
-    is_new = F.col("doc_id") % INCR_BATCH_MOD == 0
-    idx_bands = _drop_hot_buckets(bands.where(~is_new), ["band", "band_sig"], LSH_BUCKET_CAP)
-    new_bands = bands.where(is_new).withColumnRenamed("doc_id", "new_id")
-    cand = (
-        idx_bands.join(F.broadcast(new_bands), ["band", "band_sig"])
-        .select(F.col("new_id").alias("doc_id"), F.col("doc_id").alias("dup_of"))
-        .distinct()
-    )
-    return _jaccard_confirm(cand, sets)
+    keys = ["band", "band_sig"]
+    idx, batch = _split_batch(table, keys, LSH_BUCKET_CAP, _lsh_band_table)
+    cand = _probe_index(idx, batch, keys).distinct()
+    return _jaccard_confirm(cand, table.select("doc_id", "sh"))
 
 
 def _lsh_band_table(sig: DataFrame) -> DataFrame:

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tf_idf_using_mapreduce_spark.functions.text import TOKENS
+from tf_idf_using_mapreduce_spark.operators import dedup as dd
 from tf_idf_using_mapreduce_spark.sources.corpus import load_table, spread
 
 N_FAKE_FEATURES = 4
@@ -578,10 +579,8 @@ def phash_banded(ph: DataFrame) -> DataFrame:
     (operators/persisted.py). One definition so the band layout cannot
     silently diverge between the index that is WRITTEN and the batch that
     PROBES it."""
-    from tf_idf_using_mapreduce_spark.operators.dedup import _band_key
-
     band_structs = ", ".join(
-        f"named_struct('band', {b}, 'bkey', {_band_key('ph_hi', 'ph_lo', b)})"
+        f"named_struct('band', {b}, 'bkey', {dd._band_key('ph_hi', 'ph_lo', b)})"
         for b in range(PHASH_BANDS)
     )
     return ph.select(
@@ -595,20 +594,12 @@ def phash_near_dup_pairs(ph: DataFrame) -> DataFrame:
     table — the banded pair stage of :func:`dedup_image_phash`, shared with
     the real-binary path (tests near-dup genuine re-encoded PNGs through
     :func:`phash_frames` + this)."""
-    from tf_idf_using_mapreduce_spark.operators.dedup import (
-        LSH_BUCKET_CAP,
-        _drop_hot_buckets,
-        _earlier_band_mismatch,
-        _hamming64_spark,
-        _ordered_pairs_expr,
-    )
-
-    banded = _drop_hot_buckets(phash_banded(ph), ["band", "bkey"], LSH_BUCKET_CAP)
+    banded = dd._drop_hot_buckets(phash_banded(ph), ["band", "bkey"], dd.LSH_BUCKET_CAP)
     pairs = (
         banded.groupBy("band", "bkey")
         .agg(F.expr("array_sort(array_distinct(collect_list(struct(doc_id, ph_hi, ph_lo))))").alias("ds"))
         .where(F.size("ds") >= 2)
-        .select("band", F.explode(F.expr(_ordered_pairs_expr("ds"))).alias("p"))
+        .select("band", F.explode(F.expr(dd._ordered_pairs_expr("ds"))).alias("p"))
         # duplicate doc_ids with DIFFERENT texts (legal dirty data — the
         # fuzz corpus pins the shape) hash to distinct structs, so the
         # sorted member list can pair an id with itself; the oracle's
@@ -624,10 +615,10 @@ def phash_near_dup_pairs(ph: DataFrame) -> DataFrame:
         )
     )
     return (
-        pairs.withColumn("hamming", F.expr(_hamming64_spark("hi_a", "lo_a", "hi_b", "lo_b")))
+        pairs.withColumn("hamming", F.expr(dd._hamming64_spark("hi_a", "lo_a", "hi_b", "lo_b")))
         .where(F.col("hamming") <= PHASH_HAMMING_THRESHOLD)
-        .where(F.expr(_earlier_band_mismatch(("hi_a", "lo_a"), ("hi_b", "lo_b"),
-                                             n_bands=PHASH_BANDS)))
+        .where(F.expr(dd._earlier_band_mismatch(("hi_a", "lo_a"), ("hi_b", "lo_b"),
+                                                n_bands=PHASH_BANDS)))
         .select("doc_a", "doc_b", "hamming")
     )
 
@@ -667,30 +658,23 @@ def multimodal_phash_oracle() -> str:
 def dedup_image_phash_oracle() -> str:
     """DuckDB twin of :func:`dedup_image_phash`: the shared decode CTEs,
     then the exact SimHash banding SQL over (ph_hi, ph_lo)."""
-    from tf_idf_using_mapreduce_spark.operators.dedup import (
-        LSH_BUCKET_CAP,
-        _band_key,
-        _earlier_band_mismatch,
-        _hamming64_duck,
-    )
-
     band_selects = " UNION ALL ".join(
         f"SELECT doc_id, ph_hi, ph_lo, {b} AS band,"
-        f" {_band_key('ph_hi', 'ph_lo', b)} AS bkey FROM ph"
+        f" {dd._band_key('ph_hi', 'ph_lo', b)} AS bkey FROM ph"
         for b in range(PHASH_BANDS)
     )
     # hamming + emit-once run over the DISTINCT candidate set (cand CTE),
     # mirroring the engine's array_distinct-before-expansion rule under
     # duplicate (doc_id, text) rows — the two-sided join would multiply
     # identical pairs where the collect_list path emits them once
-    ham = _hamming64_duck("a_hi", "a_lo", "b_hi", "b_lo")
-    emit_once = _earlier_band_mismatch(("a_hi", "a_lo"), ("b_hi", "b_lo"),
-                                       n_bands=PHASH_BANDS)
+    ham = dd._hamming64_duck("a_hi", "a_lo", "b_hi", "b_lo")
+    emit_once = dd._earlier_band_mismatch(("a_hi", "a_lo"), ("b_hi", "b_lo"),
+                                          n_bands=PHASH_BANDS)
     return f"""
 WITH {_phash_table_ctes()},
 allbanded AS ({band_selects}),
 hot AS (SELECT band, bkey FROM allbanded
-        GROUP BY band, bkey HAVING count(*) > {LSH_BUCKET_CAP}),
+        GROUP BY band, bkey HAVING count(*) > {dd.LSH_BUCKET_CAP}),
 banded AS (SELECT * FROM allbanded bb
            WHERE NOT EXISTS (SELECT 1 FROM hot h
                              WHERE h.band = bb.band AND h.bkey = bb.bkey)),
@@ -707,75 +691,56 @@ WHERE {ham} <= {PHASH_HAMMING_THRESHOLD}
 """
 
 
-def dedup_image_phash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, dup_of, hamming): INCREMENTAL image near-dup — each newly
-    arriving payload (fixture split ``doc_id % INCR_BATCH_MOD = 0``, the
-    engine-wide incremental contract) probed against the already-indexed
-    corpus. Completes the image modality the way
-    ``dedup_substring_incremental`` completes ExactSubstr: in production the
-    (doc_id, ph_hi, ph_lo) index is write-once state, the daily batch hashes
-    only ITS payloads (map-only) and probes with a BROADCAST of the small
-    batch side — the index is never reshuffled, daily cost is
-    O(batch + matches). Hot index buckets (> ``LSH_BUCKET_CAP`` entries —
-    degenerate payloads) are excluded exactly as in the batch operator,
-    mirrored in the oracle; batch-internal pairs are out of contract (the
-    batch's own backfill run handles those)."""
-    from tf_idf_using_mapreduce_spark.operators.dedup import (
-        INCR_BATCH_MOD,
-        LSH_BUCKET_CAP,
-        _drop_hot_buckets,
-        _hamming64_spark,
-    )
+# the probe carries each side's hash to the hamming confirm
+PHASH_CARRY = ("ph_hi", "ph_lo")
 
-    ph = image_phash_table(spark, sf_dir).localCheckpoint(eager=False)
-    banded = phash_banded(ph)
-    is_new = F.col("doc_id") % INCR_BATCH_MOD == 0
-    idx = _drop_hot_buckets(banded.where(~is_new), ["band", "bkey"], LSH_BUCKET_CAP)
-    new = banded.where(is_new).select(
-        F.col("doc_id").alias("new_id"),
-        F.col("ph_hi").alias("hi_n"), F.col("ph_lo").alias("lo_n"),
-        "band", "bkey",
-    )
-    cand = (
-        idx.join(F.broadcast(new), ["band", "bkey"])
-        .select(
-            F.col("new_id").alias("doc_id"), "hi_n", "lo_n",
-            F.col("doc_id").alias("dup_of"),
-            F.col("ph_hi").alias("hi_i"), F.col("ph_lo").alias("lo_i"),
-        )
-        .distinct()
-    )
+
+def phash_confirm(cand: DataFrame) -> DataFrame:
+    """(doc_id, dup_of, hamming): the hamming confirm of an incremental
+    image probe carrying :data:`PHASH_CARRY` — shared by the in-memory
+    probe and its persisted twin (operators/persisted.py), which register
+    under the same oracle."""
+    ham = dd._hamming64_spark("ph_hi_new", "ph_lo_new", "ph_hi_idx", "ph_lo_idx")
     return (
-        cand.withColumn("hamming", F.expr(_hamming64_spark("hi_n", "lo_n", "hi_i", "lo_i")))
+        cand.withColumn("hamming", F.expr(ham))
         .where(F.col("hamming") <= PHASH_HAMMING_THRESHOLD)
         .select("doc_id", "dup_of", "hamming")
     )
 
 
-def dedup_image_phash_incremental_oracle() -> str:
-    from tf_idf_using_mapreduce_spark.operators.dedup import (
-        INCR_BATCH_MOD,
-        LSH_BUCKET_CAP,
-        _band_key,
-        _hamming64_duck,
-    )
+def dedup_image_phash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, dup_of, hamming): INCREMENTAL image near-dup — each newly
+    arriving payload (fixture split ``doc_id % INCR_BATCH_MOD = 0``, the
+    engine-wide incremental contract of ``dedup._split_batch`` /
+    ``dedup._probe_index``) probed against the already-indexed corpus,
+    completing the image modality the way
+    ``dedup_substring_incremental`` completes ExactSubstr: the
+    (doc_id, ph_hi, ph_lo) band table is the write-once index. Hot index
+    buckets (> ``LSH_BUCKET_CAP`` entries — degenerate payloads) are
+    excluded exactly as in the batch operator, mirrored in the oracle."""
+    ph = image_phash_table(spark, sf_dir).localCheckpoint(eager=False)
+    keys = ["band", "bkey"]
+    idx, batch = dd._split_batch(ph, keys, dd.LSH_BUCKET_CAP, phash_banded)
+    return phash_confirm(dd._probe_index(idx, batch, keys, PHASH_CARRY).distinct())
 
+
+def dedup_image_phash_incremental_oracle() -> str:
     band_selects = " UNION ALL ".join(
         f"SELECT doc_id, ph_hi, ph_lo, {b} AS band,"
-        f" {_band_key('ph_hi', 'ph_lo', b)} AS bkey FROM ph"
+        f" {dd._band_key('ph_hi', 'ph_lo', b)} AS bkey FROM ph"
         for b in range(PHASH_BANDS)
     )
-    ham = _hamming64_duck("hi_n", "lo_n", "hi_i", "lo_i")
+    ham = dd._hamming64_duck("hi_n", "lo_n", "hi_i", "lo_i")
     return f"""
 WITH {_phash_table_ctes()},
 allbanded AS ({band_selects}),
-idx0 AS (SELECT * FROM allbanded WHERE doc_id % {INCR_BATCH_MOD} <> 0),
+idx0 AS (SELECT * FROM allbanded WHERE doc_id % {dd.INCR_BATCH_MOD} <> 0),
 hot AS (SELECT band, bkey FROM idx0
-        GROUP BY band, bkey HAVING count(*) > {LSH_BUCKET_CAP}),
+        GROUP BY band, bkey HAVING count(*) > {dd.LSH_BUCKET_CAP}),
 idx AS (SELECT * FROM idx0 bb
         WHERE NOT EXISTS (SELECT 1 FROM hot h
                           WHERE h.band = bb.band AND h.bkey = bb.bkey)),
-newb AS (SELECT * FROM allbanded WHERE doc_id % {INCR_BATCH_MOD} = 0),
+newb AS (SELECT * FROM allbanded WHERE doc_id % {dd.INCR_BATCH_MOD} = 0),
 cand AS (
   SELECT DISTINCT n.doc_id AS doc_id, n.ph_hi AS hi_n, n.ph_lo AS lo_n,
          i.doc_id AS dup_of, i.ph_hi AS hi_i, i.ph_lo AS lo_i
@@ -919,18 +884,12 @@ def audio_align_pairs(fps: DataFrame) -> DataFrame:
     :func:`dedup_audio_fingerprint`, shared with the real-binary path (tests
     near-dup a genuinely edited WAV through :func:`audio_fp_frames` +
     this)."""
-    from tf_idf_using_mapreduce_spark.operators.dedup import (
-        LSH_BUCKET_CAP,
-        _drop_hot_buckets,
-        _ordered_pairs_expr,
-    )
-
-    buck = _drop_hot_buckets(fps, ["fh"], LSH_BUCKET_CAP)
+    buck = dd._drop_hot_buckets(fps, ["fh"], dd.LSH_BUCKET_CAP)
     pairs = (
         buck.groupBy("fh")
         .agg(F.expr("array_sort(array_distinct(collect_list(struct(doc_id, frame_idx))))").alias("ds"))
         .where(F.size("ds") >= 2)
-        .select(F.explode(F.expr(_ordered_pairs_expr("ds"))).alias("p"))
+        .select(F.explode(F.expr(dd._ordered_pairs_expr("ds"))).alias("p"))
         .where(F.expr("p.doc_a.doc_id <> p.doc_b.doc_id"))
         .select(
             F.col("p.doc_a.doc_id").alias("doc_a"),
@@ -974,11 +933,9 @@ def dedup_audio_fingerprint_oracle() -> str:
     engine's hot-bucket cap, candidate pairs via fingerprint equi-join
     (doc_a < doc_b — identical to the sorted-array pair expansion), then the
     offset-delta vote histogram."""
-    from tf_idf_using_mapreduce_spark.operators.dedup import LSH_BUCKET_CAP
-
     return f"""
 WITH {_audio_frames_cte()},
-hot AS (SELECT fh FROM frames GROUP BY fh HAVING count(*) > {LSH_BUCKET_CAP}),
+hot AS (SELECT fh FROM frames GROUP BY fh HAVING count(*) > {dd.LSH_BUCKET_CAP}),
 cold AS (SELECT DISTINCT doc_id, frame_idx, fh FROM frames
          WHERE fh NOT IN (SELECT fh FROM hot)),
 cand AS (
@@ -1132,12 +1089,6 @@ def video_set_pairs(frames: DataFrame) -> DataFrame:
     :func:`dedup_video_frames`, shared with the real-binary path (tests
     near-dup a genuinely re-cut GIF through :func:`video_keyframe_frames` +
     this)."""
-    from tf_idf_using_mapreduce_spark.operators.dedup import (
-        LSH_BUCKET_CAP,
-        _drop_hot_buckets,
-        _ordered_pairs_expr,
-    )
-
     vfh = (
         frames
         .select("doc_id", "ph_hi", "ph_lo")
@@ -1145,12 +1096,12 @@ def video_set_pairs(frames: DataFrame) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     dcnt = vfh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_frames"))
-    buck = _drop_hot_buckets(vfh, ["ph_hi", "ph_lo"], LSH_BUCKET_CAP)
+    buck = dd._drop_hot_buckets(vfh, ["ph_hi", "ph_lo"], dd.LSH_BUCKET_CAP)
     shared = (
         buck.groupBy("ph_hi", "ph_lo")
         .agg(F.expr("array_sort(collect_list(doc_id))").alias("ds"))
         .where(F.size("ds") >= 2)
-        .select(F.explode(F.expr(_ordered_pairs_expr("ds"))).alias("p"))
+        .select(F.explode(F.expr(dd._ordered_pairs_expr("ds"))).alias("p"))
         .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
@@ -1211,14 +1162,12 @@ def multimodal_video_frames_oracle() -> str:
 
 
 def dedup_video_frames_oracle() -> str:
-    from tf_idf_using_mapreduce_spark.operators.dedup import LSH_BUCKET_CAP
-
     return f"""
 WITH {_video_frames_cte()},
 dh AS (SELECT DISTINCT doc_id, ph_hi, ph_lo FROM vfh),
 dcnt AS (SELECT doc_id, count(*) AS n_frames FROM dh GROUP BY doc_id),
 hot AS (SELECT ph_hi, ph_lo FROM dh GROUP BY ph_hi, ph_lo
-        HAVING count(*) > {LSH_BUCKET_CAP}),
+        HAVING count(*) > {dd.LSH_BUCKET_CAP}),
 cold AS (SELECT * FROM dh d
          WHERE NOT EXISTS (SELECT 1 FROM hot h
                            WHERE h.ph_hi = d.ph_hi AND h.ph_lo = d.ph_lo)),
@@ -1240,46 +1189,29 @@ WHERE 3 * s.n_shared >= ca.n_frames + cb.n_frames
 def dedup_audio_fingerprint_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, dup_of, delta, n_aligned): INCREMENTAL audio near-dup — each
     newly arriving payload (fixture split ``doc_id % INCR_BATCH_MOD = 0``,
-    the engine-wide incremental contract) probed against the already-indexed
-    corpus, completing the audio modality the way
-    ``dedup_image_phash_incremental`` completes the image one. In production
-    the (doc_id, frame_idx, fh) inverted index is write-once state: the daily
-    batch fingerprints only ITS payloads (map-only) and probes with a
-    BROADCAST of the small batch side — the index is never reshuffled, daily
-    cost is O(batch frames + matches). Hot index fingerprints (>
-    ``LSH_BUCKET_CAP`` occurrences — degenerate constant payloads) are
-    excluded exactly as in the batch operator, mirrored in the oracle;
-    batch-internal pairs are out of contract (the batch's own backfill run
-    handles those)."""
-    from tf_idf_using_mapreduce_spark.operators.dedup import (
-        INCR_BATCH_MOD,
-        LSH_BUCKET_CAP,
-        _drop_hot_buckets,
-    )
-
+    ``dedup._split_batch`` / ``dedup._probe_index``) probed against the
+    already-indexed corpus, completing the audio modality the way
+    ``dedup_image_phash_incremental`` completes the image one: the
+    (doc_id, frame_idx, fh) inverted index is the write-once state. Hot
+    index fingerprints (> ``LSH_BUCKET_CAP`` occurrences — degenerate
+    constant payloads) are excluded exactly as in the batch operator,
+    mirrored in the oracle."""
     # lineage cut (r16): THREE consumers (hot-fingerprint count, index join
     # side, broadcast batch side) — the decode kernel otherwise ran three
     # times per query; the image/video incremental twins already cut here
     fps = audio_fingerprint_table(spark, sf_dir).localCheckpoint(eager=False)
-    is_new = F.col("doc_id") % INCR_BATCH_MOD == 0
+    idx, batch = dd._split_batch(fps, ["fh"], dd.LSH_BUCKET_CAP)
     # .distinct() on both probe sides: duplicate document rows (legal dirty
     # data) duplicate every (doc_id, frame_idx, fh) row, and raw-row joins
     # would multiply the vote counts — the batch operator dedups the same
     # way via array_distinct inside its bucket lists, and the incremental
     # contract is 'batch restricted to new docs'. Hot-cap BEFORE distinct,
     # matching the batch order (cap counts raw occurrences).
-    idx = _drop_hot_buckets(fps.where(~is_new), ["fh"], LSH_BUCKET_CAP).distinct()
-    new = fps.where(is_new).distinct().select(
-        F.col("doc_id").alias("new_id"),
-        F.col("frame_idx").alias("idx_n"),
-        "fh",
-    )
     return (
-        idx.join(F.broadcast(new), "fh")
+        dd._probe_index(idx.distinct(), batch.distinct(), ["fh"], ("frame_idx",))
         .select(
-            F.col("new_id").alias("doc_id"),
-            F.col("doc_id").alias("dup_of"),
-            (F.col("idx_n") - F.col("frame_idx")).alias("delta"),
+            "doc_id", "dup_of",
+            (F.col("frame_idx_new") - F.col("frame_idx_idx")).alias("delta"),
         )
         .groupBy("doc_id", "dup_of", "delta")
         .agg(F.count(F.lit(1)).alias("n_aligned"))
@@ -1288,19 +1220,14 @@ def dedup_audio_fingerprint_incremental(spark: SparkSession, sf_dir: str) -> Dat
 
 
 def dedup_audio_fingerprint_incremental_oracle() -> str:
-    from tf_idf_using_mapreduce_spark.operators.dedup import (
-        INCR_BATCH_MOD,
-        LSH_BUCKET_CAP,
-    )
-
     return f"""
 WITH {_audio_frames_cte()},
-idx0 AS (SELECT * FROM frames WHERE doc_id % {INCR_BATCH_MOD} <> 0),
-hot AS (SELECT fh FROM idx0 GROUP BY fh HAVING count(*) > {LSH_BUCKET_CAP}),
+idx0 AS (SELECT * FROM frames WHERE doc_id % {dd.INCR_BATCH_MOD} <> 0),
+hot AS (SELECT fh FROM idx0 GROUP BY fh HAVING count(*) > {dd.LSH_BUCKET_CAP}),
 idx AS (SELECT DISTINCT doc_id, frame_idx, fh FROM idx0
         WHERE fh NOT IN (SELECT fh FROM hot)),
 newb AS (SELECT DISTINCT doc_id, frame_idx, fh FROM frames
-         WHERE doc_id % {INCR_BATCH_MOD} = 0),
+         WHERE doc_id % {dd.INCR_BATCH_MOD} = 0),
 cand AS (
   SELECT n.doc_id AS doc_id, i.doc_id AS dup_of,
          n.frame_idx - i.frame_idx AS delta
@@ -1400,46 +1327,34 @@ GROUP BY doc_a, doc_b
 
 def dedup_video_frames_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, dup_of, n_shared, n_union): INCREMENTAL video near-dup —
-    each newly arriving payload (``doc_id % INCR_BATCH_MOD = 0``) probed
-    against the already-indexed corpus, completing the incremental column of
-    the modality matrix (exact text / substring / image / audio all have
-    one). Production state is the write-once (doc_id, keyframe-hash) index
-    PLUS its per-doc distinct-frame count column — both append-only, so the
-    daily batch hashes only ITS payloads, broadcasts them into the index
-    (never reshuffled through a join), and the Jaccard >= 1/2 test runs in
-    exact integers against the stored counts. Hot index hashes are excluded
-    as in the batch operator (cap on the index side only, mirrored in the
-    oracle); batch-internal pairs are out of contract."""
-    from tf_idf_using_mapreduce_spark.operators.dedup import (
-        INCR_BATCH_MOD,
-        LSH_BUCKET_CAP,
-        _drop_hot_buckets,
-    )
-
+    each newly arriving payload (``doc_id % INCR_BATCH_MOD = 0``,
+    ``dedup._split_batch`` / ``dedup._probe_index``) probed against the
+    already-indexed corpus, completing the incremental column of the
+    modality matrix (exact text / substring / image / audio all have one).
+    Production state is the write-once (doc_id, keyframe-hash) index PLUS
+    its per-doc distinct-frame count column — both append-only, so the
+    Jaccard >= 1/2 test runs in exact integers against the stored counts.
+    Hot index hashes are excluded as in the batch operator (cap on the
+    index side only, mirrored in the oracle)."""
     vfh = (
         video_frame_table(spark, sf_dir)
         .select("doc_id", "ph_hi", "ph_lo")
         .distinct()
         .localCheckpoint(eager=False)
     )
-    is_new = F.col("doc_id") % INCR_BATCH_MOD == 0
-    idx = vfh.where(~is_new)
-    idx_cold = _drop_hot_buckets(idx, ["ph_hi", "ph_lo"], LSH_BUCKET_CAP)
-    new = vfh.where(is_new).select(
-        F.col("doc_id").alias("new_id"), "ph_hi", "ph_lo"
-    )
-    # per-doc distinct-frame counts: index side is stored state in
-    # production (recomputed here from the fixture); batch side is batch-sized
-    icnt = idx.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_idx"))
-    ncnt = new.groupBy("new_id").agg(F.count(F.lit(1)).alias("n_new"))
+    keys = ["ph_hi", "ph_lo"]
+    idx, batch = dd._split_batch(vfh, keys, dd.LSH_BUCKET_CAP)
+    # per-doc distinct-frame counts: the index side's is stored state in
+    # production, recomputed here over the whole uncapped table (the join on
+    # dup_of keeps index docs only); the batch side's is batch-sized
+    icnt = vfh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_idx"))
+    ncnt = batch.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_new"))
     shared = (
-        idx_cold.join(F.broadcast(new), ["ph_hi", "ph_lo"])
-        .groupBy(F.col("new_id").alias("doc_id"), F.col("doc_id").alias("dup_of"))
+        dd._probe_index(idx, batch, keys)
+        .groupBy("doc_id", "dup_of")
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )
-    probe = shared.join(
-        F.broadcast(ncnt.withColumnRenamed("new_id", "doc_id")), "doc_id"
-    )
+    probe = shared.join(F.broadcast(ncnt), "doc_id")
     return (
         icnt.withColumnRenamed("doc_id", "dup_of")
         .join(F.broadcast(probe), "dup_of")
@@ -1452,21 +1367,16 @@ def dedup_video_frames_incremental(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 def dedup_video_frames_incremental_oracle() -> str:
-    from tf_idf_using_mapreduce_spark.operators.dedup import (
-        INCR_BATCH_MOD,
-        LSH_BUCKET_CAP,
-    )
-
     return f"""
 WITH {_video_frames_cte()},
 dh AS (SELECT DISTINCT doc_id, ph_hi, ph_lo FROM vfh),
-idx AS (SELECT * FROM dh WHERE doc_id % {INCR_BATCH_MOD} <> 0),
+idx AS (SELECT * FROM dh WHERE doc_id % {dd.INCR_BATCH_MOD} <> 0),
 hot AS (SELECT ph_hi, ph_lo FROM idx GROUP BY ph_hi, ph_lo
-        HAVING count(*) > {LSH_BUCKET_CAP}),
+        HAVING count(*) > {dd.LSH_BUCKET_CAP}),
 cold AS (SELECT * FROM idx d
          WHERE NOT EXISTS (SELECT 1 FROM hot h
                            WHERE h.ph_hi = d.ph_hi AND h.ph_lo = d.ph_lo)),
-newb AS (SELECT * FROM dh WHERE doc_id % {INCR_BATCH_MOD} = 0),
+newb AS (SELECT * FROM dh WHERE doc_id % {dd.INCR_BATCH_MOD} = 0),
 icnt AS (SELECT doc_id, count(*) AS n_idx FROM idx GROUP BY doc_id),
 ncnt AS (SELECT doc_id, count(*) AS n_new FROM newb GROUP BY doc_id),
 shared AS (

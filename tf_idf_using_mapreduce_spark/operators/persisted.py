@@ -62,14 +62,25 @@ from tf_idf_using_mapreduce_spark.operators.dedup import (
     INCR_BATCH_MOD,
     LSH_BUCKET_CAP,
     _bloom_split_and_prune,
-    _drop_hot_buckets,
     _jaccard_confirm,
     _lsh_band_table,
+    _probe_index,
     _shingle_sets,
+    _split_batch,
     minhash_signatures_with_sets,
 )
+from tf_idf_using_mapreduce_spark.operators.multimodal import (
+    PHASH_CARRY,
+    image_phash_df,
+    phash_banded,
+    phash_confirm,
+)
 from tf_idf_using_mapreduce_spark.operators.similarity import _corpus_signature
-from tf_idf_using_mapreduce_spark.sources.corpus import write_bucketed_table
+from tf_idf_using_mapreduce_spark.sources.corpus import (
+    load_table,
+    spread,
+    write_bucketed_table,
+)
 
 # bucket-key space and physical bucket count: the FLOOR layout (used by the
 # 20% fixture twins) and the bounds of the corpus-derived law
@@ -218,11 +229,13 @@ def _ensure_index(spark: SparkSession, sf_dir: str, kind: str, build,
 
 
 def _pruned_scan(spark: SparkSession, name: str | None, build,
-                 probe_bbs: list[int],
+                 batch: DataFrame,
                  n_values: int = N_BB_VALUES) -> DataFrame:
-    """The persisted index scan restricted to the probe's bucket keys — the
-    ``isin`` pushes into the bucketed scan as bucket pruning. Falls back to
-    the in-plan index when persistence was skipped (unknown identity).
+    """The persisted index scan restricted to the bucket keys ``batch``
+    probes — ONE bounded collect of its distinct ``bb`` (at most
+    ``n_values`` of them), whose ``isin`` pushes into the bucketed scan as
+    bucket pruning. Falls back to the in-plan index when persistence was
+    skipped (unknown identity).
 
     ADAPTIVE (r14 evidence): when the probe's distinct keys cover most of
     the key space (> half), the filter cannot skip meaningfully — it only
@@ -230,6 +243,7 @@ def _pruned_scan(spark: SparkSession, name: str | None, build,
     unfiltered instead. A production optimizer makes the same call from
     NDV stats; measured here: the 20% fixture batch at sf10 selected
     3955 of 4096 buckets through a 16k-literal isin, all cost, no skip."""
+    probe_bbs = sorted(r[0] for r in batch.select("bb").distinct().collect())
     idx = spark.table(name) if name is not None else build()
     if not probe_bbs:
         return idx.where(F.lit(False))  # empty batch probes nothing
@@ -286,10 +300,9 @@ def _bloom_persisted_report(spark: SparkSession, sf_dir: str,
     pr = pruned.select("doc_id", "h") \
         .withColumn("bb", _bb("h", n_values=n_bb)) \
         .localCheckpoint(eager=False)
-    bbs = sorted(r[0] for r in pr.select("bb").distinct().collect())
     idx_scan = _pruned_scan(
         spark, name, lambda: idx.withColumn("bb", _bb("h", n_values=n_bb)),
-        bbs, n_values=n_bb,
+        pr, n_values=n_bb,
     )
     matches = (
         idx_scan.select(F.col("doc_id").alias("dup_of"), "h")
@@ -334,6 +347,21 @@ def dedup_incremental_bloom_persisted_daily(spark: SparkSession,
                                    derive_space=True)
 
 
+def _probe_persisted(spark: SparkSession, sf_dir: str, kind: str,
+                     idx: DataFrame, batch: DataFrame, keys: list[str],
+                     carry: tuple[str, ...] = ()) -> DataFrame:
+    """The distinct candidate pairs of :func:`_probe_index` with the ``kind``
+    band index written to disk once (from ``idx``, derived in-plan only when
+    it is missing) and the pruned scan of it as the index side."""
+    def build() -> DataFrame:
+        return idx.withColumn("bb", _bb(*keys))
+
+    name = _ensure_index(spark, sf_dir, kind, build)
+    # lineage cut: the batch feeds the bucket-key collect AND the probe
+    batch = batch.withColumn("bb", _bb(*keys)).localCheckpoint(eager=False)
+    return _probe_index(_pruned_scan(spark, name, build, batch), batch, keys, carry).distinct()
+
+
 def dedup_incremental_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, dup_of, jaccard): ``dedup_incremental`` probing the PERSISTED
     MinHash band index — same fixture split, same hot-bucket cap (applied at
@@ -343,30 +371,12 @@ def dedup_incremental_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     that is the point), one bounded bucket-key collect, a broadcast band
     probe against the selected buckets, then the confirm joins."""
     sets = _shingle_sets(spark, sf_dir).localCheckpoint(eager=False)
-    is_new = F.col("doc_id") % INCR_BATCH_MOD == 0
-
-    def build() -> DataFrame:
-        idx_bands = _drop_hot_buckets(
-            _lsh_band_table(minhash_signatures_with_sets(sets.where(~is_new))),
-            ["band", "band_sig"], LSH_BUCKET_CAP,
-        )
-        return idx_bands.withColumn("bb", _bb("band", "band_sig"))
-
-    name = _ensure_index(spark, sf_dir, "band", build)
-    new_bands = (
-        _lsh_band_table(minhash_signatures_with_sets(sets.where(is_new)))
-        .withColumnRenamed("doc_id", "new_id")
-        .withColumn("bb", _bb("band", "band_sig"))
-        .localCheckpoint(eager=False)
+    keys = ["band", "band_sig"]
+    idx, batch = _split_batch(
+        sets, keys, LSH_BUCKET_CAP,
+        lambda side: _lsh_band_table(minhash_signatures_with_sets(side)),
     )
-    bbs = sorted(r[0] for r in new_bands.select("bb").distinct().collect())
-    idx_scan = _pruned_scan(spark, name, build, bbs)
-    cand = (
-        idx_scan.join(F.broadcast(new_bands.drop("bb")), ["band", "band_sig"])
-        .select(F.col("new_id").alias("doc_id"), F.col("doc_id").alias("dup_of"))
-        .distinct()
-    )
-    return _jaccard_confirm(cand, sets)
+    return _jaccard_confirm(_probe_persisted(spark, sf_dir, "band", idx, batch, keys), sets)
 
 
 def dedup_image_phash_incremental_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -388,55 +398,14 @@ def dedup_image_phash_incremental_persisted(spark: SparkSession, sf_dir: str) ->
     applied at index BUILD time (hotness is a property of the indexed
     corpus), exactly like the in-memory twin — which this must match
     row-for-row, so both register under the same oracle."""
-    from tf_idf_using_mapreduce_spark.operators.dedup import (
-        _drop_hot_buckets,
-        _hamming64_spark,
-    )
-    from tf_idf_using_mapreduce_spark.operators.multimodal import (
-        PHASH_HAMMING_THRESHOLD,
-        image_phash_df,
-        phash_banded,
-    )
-    from tf_idf_using_mapreduce_spark.sources.corpus import load_table, spread
-
     docs = spread(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"),
         bytes_per_partition=128 * 1024,
     )
-    is_new = F.col("doc_id") % INCR_BATCH_MOD == 0
-
-    def build() -> DataFrame:
-        idx_bands = _drop_hot_buckets(
-            phash_banded(image_phash_df(docs.where(~is_new))),
-            ["band", "bkey"], LSH_BUCKET_CAP,
-        )
-        return idx_bands.withColumn("bb", _bb("band", "bkey"))
-
-    name = _ensure_index(spark, sf_dir, "phband", build)
-    new_bands = (
-        phash_banded(image_phash_df(docs.where(is_new)))
-        .select(
-            F.col("doc_id").alias("new_id"),
-            F.col("ph_hi").alias("hi_n"), F.col("ph_lo").alias("lo_n"),
-            "band", "bkey",
-        )
-        .withColumn("bb", _bb("band", "bkey"))
-        .localCheckpoint(eager=False)
+    keys = ["band", "bkey"]
+    idx, batch = _split_batch(
+        docs, keys, LSH_BUCKET_CAP, lambda side: phash_banded(image_phash_df(side)),
     )
-    bbs = sorted(r[0] for r in new_bands.select("bb").distinct().collect())
-    idx_scan = _pruned_scan(spark, name, build, bbs)
-    cand = (
-        idx_scan.join(F.broadcast(new_bands.drop("bb")), ["band", "bkey"])
-        .select(
-            F.col("new_id").alias("doc_id"), "hi_n", "lo_n",
-            F.col("doc_id").alias("dup_of"),
-            F.col("ph_hi").alias("hi_i"), F.col("ph_lo").alias("lo_i"),
-        )
-        .distinct()
-    )
-    return (
-        cand.withColumn("hamming",
-                        F.expr(_hamming64_spark("hi_n", "lo_n", "hi_i", "lo_i")))
-        .where(F.col("hamming") <= PHASH_HAMMING_THRESHOLD)
-        .select("doc_id", "dup_of", "hamming")
+    return phash_confirm(
+        _probe_persisted(spark, sf_dir, "phband", idx, batch, keys, PHASH_CARRY)
     )

@@ -419,13 +419,15 @@ register("events_vacuum_roundtrip", _tt.events_vacuum_roundtrip,
 # Window arithmetic against the correctness gate's 50-slot sample: every
 # query has gate evidence (rounds 12-16), so FORCE_FRESH alone fills it,
 # stalest evidence first; what falls past slot 50 is the round-16 entries
-# last in literal registration order. 52 entries before the stem memo, 58
-# with it, 59 with pos_counts; the 9 past slot 50 are tfidf_mllib,
+# last in literal registration order. 59 entries before the incremental
+# probe, 66 with it; the 16 past slot 50 are dedup_apply,
+# dedup_apply_quality, events_stream_dedup, events_stream_stream_join,
+# dedup_minhash_lsh, dedup_embedding_cosine, tfidf_mllib,
 # tfidf_mllib_topk_overlap, tfidf_doc_similarity, bigram_pmi, split_leakage,
-# split_leakage_semantic, semdedup_prune, diverse_sample_ivf and
-# documents_stream_chunk_dedup. The whole registry is hash-checked locally
-# with tools/check_oracle.py at sf0.01 and sf0.1 (CHANGES.md, build-floor
-# entry).
+# split_leakage_semantic, semdedup_prune, dedup_audio_fingerprint_incremental,
+# diverse_sample_ivf and documents_stream_chunk_dedup. The whole registry is
+# hash-checked locally with tools/check_oracle.py at sf0.01 and sf0.1
+# (CHANGES.md, build-floor entry).
 FORCE_FRESH: frozenset[str] = frozenset({
     # one document-frequency definition (the counts-table vocabulary) and
     # one shared BM25/RRF postings front
@@ -498,6 +500,16 @@ FORCE_FRESH: frozenset[str] = frozenset({
     "tfidf_mllib_topk_overlap",
     # the tag CASE reads a once-projected lower(token) column
     "pos_counts",
+    # one incremental split and broadcast probe (dedup._split_batch,
+    # dedup._probe_index; dedup_incremental and dedup_incremental_persisted
+    # are listed above) and one bucket-key collect (persisted._pruned_scan)
+    "dedup_substring_incremental",
+    "dedup_image_phash_incremental",
+    "dedup_audio_fingerprint_incremental",
+    "dedup_video_frames_incremental",
+    "dedup_image_phash_incremental_persisted",
+    "dedup_incremental_bloom_persisted",
+    "dedup_incremental_bloom_persisted_daily",
 })
 
 
