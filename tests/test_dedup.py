@@ -185,8 +185,9 @@ def test_connected_components_job_count(spark):
     """Job-count regression guard. Rounds only (``local_edges=0``), the
     16-node path runs 8 star rounds = 4 probes of 4 jobs each (the round,
     round and distinct map stages plus the observed cut), then 2 for the
-    extraction. At the default bound the transitive fixture runs one probe
-    and the local finish's single job."""
+    extraction. At the default bound the transitive fixture runs the
+    up-front probe's counted cut and the driver's ``toPandas`` of it; the
+    labels are a local frame, so the ``collect`` runs no job."""
     from tf_idf_using_mapreduce_spark.operators.dedup import connected_components
 
     path = spark.createDataFrame([(i, i + 1) for i in range(1, 16)], "doc_a long, doc_b long")
@@ -198,7 +199,57 @@ def test_connected_components_job_count(spark):
         [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (22, 23), (23, 24)],
         "doc_a long, doc_b long",
     )
-    assert jobs_of(spark, lambda: connected_components(trans).collect(), "cc-trans") == 4
+    assert jobs_of(spark, lambda: connected_components(trans).collect(), "cc-trans") == 2
+
+
+def test_connected_components_local_finish_runs_no_python_worker(spark):
+    """The local finish labels on the driver: the result's executed plan
+    holds no Python operator (no grouped-map task, no Python UDF)."""
+    edges = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "doc_a long, doc_b long")
+    plan = dedup.connected_components(edges)._jdf.queryExecution().executedPlan().toString()
+    for op in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert op not in plan, plan
+
+
+def test_connected_components_repeated_edges_label_like_distinct(spark):
+    """The up-front probe counts the canonical pairs without ``distinct``:
+    repeated edges, in either direction, give the labels of the
+    deduplicated edge set, both in the local finish and in the rounds."""
+    edges = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22)]
+    repeated = edges + [(2, 1), (1, 2), (3, 2), (11, 10), (21, 22), (22, 21)]
+
+    def labels(rows, **kw):
+        df = spark.createDataFrame(rows, "doc_a long, doc_b long")
+        return {r["doc_id"]: r["cluster_id"] for r in
+                dedup.connected_components(df, **kw).collect()}
+
+    want = {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
+    assert labels(edges) == labels(repeated) == want
+    # a bound below the repeated count but above the distinct one: the
+    # upper bound sends the graph to one round probe, then the local finish
+    stats = {}
+    assert labels(repeated, local_edges=len(edges), stats=stats) == want
+    assert stats["rounds"] == 2
+    assert labels(repeated, local_edges=0) == want
+
+
+def test_connected_components_empty_edges(spark):
+    """No edges: the local finish still returns the two bigint columns,
+    with no rows."""
+    edges = spark.createDataFrame([], "doc_a long, doc_b long")
+    out = dedup.connected_components(edges)
+    assert out.schema.simpleString() == "struct<doc_id:bigint,cluster_id:bigint>"
+    assert out.count() == 0
+
+
+def test_dedup_clusters_build_round_trips(spark, py4j_round_trips):
+    """A warm ``dedup_clusters`` build stays under 600 py4j round trips
+    (541 today). With per-Column call-site capture on, every Column call
+    made ~5 more and this build took 1,112."""
+    dedup.dedup_clusters(spark, SF_SMOKE)  # warm: schema memo
+    before = py4j_round_trips.n
+    dedup.dedup_clusters(spark, SF_SMOKE)
+    assert py4j_round_trips.n - before < 600
 
 
 def test_star_round_is_one_grouping(spark):

@@ -172,6 +172,18 @@ def test_image_incremental_reads_bucket_cap_at_call_time(spark, monkeypatch, tmp
     assert mm.dedup_image_phash_incremental(spark, str(tmp_path)).count() == 0
 
 
+def test_image_incremental_persisted_oracle_parity_on_injected_corpus(spark):
+    """The fixture corpora below sf0.1 hold no image near-dup across the
+    batch split, so the registry parity test of the persisted twin compares
+    two empty frames there. On the injected corpus of
+    :func:`test_dedup_image_phash_incremental_probes_index_only` (which
+    checks the in-memory twin) it finds the two batch near-dups of index
+    doc 1, and the registry oracle on DuckDB returns the same rows."""
+    name = "dedup_image_phash_incremental_persisted"
+    got = _injected_corpus(spark, _IMAGE_INCR_ROWS, [name])[name]
+    assert {(r.doc_id, r.dup_of): r.hamming for r in got.itertuples()} == {(5, 1): 1, (10, 1): 1}
+
+
 # --------------------------------------------------------------------------- #
 # round-11 (cont.): audio frame fingerprints + video content-anchored frames
 # --------------------------------------------------------------------------- #

@@ -20,19 +20,23 @@ def test_spark_cpus_defaults_to_host_cores(monkeypatch):
 
 
 def test_python_udf_runs_from_any_cwd(tmp_path):
-    """A query with a Python UDF (the local union-find finish of
-    connected_components) must run from a cwd outside the repo with
-    PYTHONPATH unset: the driver finds the package through sys.path, and the
-    workers through the session's executor PYTHONPATH."""
+    """A package function run in a Python worker (the union-find labeling
+    ``dedup._local_labels`` as a grouped-map body) must run from a cwd
+    outside the repo with PYTHONPATH unset: the driver finds the package
+    through sys.path, and the workers through the session's executor
+    PYTHONPATH."""
     script = textwrap.dedent(f"""
         import sys
         sys.path.insert(0, {PACKAGE_PARENT!r})
-        from tf_idf_using_mapreduce_spark.operators.dedup import connected_components
+        from pyspark.sql import functions as F
+        from tf_idf_using_mapreduce_spark.operators.dedup import _local_labels
         from tf_idf_using_mapreduce_spark.session import get_spark
 
         spark = get_spark("cwd-check", shuffle_partitions=2)
-        edges = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "doc_a long, doc_b long")
-        print(sorted(tuple(r) for r in connected_components(edges).collect()))
+        edges = spark.createDataFrame([(2, 1), (3, 2), (8, 7)], "u long, v long")
+        labels = edges.groupBy(F.lit(0).alias("g")).applyInPandas(
+            _local_labels, "doc_id long, cluster_id long")
+        print(sorted(tuple(r) for r in labels.collect()))
     """)
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env.update(SPARK_GRAFT_CPUS="2", SPARK_DRIVER_MEMORY="1g")

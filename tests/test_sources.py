@@ -11,7 +11,12 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE, jobs_of
-from tf_idf_using_mapreduce_spark.sources.corpus import load_table, read_binary_dir, read_jsonl_corpus
+from tf_idf_using_mapreduce_spark.sources.corpus import (
+    load_table,
+    read_binary_dir,
+    read_jsonl_corpus,
+    spread,
+)
 
 
 def test_jsonl_corpus_roundtrip_and_corrupt_isolation(spark, tmp_path):
@@ -136,6 +141,21 @@ def test_load_table_rewritten_file_gets_its_new_schema(spark, tmp_path):
     df = load_table(spark, str(tmp_path), "documents")
     assert df.dtypes == [("b", "string"), ("c", "double")]
     assert [tuple(r) for r in df.collect()] == [("x", 1.5)]
+
+
+def test_spread_follows_a_rewritten_file(spark, tmp_path):
+    """``spread`` reads each file's row-group count from its footer, memoized
+    per file version: a path rewritten with fewer row groups is read again,
+    so the repartition decision follows the new file."""
+    target = spark.sparkContext.defaultParallelism
+    path = tmp_path / "documents.parquet"
+    pq.write_table(pa.table({"doc_id": list(range(target))}), path, row_group_size=1)
+    df = spark.read.parquet(str(path))
+    assert spread(df, bytes_per_partition=1) is df  # one row group per core
+    pq.write_table(pa.table({"doc_id": list(range(target)), "pad": ["x" * 64] * target}),
+                   path, row_group_size=target)
+    df = spark.read.parquet(str(path))
+    assert spread(df, bytes_per_partition=1) is not df  # one row group now
 
 
 def test_load_table_events_ts_on_memo_hit(spark):

@@ -134,7 +134,7 @@ def test_filter_stopwords_keeps_what_python_keeps(spark):
 
 def test_stemmed_tokens_build_round_trips(spark, py4j_round_trips):
     """A warm ``stemmed_tokens`` build stays under 200 py4j round trips
-    (~105 today, the stem memo's covered-frame lookup included). The stop
+    (~85 today, the stem memo's covered-frame lookup included). The stop
     filter as ``Column.isin(*words)`` costs one round trip per stop word
     and took this build to ~1,600."""
     stemmed_tokens(spark, SF_SMOKE)  # warm: schema and stem memos

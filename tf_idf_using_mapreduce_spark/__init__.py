@@ -8,8 +8,8 @@ Design stance (SURVEY.md §7.0): every public operator is a composable
 ``pyspark.sql.functions`` / ``F.expr``) wherever possible so Catalyst/Tungsten
 optimize and codegen them; Arrow-batched Python (``pandas_udf``,
 ``mapInPandas``, ``applyInPandas``) runs only where SQL has no expression for
-the work (e.g. Unicode NFC, media decoding, the union-find finish), never in
-the tokenize/stem/TF-IDF path.
+the work (e.g. Unicode NFC, media decoding, the cell-local union-find of
+semdedup), never in the tokenize/stem/TF-IDF path.
 """
 
 from tf_idf_using_mapreduce_spark.session import get_spark

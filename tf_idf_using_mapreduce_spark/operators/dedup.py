@@ -1342,8 +1342,8 @@ WHERE {ham} <= {HAMMING_THRESHOLD}
 
 CC_MAX_ITERS = 20
 # Edge count at or below which connected_components stops running
-# distributed rounds and finishes in one task: 2^20 canonical pairs are two
-# 8 MB int64 columns, well inside one Python worker.
+# distributed rounds and finishes on the driver: 2^20 canonical pairs are
+# two 8 MB int64 columns, well inside the driver's Python process.
 CC_LOCAL_EDGES = 1 << 20
 
 
@@ -1381,7 +1381,7 @@ def min_root_forest(parent, ia, ib):
 
 
 def _local_labels(pdf):
-    """Grouped-map body of the local finish: (doc_id, cluster_id = component
+    """The local finish on the driver: (doc_id, cluster_id = component
     min) for every node of the ``(u, v)`` edges in ``pdf``. Nodes are
     numbered in ascending id order, so the smallest index of a component is
     its smallest id."""
@@ -1434,7 +1434,7 @@ def connected_components(edges: DataFrame, src: str = "doc_a", dst: str = "doc_b
     Distributed rounds only while the graph is large, then one in-memory
     finish (the round-cost argument of *MapReduce Algorithms for Big Data
     Analysis*, VLDB'12: pay for a round only while the data cannot be
-    finished in one task):
+    finished in one place):
 
     - ROUNDS: large-star and small-star (Kiveris et al., "Connected
       Components in MapReduce and Beyond", SoCC'14 — public algorithm),
@@ -1452,24 +1452,29 @@ def connected_components(edges: DataFrame, src: str = "doc_a", dst: str = "doc_b
       (:func:`_star_round`) is one reducer over each node's neighbor set:
       one grouping, then one generator, no join.
     - LOCAL FINISH: once the probed edge count is at or below
-      ``local_edges`` (default :data:`CC_LOCAL_EDGES`), the remaining edges
-      go to ONE grouped-map ``applyInPandas`` task that labels every node
-      with the vectorized union-find :func:`min_root_forest`. At fixture
-      scale this happens at the first probe, before any round.
+      ``local_edges`` (default :data:`CC_LOCAL_EDGES`), the driver collects
+      the remaining edges (``toPandas``), labels every node with the
+      vectorized union-find :func:`min_root_forest` and returns the labels
+      as a local frame: no exchange and no Python worker. At fixture scale
+      this happens at the first probe, before any round.
 
     ``local_edges=0`` runs rounds only: no up-front probe, rounds to the
     fixpoint, then star extraction (every node of the final edges labeled
     m(u)) — the pure distributed form, which
     :func:`connected_components_twostar` keeps under the oracle.
 
-    Two rounds per probe: the probe takes the distinct edge set, cuts it
-    and computes its signature (count + order-insensitive bit_xor of
-    per-edge xxhash64; xor is exact because the set is distinct). The
-    fixpoint is a signature seen before at any earlier probe, so a periodic
-    oscillation terminates instead of spinning to the cap (Kiveris et al.
-    prove monotone convergence, so a revisited state can never progress
-    further). The same probe's count decides the local finish.
-    ``stats["rounds"]`` (optional out-param) reports the star rounds run.
+    The up-front probe cuts the canonical pairs and counts them in the
+    cut's own job, with no ``distinct``: a repeated edge only makes the
+    count an upper bound, and both the union-find and the rounds'
+    ``collect_set`` ignore repeats. Then two rounds per probe: the round
+    probe takes the distinct edge set, cuts it and computes its signature
+    (count + order-insensitive bit_xor of per-edge xxhash64; xor is exact
+    because the set is distinct). The fixpoint is a signature seen before
+    at any earlier round probe, so a periodic oscillation terminates
+    instead of spinning to the cap (Kiveris et al. prove monotone
+    convergence, so a revisited state can never progress further). The
+    same probe's count decides the local finish. ``stats["rounds"]``
+    (optional out-param) reports the star rounds run.
 
     CAP-EXHAUSTION CONTRACT: if ``max_iters`` probes (2·max_iters rounds)
     pass before a fixpoint or a local finish, the star extraction can
@@ -1479,9 +1484,9 @@ def connected_components(edges: DataFrame, src: str = "doc_a", dst: str = "doc_b
     never deletes across a split), but callers must treat the
     RuntimeWarning as a correctness signal and raise the cap."""
     def probe(df: DataFrame) -> tuple[DataFrame, tuple]:
-        # the distinct edge set, cut, with its signature observed in the
-        # cut's own job; under AQE the cut also runs the upstream shuffle
-        # stages, one job each
+        # a round's distinct edge set, cut, with its signature observed in
+        # the cut's own job; under AQE the cut also runs the upstream
+        # shuffle stages, one job each
         sig = Observation()
         cut = df.distinct().observe(
             sig, F.count(F.lit(1)).alias("n"), F.expr("bit_xor(xxhash64(u, v))").alias("h"),
@@ -1498,8 +1503,11 @@ def connected_components(edges: DataFrame, src: str = "doc_a", dst: str = "doc_b
     rounds = 0
     finish_local = False
     if local_edges > 0:
-        pairs, sig = probe(pairs)
-        finish_local = sig[0] <= local_edges
+        # only this count is read: no distinct and no signature (a repeated
+        # edge makes it an upper bound, which both finishes tolerate)
+        n = Observation()
+        pairs = pairs.observe(n, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+        finish_local = n.get["n"] <= local_edges
     while not finish_local:
         if rounds == 2 * max_iters:
             warnings.warn(
@@ -1522,10 +1530,8 @@ def connected_components(edges: DataFrame, src: str = "doc_a", dst: str = "doc_b
     if stats is not None:
         stats["rounds"] = rounds
     if finish_local:
-        return (
-            pairs.withColumn("g", F.lit(0)).groupBy("g")
-            .applyInPandas(_local_labels, "doc_id long, cluster_id long")
-        )
+        return pairs.sparkSession.createDataFrame(
+            _local_labels(pairs.toPandas()), "doc_id long, cluster_id long")
     # at a fixpoint the canonical edges form stars: each node's m is its root
     return _closed_min(pairs).select(F.col("u").alias("doc_id"), F.col("m").alias("cluster_id"))
 
@@ -1535,7 +1541,7 @@ def connected_components_twostar(edges: DataFrame, src: str = "doc_a", dst: str 
                                   stats: dict | None = None) -> DataFrame:
     """:func:`connected_components` with star rounds only (``local_edges=0``):
     rounds to the fixpoint, then star extraction, however small the graph —
-    the form a graph too large for one task takes, kept under the oracle by
+    the form a graph too large for the driver takes, kept under the oracle by
     ``dedup_clusters_twostar`` and measured by tools/skew_bench.py."""
     return connected_components(edges, src, dst, max_iters, stats, local_edges=0)
 
@@ -1558,9 +1564,9 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_clusters_twostar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same contract as :func:`dedup_clusters`, with the components from
     distributed star rounds alone (:func:`connected_components_twostar`, no
-    local finish). No fixture exceeds :data:`CC_LOCAL_EDGES`, so this query
-    is what keeps the rounds checked against the identical recursive-CTE
-    oracle."""
+    up-front probe and no local finish on the driver). No fixture exceeds
+    :data:`CC_LOCAL_EDGES`, so this query is what keeps the rounds checked
+    against the identical recursive-CTE oracle."""
     return _elect_min_id(connected_components_twostar(dedup_minhash_lsh(spark, sf_dir)))
 
 

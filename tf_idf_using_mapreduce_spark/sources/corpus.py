@@ -61,7 +61,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Spark infers a parquet schema with a job that reads the footer (~0.1 s
     on a 4-core host). The first read of a file pays it; the inferred
     ``StructType`` is memoized under ``(path, st_mtime_ns, st_size)``, the
-    same immutable-file reasoning as :func:`_file_split_stats`, and later
+    same key as :func:`_file_split_stats`'s footer memo, and later
     reads pass it to ``spark.read.schema`` and run no job. A rewritten file
     changes its key and is inferred again. A path that is not a regular
     file (a directory dataset, a missing file) is inferred on every read.
@@ -190,13 +190,18 @@ def spread(df: DataFrame, multiplier: int = 1,
     return df.repartition(target)
 
 
-@lru_cache(maxsize=1024)
 def _file_split_stats(path: str) -> tuple[int, int]:
     """(bytes, splittable units) for one input file. Parquet splits at
     row-group boundaries, so its footer's row-group count is the real
-    parallelism bound; anything else is one unit. Fixture/warehouse files are
-    immutable, so the footer read is memoized by path."""
-    size = os.path.getsize(path)
+    parallelism bound; anything else is one unit. The footer read is
+    memoized by ``(path, st_mtime_ns, st_size)``, as in :func:`load_table`:
+    a file rewritten in place is read again."""
+    st = os.stat(path)
+    return _split_stats_of(path, st.st_mtime_ns, st.st_size)
+
+
+@lru_cache(maxsize=1024)
+def _split_stats_of(path: str, mtime_ns: int, size: int) -> tuple[int, int]:
     if path.endswith(".parquet"):
         try:
             import pyarrow.parquet as pq
